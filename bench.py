@@ -90,10 +90,11 @@ def _time_queries(
             "max": round(max(runs), 4),
             "stdev": round(statistics.stdev(runs), 4) if len(runs) > 1 else 0.0,
         }
-        if isinstance(last, int):
+        if type(last) is int:
             # materialize() returns the row count: recorded so
             # output-bound rows (c1's ~64M-pair all-pairs materialization)
-            # are self-explaining in the artifact (VERDICT r13 #6)
+            # are self-explaining in the artifact (VERDICT r13 #6); an
+            # exact type check, since a bool return is an int too
             spread[label]["output_rows"] = last
         if sc is not None:
             _JOB_GROUP_SEQ[0] += 1

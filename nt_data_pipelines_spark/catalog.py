@@ -1402,40 +1402,24 @@ class Catalog:
                 batch.unpersist()
 
     def upsert(self, name: str, df: DataFrame) -> None:
-        """insert + optimize, with a batch-scoped dup probe.
+        """insert + optimize, with one shortcut for an empty base.
 
-        The full optimize pays a table-sized probe (scan + table-wide
-        exchanges) per call. When the pre-insert committed state is
-        known PK-unique — a recorded pk-clean marker, or a provably
-        EMPTY base — the only possible duplicates involve the batch,
-        so the probe narrows to the batch's own just-written files:
-        one narrow groupBy over the batch's key columns (internal
-        dups) plus one broadcast semi-join against the marker's files
-        (cross-seq collisions). No duplicate found means optimize is
-        skipped outright; any dirt, any doubt, or any rival commit
-        detected by the post-insert checks falls back to the full
-        optimize. The insert itself is untouched (a raw append), so
-        every committed byte — including the raw pre-optimize
-        generation time travel can read — is identical to the slow
-        path's."""
-        # marker first: a valid pk-clean marker serves empty AND
-        # non-empty bases (an empty older side probes to no collision),
-        # and checking it is pure metadata — the emptiness token may
-        # cost a limit(1) job on small tables, so it is the fallback
-        base = self._valid_pk_clean_token(name)
-        older_empty = False
-        if base is None:
-            base = self._upsert_empty_base_token(name)
-            older_empty = base is not None  # token proved zero rows
-        if base is not None and not older_empty:
-            # size gate (scale-adaptive, see _probe_table_min_bytes):
-            # under the threshold the full probe's table-wide shuffle
-            # costs about one local job anyway, so the batch probe's
-            # extra job would only add scheduling floor; above it the
-            # O(batch) probe replaces an O(table) exchange per upsert
-            bb = self._base_bytes(name, base)
-            if bb is None or bb < self._probe_table_min_bytes():
-                base = None
+        The rule is the same in every commit mode. When the pre-insert
+        base is provably empty (:meth:`_upsert_empty_base_token`), the
+        batch is the table's entire content, so the only possible
+        duplicates are inside it: one narrow groupBy over the batch's
+        key columns decides, and a clean batch skips optimize. Any
+        other base — and any dirt, or any rival commit detected by the
+        post-insert checks — runs the full optimize. The insert itself
+        is untouched (a raw append), so every committed byte —
+        including the raw pre-optimize generation time travel can
+        read — is identical to the slow path's.
+
+        A non-empty base always optimizes. The batch-scoped probe for
+        non-empty tables went because no workload exceeds its 256 MB
+        gate, and a traced nightly run showed it never fired
+        (``fastpath_ratio`` 0)."""
+        base = self._upsert_empty_base_token(name)
         seq = self._state["next_seq"]  # the seq insert will stamp
         self.insert(name, df, mode="append")
         if base is not None and self._upsert_base_undisturbed(name, base):
@@ -1444,40 +1428,21 @@ class Catalog:
             # BOTH token kinds: filelist re-checks the OCC generation,
             # dir tokens (rename/manifest) re-run the listing + write-
             # UUID check — a rival append landing between the first
-            # undisturbed check and the probe's snapshot read would
-            # otherwise be classified as already-proven-clean older
-            # rows and never examined
-            if not self._batch_dup_probe(name, base, seq, older_empty) and (
+            # undisturbed check and the probe's snapshot read carries
+            # another ingest seq, so the probe would never examine it
+            if not self._batch_dup_probe(name, seq) and (
                 self._current_gen(name) == expect
                 if expect is not None
                 else self._upsert_base_undisturbed(name, base)
             ):
-                # no batch-internal dup, no batch/older collision, and
-                # no rival commit slipped in while probing — provably
-                # no duplicate key exists; skip optimize
-                self._record_pk_clean(name, expect_gen=expect)
-                # the skip path never rewrites, so a high-cadence
-                # stream of clean upserts would grow small files
-                # without bound (guide §6) — route through compact()
-                # once the file count crosses the threshold. compact
-                # preserves rows exactly (marker lapses with its
-                # commit; the next upsert's full probe re-records it).
-                if self._live_file_count(name) > self._upsert_compact_max_files():
-                    self.compact(name)
+                # no batch-internal dup and no rival commit slipped in
+                # while probing — provably no duplicate key exists
                 return
         self.optimize(name)
 
-    # upsert empty-base fast path: only probe emptiness with a (tiny)
-    # job when the committed bytes could plausibly be zero rows
+    # upsert empty-base fast path: only read footers for emptiness
+    # when the committed bytes could plausibly be zero rows
     _EMPTY_PROBE_MAX_BYTES = 1 << 20
-    # batch-key collect cap for the dup probe's single-job form — an
-    # incremental batch this small is driver-bounded by construction
-    _PROBE_COLLECT_MAX_BYTES = 8 << 20
-    # above this committed batch size the probe's semi-join is left to
-    # the planner (shuffled) instead of a forced broadcast of the
-    # batch's distinct keys — bounds driver/executor memory on
-    # backfill-sized upserts
-    _PROBE_BROADCAST_MAX_BYTES = 256 << 20
 
     def _list_parquet_recursive(self, fs, p) -> list[tuple[str, int]]:
         """(path, length) for every parquet data file under ``p``,
@@ -1515,8 +1480,9 @@ class Catalog:
         """An opaque pre-insert state token when the table is provably
         empty (and PK-keyed), else None. Proof is metadata-first: a
         committed byte total above _EMPTY_PROBE_MAX_BYTES returns None
-        without running any job (the non-empty common case), otherwise
-        a limit(1) probe over the (at most ~1 MB) footprint settles it.
+        without reading any file (the non-empty common case), otherwise
+        the (at most ~1 MB) footprint's row count settles it
+        (:meth:`_holds_rows`).
         """
         meta = self._meta(name)
         if not meta.primary_keys:
@@ -1539,7 +1505,7 @@ class Catalog:
                         return None
                     if total > self._EMPTY_PROBE_MAX_BYTES:
                         return None
-                if self._raw_table(name).limit(1).count():
+                if self._holds_rows(name, [self._fl_abs(f) for f in files]):
                     return None
             return ("gen", gen)
         # rename / manifest: the live data dir. rename mode is single-
@@ -1553,10 +1519,29 @@ class Catalog:
         listing = self._list_parquet_recursive(fs, p)
         if sum(ln for _, ln in listing) > self._EMPTY_PROBE_MAX_BYTES:
             return None
-        if listing and self._raw_table(name).limit(1).count():
+        if self._holds_rows(name, [f for f, _ in listing]):
             return None
         gen = self._current_gen(name) if self.commit_mode == "manifest" else -1
         return ("dir", frozenset(f for f, _ in listing), gen)
+
+    def _holds_rows(self, name: str, paths: list[str]) -> bool:
+        """Whether any of the table's committed data files ``paths``
+        holds a row. Local files answer from their parquet footers,
+        with no Spark job — a small non-empty table is the common
+        upsert target, and a scan would add a job to every such
+        upsert. A remote root, or a footer that cannot be read (a
+        racing delete, a torn file), falls back to a limit(1) scan."""
+        import pyarrow.parquet as pq
+
+        if all("://" not in p or p.startswith("file:") for p in paths):
+            try:
+                return any(
+                    pq.read_metadata(p[5:] if p.startswith("file:") else p).num_rows
+                    for p in paths
+                )
+            except (OSError, ValueError):
+                pass  # Spark's scan decides
+        return bool(self._raw_table(name).limit(1).count())
 
     _PART_UUID_RE = re.compile(
         r"^part-\d+-([0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12})"
@@ -1593,259 +1578,29 @@ class Catalog:
         # distinct UUIDs mean a rival append slipped in — fall back
         return len(uuids) <= 1
 
-    # ---- pk-clean markers (upsert's narrowed dup probe) ----
-    # A marker fingerprints a committed state whose resolved rows were
-    # proven PK-unique (optimize ran, or an in-flight-deduped batch
-    # landed on an empty base). Validity is self-checking — the
-    # CURRENT state must equal the fingerprint exactly — so any commit
-    # from any writer (insert, merge, rewrite, delete) invalidates it
-    # without coordination. Scope: filelist markers pin a generation
-    # (every commit bumps it — airtight under OCC); rename markers pin
-    # the data-dir file listing (the mode is single-writer by
-    # contract); manifest mode gets NO markers — its appends mutate
-    # the generation dir in place, so a stale listing cannot be told
-    # apart from a clean one by metadata alone.
-    _PK_CLEAN_MAX_FILES = 512
+    def _batch_dup_probe(self, name: str, seq: int) -> bool:
+        """Whether the just-inserted batch (ingest seq ``seq``) holds a
+        duplicate primary key. On an empty base the batch is the
+        table's entire content, so False proves the table PK-unique.
 
-    def _record_pk_clean(self, name: str, expect_gen: int | None = None) -> None:
-        meta = self._meta(name)
-        if not meta.primary_keys:
-            return
-        entry = self._state["tables"].get(name)
-        if entry is None:
-            return
-        if self.commit_mode == "filelist":
-            # record ONLY a generation the caller proved clean itself
-            # (optimize's return, or empty-base token + 1): reading the
-            # current gen here could fingerprint a rival's later commit
-            if expect_gen is None or self._current_gen(name) != expect_gen:
-                return
-            entry["pk_clean"] = {"kind": "gen", "gen": expect_gen}
-            self._save()
-            return
-        if self.commit_mode != "rename":
-            return
-        fs, p = self._hfs(self._data_path(name))
-        if not fs.exists(p):
-            return
-        listing = self._list_parquet_recursive(fs, p)
-        if len(listing) > self._PK_CLEAN_MAX_FILES:
-            return  # keep the state file small; large tables re-probe
-        entry["pk_clean"] = {"kind": "dir", "files": sorted(f for f, _ in listing)}
-        self._save()
-
-    def _valid_pk_clean_token(self, name: str):
-        """The recorded pk-clean marker as an (upsert-token-shaped)
-        tuple IF the table's current committed state still matches its
-        fingerprint, else None."""
-        meta = self._meta(name)
-        if not meta.primary_keys:
-            return None
-        rec = self._state["tables"][name].get("pk_clean")
-        if not isinstance(rec, dict):
-            return None
-        if self.commit_mode == "filelist":
-            if rec.get("kind") != "gen":
-                return None
-            gen = self._current_gen(name)
-            if gen < 0 or gen != rec.get("gen"):
-                return None
-            return ("gen", gen)
-        if self.commit_mode != "rename" or rec.get("kind") != "dir":
-            return None
-        fs, p = self._hfs(self._data_path(name))
-        if not fs.exists(p):
-            return None
-        current = sorted(f for f, _ in self._list_parquet_recursive(fs, p))
-        if current != rec.get("files"):
-            return None
-        return ("dir", frozenset(current), -1)
-
-    def _batch_dup_probe(
-        self, name: str, base, seq: int, older_known_empty: bool = False
-    ) -> bool:
-        """Whether the just-inserted batch (ingest seq ``seq``) could
-        have introduced a duplicate primary key, given that every row
-        OUTSIDE the batch was already PK-unique (pk-clean marker) or
-        zero (empty base — the caller passes ``older_known_empty=True``
-        and the cross-collision probe is skipped).
-
-        True means "dup found or probe not applicable" — the caller
-        runs the full optimize. False is a proof: no batch-internal
-        duplicate and no batch key colliding with an older row.
-
-        Both probe sides read the table's root relation filtered on
-        the ingest seq (parquet row-group stats prune the batch-side
-        scan to the batch's files). In rename/manifest modes that is
-        the plain data-dir scan — never a per-file path list, whose
-        fresh file-index re-planning measured 1.5-3 s of pure driver
-        time on a few-hundred-file table; filelist mode's snapshot
-        read is inherently a multi-path read (``_fl_read``), so there
-        the win is only the narrowed probe, not the listing. A small
-        batch (byte total from the commit listing) collects its keys
-        once and probes with a local relation; larger batches use a
-        distributed narrow groupBy + a semi-join (broadcast while the
-        batch fits, plain shuffled join above the cap). Never a
-        table-wide exchange of every committed key: the old global
-        probe shuffled the whole table's keys per upsert."""
-        meta = self._meta(name)
-        pks = meta.primary_keys
-        batch_bytes: int | None = 0
-        if base[0] == "gen":
-            resolved_old = self._fl_resolve(name, base[1])
-            resolved_new = self._fl_resolve(name, base[1] + 1)
-            if resolved_old is None or resolved_new is None:
-                return True
-            for f in set(resolved_new[0]) - set(resolved_old[0]):
-                try:
-                    batch_bytes += self._file_len(self._fl_abs(f))
-                except Exception:
-                    batch_bytes = None  # unknown: distributed probe
-                    break
-        else:
-            fs, p = self._hfs(self._data_path(name))
-            if not fs.exists(p):
-                return True
-            pre = set(base[1])
-            batch_bytes = sum(
-                ln
-                for f, ln in self._list_parquet_recursive(fs, p)
-                if f not in pre
-            )
-        full = self._raw_table(name)
-        bkeys = full.filter(F.col(INGEST_COL) == F.lit(seq)).select(*pks)
-        older_rows = full.filter(F.col(INGEST_COL) != F.lit(seq)).select(*pks)
-        right = None
-        if (
-            not older_known_empty
-            and batch_bytes is not None
-            and batch_bytes <= self._PROBE_COLLECT_MAX_BYTES
-        ):
-            # incremental-sized batch onto a marker-clean base: ONE
-            # row-group-pruned job collects its keys; internal dups
-            # resolve in python (None==None, matching groupBy's null
-            # semantics) and the collision probe joins a local
-            # relation — the job-floor-lightest shape, keys
-            # driver-bounded by the byte cap. An EMPTY base never
-            # takes this branch: it only needs the internal-dup
-            # verdict, which the distributed check below answers in
-            # the same one job WITHOUT shipping every key through
-            # py4j — measured ~2s of pure driver time per 350k-key
-            # backfill batch, about half the DAG backfill's upsert
-            # overhead.
-            # Guarded end to end: unhashable PK values (binary ->
-            # bytearray, array -> list) throw in set(), and a None in
-            # a non-nullable PK field can make createDataFrame reject
-            # — either falls back to the distributed probe below
-            # instead of erroring out of upsert AFTER the insert
-            # committed (which would leave the batch appended but
-            # never optimized).
-            try:
-                keys = [tuple(r) for r in bkeys.collect()]
-                if not keys:
-                    return False  # empty batch: nothing new to duplicate
-                if any(
-                    isinstance(v, float) and v != v for k in keys for v in k
-                ):
-                    return True  # NaN pk: python/Spark equality diverge
-                if len(keys) != len(set(keys)):
-                    return True
-                by_name = {f.name: f for f in meta.struct.fields}
-                pk_schema = T.StructType([by_name[c] for c in pks])
-                right = F.broadcast(
-                    self.spark.createDataFrame(keys, pk_schema).select(*pks)
-                )
-            except Exception:
-                right = None  # distributed probe decides instead
-        if right is None:
-            internal = (
-                bkeys.groupBy(*pks)
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .filter(F.col("__n") > 1)
-                .limit(1)
-            )
-            if internal.count():
-                return True
-            if older_known_empty:
-                return False
-            # broadcast only batches provably within bounds: an
-            # unknown or backfill-sized batch would otherwise build an
-            # unbounded broadcast relation (driver/executor OOM risk,
-            # 8 GB broadcast hard cap) — above the cap the planner
-            # keeps a plain shuffled semi-join, which is exactly the
-            # stability profile of the old full-optimize probe
-            bd = bkeys.distinct()
-            right = (
-                F.broadcast(bd)
-                if batch_bytes is not None
-                and batch_bytes <= self._PROBE_BROADCAST_MAX_BYTES
-                else bd
-            )
-        # null-SAFE equality: optimize's groupBy/window treat NULL pk
-        # values as one key, so the collision probe must too
-        cond = None
-        for c in pks:
-            e = older_rows[c].eqNullSafe(right[c])
-            cond = e if cond is None else (cond & e)
-        probe = older_rows.join(right, cond, "left_semi").limit(1)
-        return bool(probe.count())
-
-    def _file_len(self, path: str) -> int:
-        local = path[5:] if path.startswith("file:") else path
-        if "://" not in path or path.startswith("file:"):
-            return os.path.getsize(local)
-        fs, p = self._hfs(path)
-        return fs.getFileStatus(p).getLen()
-
-    def _live_file_count(self, name: str) -> int:
-        """Live data-file count, metadata-only: the filelist manifest's
-        entry count, or a local/remote dir listing — never the per-file
-        status round-trips :meth:`data_files` pays for sizes."""
-        if self.commit_mode == "filelist":
-            gen = self._current_gen(name)
-            if gen >= 0:
-                rels = self._fl_manifest_files(name, gen)
-                return len(rels) if rels is not None else 0
-        fs, p = self._hfs(self._data_path(name))
-        if not fs.exists(p):
-            return 0
-        return len(self._list_parquet_recursive(fs, p))
-
-    @staticmethod
-    def _upsert_compact_max_files() -> int:
-        """Data-file count above which a marker-clean upsert (which
-        skips optimize, hence never rewrites) routes through
-        ``compact()``. Bounds steady-state small-file growth under
-        high-cadence clean upserts; tune via NT_UPSERT_COMPACT_FILES
-        (files per table, compared against the post-insert listing)."""
-        return int(os.environ.get("NT_UPSERT_COMPACT_FILES", 256))
-
-    @staticmethod
-    def _probe_table_min_bytes() -> int:
-        """Committed-size threshold above which upsert's marker path
-        replaces the full optimize with the batch-scoped probe.
-
-        Locally the full probe's table-wide exchange costs about one
-        job — the batch probe's extra scheduling would be pure
-        overhead — so the default keeps small tables on the old path
-        and the driver's bench comparable. In production the threshold
-        marks where shuffling every key per upsert starts to dominate:
-        256 MB is a conservative default (a few seconds of exchange);
-        lower it via NT_UPSERT_PROBE_TABLE_BYTES on clusters where
-        upsert cadence is high."""
-        return int(os.environ.get("NT_UPSERT_PROBE_TABLE_BYTES", 256 << 20))
-
-    def _base_bytes(self, name: str, base) -> int | None:
-        """Committed bytes of the token's file set (None = unknown)."""
-        try:
-            if base[0] == "gen":
-                resolved = self._fl_resolve(name, base[1])
-                if resolved is None:
-                    return None
-                return sum(self._file_len(self._fl_abs(f)) for f in resolved[0])
-            return sum(self._file_len(f) for f in base[1])
-        except Exception:
-            return None
+        One narrow groupBy over the batch's key columns, read from the
+        table's root relation filtered on the ingest seq (parquet
+        row-group stats prune the scan to the batch's files). Keys stay
+        on the executors, so a backfill-sized batch never reaches the
+        driver."""
+        pks = self._meta(name).primary_keys
+        bkeys = (
+            self._raw_table(name)
+            .filter(F.col(INGEST_COL) == F.lit(seq))
+            .select(*pks)
+        )
+        internal = (
+            bkeys.groupBy(*pks)
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .filter(F.col("__n") > 1)
+            .limit(1)
+        )
+        return bool(internal.count())
 
     def rewrite(self, name: str, build, preserve_layout: bool = False) -> None:
         """Transactionally replace a table with ``build(df)``.
@@ -1882,11 +1637,7 @@ class Catalog:
         """Run a rewrite, recomputing from the CURRENT table state
         after each lost manifest-commit race. Every retry re-reads
         through :meth:`_raw_table`, so the winner's rows are the new
-        base — stale staged data is never re-committed.
-
-        Returns ``fn()``'s result — load-bearing for ``optimize``,
-        whose ``_optimize_once`` returns the generation it proved
-        PK-clean (the pk-clean marker recording anchor)."""
+        base — stale staged data is never re-committed."""
         for attempt in range(attempts):
             try:
                 return fn()
@@ -2598,10 +2349,9 @@ class Catalog:
     def optimize(self, name: str) -> None:
         """PK dedup compaction; recomputes and retries after losing a
         manifest-commit race to a concurrent writer."""
-        gen = self._with_occ_retry(name, lambda: self._optimize_once(name))
-        self._record_pk_clean(name, expect_gen=gen)
+        self._with_occ_retry(name, lambda: self._optimize_once(name))
 
-    def _optimize_once(self, name: str) -> int | None:
+    def _optimize_once(self, name: str) -> None:
         meta = self._meta(name)
         pks = meta.primary_keys
         if not pks:
@@ -2623,7 +2373,7 @@ class Catalog:
             # branch below): only files holding a copy of a duplicated
             # key are rewritten; every clean file carries over BY
             # REFERENCE in the next manifest.
-            return self._optimize_filelist_incremental(name, meta, pks, w)
+            self._optimize_filelist_incremental(name, meta, pks, w)
         elif meta.partition_keys and self.commit_mode in ("manifest", "filelist"):
             # The dirty-partition dynamic overwrite mutates the CURRENT
             # generation dir in place — outside the manifest commit
@@ -2704,11 +2454,8 @@ class Catalog:
 
     def _optimize_filelist_incremental(
         self, name: str, meta: TableMeta, pks: list[str], w
-    ) -> int:
+    ) -> None:
         """File-level incremental OPTIMIZE (Delta's OPTIMIZE shape).
-        Returns the generation whose resolved state it proved PK-clean
-        (the committed target, or the untouched current gen when no
-        duplicate existed) — the pk-clean marker recording anchor.
 
         Rewrites ONLY the files that hold a copy of a duplicated
         primary key; clean files carry over by reference. At 100 TB an
@@ -2743,7 +2490,7 @@ class Catalog:
             )
         files, base_stats = resolved or ([], {})
         if not files:
-            return gen
+            return
         schema = self._with_ingest(meta.struct)
         base = self.spark.read.schema(schema).parquet(
             *[self._fl_abs(f) for f in files]
@@ -2765,7 +2512,7 @@ class Catalog:
             .collect()
         ]
         if not dirty_abs:
-            return gen
+            return
         dirty_rel = {self._abs_to_rel(name, p) for p in dirty_abs}
         if 2 * len(dirty_rel) >= len(files):
             # mostly-dirty table: the surgical path would rewrite
@@ -2780,7 +2527,7 @@ class Catalog:
                 .drop("__rn")
             )
             self._rewrite_table_filelist(name, deduped_all, target_gen=target)
-            return target
+            return
         dirty_df = self.spark.createDataFrame(
             [(p,) for p in dirty_abs], "__f string"
         )
@@ -2792,7 +2539,6 @@ class Catalog:
             .drop("__rn")
         )
         self._fl_commit_surgical(name, target, base_stats, files, dirty_rel, deduped)
-        return target
 
     def _fl_commit_surgical(
         self,

@@ -179,6 +179,14 @@ def curate_corpus(
     ``accounting``: one row per stage with the surviving doc count —
     computed lazily from counts, so the whole report is a handful of
     small jobs over the same cached lineage.
+
+    The default stage boundary (``"local_checkpoint"``) pins EAGERLY:
+    calling this function runs every stage's Spark jobs, so building
+    the plan alone (explain, a dry run) costs the whole pipeline. When
+    a pinned stage lands on fewer partitions than the environment's
+    parallelism it is repartitioned and pinned a second time.
+    ``CurationConfig(stage_boundary="checkpoint")`` or ``"persist"``
+    pin lazily.
     """
     stages: list[tuple[str, DataFrame]] = []
 

@@ -501,60 +501,65 @@ def minhash_foreach_batch(
             bands_long = _bands()
         warr = None
         if words_table is not None:
-            # Verified tier: word-set state + word-diff change
-            # detection (a strict superset of signature diff — an edit
-            # can change stored pairs' Jaccard without moving any
-            # MinHash component). ONE pinned word-ARRAY relation (one
-            # row per batch doc, array_distinct word set) carries the
-            # batch's tokenization for all three consumers: the change
-            # detection below, the words upsert (exploded view over
-            # the pinned blocks — exactly word_set's rows), and the
-            # verify tier's batch-side word sets (no words-table
-            # re-scan, no re-aggregation). Guide §2.3/§2.4 — the
-            # round-13 batch-tier rewrite, applied per micro-batch.
-            warr = (
-                word_arrays(docs, id_col, text_col)
-                .select(F.col(id_col).cast("long").alias("doc_id"), "__ws")
-                .localCheckpoint(eager=True)
-            )
-            words_long = warr.select("doc_id", F.explode("__ws").alias("word"))
-            # change detection as ONE array comparison: stored word
-            # sets of the batch's docs aggregate once; a doc changed
-            # iff either set difference is non-empty. Brand-new docs
-            # (no stored rows) drop out of the inner join — additions,
-            # not changes, same as the old added/removed anti-join
-            # form (equivalence: stored_words was already restricted
-            # to batch ids, so every old 'removed' doc joins here too).
-            stored_sets = (
-                catalog.table(words_table)
-                .join(warr.select("doc_id"), "doc_id", "left_semi")
-                .groupBy("doc_id")
-                .agg(F.collect_set("word").alias("__sw"))
-            )
-            changed = (
-                warr.join(stored_sets, "doc_id")
-                .filter(
-                    (F.size(F.array_except("__ws", "__sw")) > 0)
-                    | (F.size(F.array_except("__sw", "__ws")) > 0)
+            try:
+                # Verified tier: word-set state + word-diff change
+                # detection (a strict superset of signature diff — an edit
+                # can change stored pairs' Jaccard without moving any
+                # MinHash component). ONE pinned word-ARRAY relation (one
+                # row per batch doc, array_distinct word set) carries the
+                # batch's tokenization for all three consumers: the change
+                # detection below, the words upsert (exploded view over
+                # the pinned blocks — exactly word_set's rows), and the
+                # verify tier's batch-side word sets (no words-table
+                # re-scan, no re-aggregation). Guide §2.3/§2.4 — the
+                # round-13 batch-tier rewrite, applied per micro-batch.
+                warr = (
+                    word_arrays(docs, id_col, text_col)
+                    .select(F.col(id_col).cast("long").alias("doc_id"), "__ws")
+                    .localCheckpoint(eager=True)
                 )
-                .select("doc_id")
-                .localCheckpoint(eager=True)  # pin pre-upsert view
-            )
-            if changed.limit(1).count():
-                catalog.rewrite(
-                    pairs_table,
-                    lambda df: df.join(
-                        changed.select(F.col("doc_id").alias("id_a")), "id_a", "left_anti"
-                    ).join(
-                        changed.select(F.col("doc_id").alias("id_b")), "id_b", "left_anti"
-                    ),
+                words_long = warr.select("doc_id", F.explode("__ws").alias("word"))
+                # change detection as ONE array comparison: stored word
+                # sets of the batch's docs aggregate once; a doc changed
+                # iff either set difference is non-empty. Brand-new docs
+                # (no stored rows) drop out of the inner join — additions,
+                # not changes, same as the old added/removed anti-join
+                # form (equivalence: stored_words was already restricted
+                # to batch ids, so every old 'removed' doc joins here too).
+                stored_sets = (
+                    catalog.table(words_table)
+                    .join(warr.select("doc_id"), "doc_id", "left_semi")
+                    .groupBy("doc_id")
+                    .agg(F.collect_set("word").alias("__sw"))
                 )
-                catalog.rewrite(
-                    words_table,
-                    lambda df: df.join(changed, "doc_id", "left_anti"),
+                changed = (
+                    warr.join(stored_sets, "doc_id")
+                    .filter(
+                        (F.size(F.array_except("__ws", "__sw")) > 0)
+                        | (F.size(F.array_except("__sw", "__ws")) > 0)
+                    )
+                    .select("doc_id")
+                    .localCheckpoint(eager=True)  # pin pre-upsert view
                 )
-            catalog.upsert(words_table, words_long)
-            bands_bg.join()
+                if changed.limit(1).count():
+                    catalog.rewrite(
+                        pairs_table,
+                        lambda df: df.join(
+                            changed.select(F.col("doc_id").alias("id_a")), "id_a", "left_anti"
+                        ).join(
+                            changed.select(F.col("doc_id").alias("id_b")), "id_b", "left_anti"
+                        ),
+                    )
+                    catalog.rewrite(
+                        words_table,
+                        lambda df: df.join(changed, "doc_id", "left_anti"),
+                    )
+                catalog.upsert(words_table, words_long)
+            finally:
+                # joined before any words-phase error propagates: a
+                # leaked signature thread would keep submitting Spark
+                # jobs beside a foreachBatch retry of the same batch
+                bands_bg.join()
             if "exc" in bands_res:
                 raise bands_res["exc"]
             bands_long = bands_res["df"]

@@ -909,3 +909,56 @@ def test_bloom_probe_filters_a_stream(spark, tmp_path):
     # doc 1 carries the benchmark's words; doc 2 may only FP-collide
     assert got.get(1, 0) >= 4
     assert got.get(2, 0) <= 1
+
+
+def test_minhash_verified_sink_joins_signature_thread_on_words_error(
+    spark, tmp_path, monkeypatch
+):
+    """The verified tier computes signatures on a background thread
+    while the words phase runs. A words-phase failure must join that
+    thread before the error propagates — a leaked thread would keep
+    submitting Spark jobs beside foreachBatch's retry of the batch."""
+    import time
+
+    import pyspark
+
+    from nt_data_pipelines_spark.operators import dedup
+    from nt_data_pipelines_spark.streaming import minhash_foreach_batch
+    from nt_data_pipelines_spark.streaming.incremental import (
+        DUP_PAIR_SCHEMA,
+        MINHASH_STATE_SCHEMA,
+        WORD_STATE_SCHEMA,
+    )
+
+    threads = []
+
+    class SlowThread(pyspark.InheritableThread):
+        def __init__(self, target, *args, **kwargs):
+            def slow():
+                time.sleep(1.0)  # still running when the words phase fails
+                target()
+
+            super().__init__(slow, *args, **kwargs)
+            threads.append(self)
+
+    def failing_word_arrays(*_args, **_kwargs):
+        raise RuntimeError("words phase failed")
+
+    monkeypatch.setattr(pyspark, "InheritableThread", SlowThread)
+    monkeypatch.setattr(dedup, "word_arrays", failing_word_arrays)
+    cat = Catalog(spark, str(tmp_path / "lake"))
+    cat.create("sigs", MINHASH_STATE_SCHEMA, None, ["doc_id", "band"])
+    cat.create("pairs", DUP_PAIR_SCHEMA, None, ["id_a", "id_b"])
+    cat.create("words", WORD_STATE_SCHEMA, None, ["doc_id", "word"])
+    sink = minhash_foreach_batch(
+        cat, "sigs", "pairs", words_table="words", verify_threshold=0.7,
+        state_bucket_cap=None, edges_per_doc=None,
+    )
+    doc_schema = T.StructType(
+        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
+    )
+    batch = spark.createDataFrame([(1, "alpha beta gamma delta")], doc_schema)
+    with pytest.raises(RuntimeError, match="words phase failed"):
+        sink(batch, 0)
+    assert len(threads) == 1
+    assert not threads[0].is_alive(), "signature thread leaked past the error"

@@ -1,18 +1,17 @@
-"""Upsert batch-scoped dup probe (optimization round r13).
+"""Upsert's one rule: insert, then optimize — unless the base is empty.
 
-``Catalog.upsert`` pays optimize's table-sized dup probe per call.
-When the pre-insert committed state is known PK-unique (a recorded
-pk-clean marker, or a provably EMPTY base), the probe narrows to the
-batch's own just-written files; a clean probe skips optimize outright.
-These tests pin:
+``Catalog.upsert`` skips optimize only when the pre-insert base is
+provably empty and the batch holds no duplicate primary key; every
+other upsert runs the full optimize. These tests pin:
 
-- the skip actually happening for clean batches (empty base and
-  marker-clean base) and NOT happening when the batch carries internal
-  duplicate PKs or collides with existing keys;
+- the skip happening for a clean batch on an empty base, and NOT
+  happening on a non-empty base or for a batch with internal
+  duplicate PKs;
 - byte-equivalence with the slow path (insert + optimize) — the insert
   is an untouched raw append, so all committed bytes are identical;
-- marker lifecycle: recorded by optimize/upsert, invalidated by any
-  out-of-band commit (raw insert), never trusted stale;
+- raw-insert duplicates being resolved by the next upsert, and stale
+  ``pk_clean`` entries left in the state file by older code being
+  ignored;
 - the race fallbacks: any commit that lands between the pre-insert
   check and the post-insert confirmation forces the full optimize, so
   a rival writer's duplicates still resolve.
@@ -21,6 +20,8 @@ These tests pin:
 from __future__ import annotations
 
 import datetime as dt
+import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -73,17 +74,10 @@ def _counting(monkey_target_list):
     return orig, wrapped
 
 
-@pytest.fixture()
-def probe_always(monkeypatch):
-    """Disable the size gate: small test tables take the batch probe
-    exactly like production-sized ones."""
-    monkeypatch.setenv("NT_UPSERT_PROBE_TABLE_BYTES", "0")
-
-
 @pytest.mark.parametrize("mode", MODES)
-def test_clean_batches_skip_optimize(spark, tmp_path, mode, probe_always):
-    """Empty base + PK-unique batch, then marker-clean base +
-    non-colliding batch: neither upsert may run the table probe."""
+def test_clean_batches_skip_optimize(spark, tmp_path, mode):
+    """Empty base + PK-unique batch skips optimize; the next clean
+    upsert lands on a non-empty base and runs it exactly once."""
     cat = Catalog(spark, str(tmp_path / f"lk_{mode}"), commit_mode=mode)
     cat.create("px", SCHEMA, ["year"], ["ticker", "date"])
     calls: list[str] = []
@@ -93,15 +87,7 @@ def test_clean_batches_skip_optimize(spark, tmp_path, mode, probe_always):
         cat.upsert("px", _rows(spark, [("A", D1, 1.0), ("B", D2, 2.0)]))
         assert calls == [], "empty-base clean upsert must skip optimize"
         cat.upsert("px", _rows(spark, [("C", D1, 3.0)]))  # no collision
-        if mode == "manifest":
-            # manifest mode records no pk-clean markers (its appends
-            # mutate the generation dir in place, so a stale listing
-            # cannot be told from a clean one): full optimize runs
-            assert cat._valid_pk_clean_token("px") is None
-            assert calls == ["px"]
-        else:
-            assert cat._valid_pk_clean_token("px") is not None
-            assert calls == [], "marker-clean non-colliding upsert must skip"
+        assert calls == ["px"], "a non-empty base must run optimize once"
         assert _content(cat, "px") == sorted(
             [
                 ("A", str(D1), D1.year, 1.0),
@@ -114,13 +100,14 @@ def test_clean_batches_skip_optimize(spark, tmp_path, mode, probe_always):
 
 
 def test_size_gate_routes_small_tables_to_full_optimize(spark, tmp_path):
-    """With the default threshold (256 MB), a small marker-clean table
-    still runs the classic full optimize — the batch probe's extra
-    scheduling would cost more than the table-wide shuffle locally."""
+    """A small non-empty table runs the classic full optimize on the
+    next clean upsert. (The name predates the removal of the size gate
+    that once made this routing decision; every non-empty base now
+    takes it.)"""
     cat = Catalog(spark, str(tmp_path / "gate"), commit_mode="rename")
     cat.create("px", SCHEMA, ["year"], ["ticker", "date"])
     cat.upsert("px", _rows(spark, [("A", D1, 1.0)]))
-    assert cat._valid_pk_clean_token("px") is not None
+    assert cat._upsert_empty_base_token("px") is None
     calls: list[str] = []
     orig, wrapped = _counting(calls)
     Catalog._optimize_once = wrapped
@@ -135,10 +122,10 @@ def test_size_gate_routes_small_tables_to_full_optimize(spark, tmp_path):
 
 
 @pytest.mark.parametrize("mode", MODES)
-def test_dirty_batches_run_full_optimize(spark, tmp_path, mode, probe_always):
-    """Internal batch dups and batch-vs-existing collisions must both
-    fall back to the full optimize, with the same LWW survivors the
-    slow path picks."""
+def test_dirty_batches_run_full_optimize(spark, tmp_path, mode):
+    """Internal batch dups on an empty base and batch-vs-existing
+    collisions must both run the full optimize, with the same LWW
+    survivors the slow path picks."""
     cat = Catalog(spark, str(tmp_path / f"d_{mode}"), commit_mode=mode)
     cat.create("px", SCHEMA, ["year"], ["ticker", "date"])
     calls: list[str] = []
@@ -151,7 +138,7 @@ def test_dirty_batches_run_full_optimize(spark, tmp_path, mode, probe_always):
         assert calls == ["px"], "internal batch dup must run optimize"
         exp_a = _expected_lww_survivor(spark, [("A", D1, 1.0), ("A", D1, 9.0)])
         assert [c for *_, c in _content(cat, "px")] == [exp_a, 2.0]
-        # collision with an existing key -> probe dirty -> optimize,
+        # collision with an existing key -> non-empty base -> optimize,
         # later ingest seq wins
         cat.upsert("px", _rows(spark, [("A", D1, 5.0)]))
         assert calls == ["px", "px"]
@@ -161,9 +148,9 @@ def test_dirty_batches_run_full_optimize(spark, tmp_path, mode, probe_always):
 
 
 @pytest.mark.parametrize("mode", MODES)
-def test_fastpath_equals_slow_path_content(spark, tmp_path, mode, probe_always):
-    """Same batches through upsert (probe path) vs insert+optimize:
-    identical survivors."""
+def test_fastpath_equals_slow_path_content(spark, tmp_path, mode):
+    """Same batches through upsert (empty-base probe, then optimize) vs
+    insert+optimize: identical survivors."""
     b1 = [("A", D1, 1.0), ("A", D1, 9.0), ("A", D1, 4.5), ("B", D2, 2.0)]
     b2 = [("A", D1, 7.0), ("C", D2, 3.0)]
     fast = Catalog(spark, str(tmp_path / f"f_{mode}"), commit_mode=mode)
@@ -179,16 +166,14 @@ def test_fastpath_equals_slow_path_content(spark, tmp_path, mode, probe_always):
 
 
 @pytest.mark.parametrize("mode", ("rename", "filelist"))
-def test_marker_invalidated_by_raw_insert(spark, tmp_path, mode, probe_always):
-    """A raw insert (no optimize) changes the committed state, so the
-    marker must stop validating and the next upsert must run the FULL
-    probe — otherwise the raw insert's internal dups would survive."""
+def test_marker_invalidated_by_raw_insert(spark, tmp_path, mode):
+    """A raw insert (no optimize) can leave duplicate keys in the
+    table; the next upsert must resolve them. (The name predates the
+    removal of the pk-clean markers this once exercised.)"""
     cat = Catalog(spark, str(tmp_path / f"inv_{mode}"), commit_mode=mode)
     cat.create("px", SCHEMA, ["year"], ["ticker", "date"])
     cat.upsert("px", _rows(spark, [("A", D1, 1.0)]))
-    assert cat._valid_pk_clean_token("px") is not None
     cat.insert("px", _rows(spark, [("D", D2, 4.0), ("D", D2, 4.5)]))  # raw dups
-    assert cat._valid_pk_clean_token("px") is None
 
     calls: list[str] = []
     orig, wrapped = _counting(calls)
@@ -197,13 +182,47 @@ def test_marker_invalidated_by_raw_insert(spark, tmp_path, mode, probe_always):
         cat.upsert("px", _rows(spark, [("E", D1, 9.0)]))
     finally:
         Catalog._optimize_once = orig
-    assert calls == ["px"], "stale marker must force the full probe"
+    assert calls == ["px"], "the raw insert's dups need the full optimize"
     got = _content(cat, "px")
     assert [t for t, *_ in got] == ["A", "D", "E"], got  # D deduped
 
 
+@pytest.mark.parametrize("mode", ("rename", "filelist"))
+def test_stale_pk_clean_entry_is_ignored(spark, tmp_path, mode):
+    """Older code recorded ``pk_clean`` markers in the state file. A
+    marker that fingerprints the current state — and would have been
+    trusted — while the table holds raw duplicates must be ignored:
+    the upsert still dedups, and the entry is never re-written."""
+    root = str(tmp_path / f"stale_{mode}")
+    cat = Catalog(spark, root, commit_mode=mode)
+    cat.create("px", SCHEMA, ["year"], ["ticker", "date"])
+    cat.upsert("px", _rows(spark, [("A", D1, 1.0)]))
+    cat.insert("px", _rows(spark, [("D", D2, 4.0), ("D", D2, 4.5)]))  # raw dups
+    if mode == "filelist":
+        stale = {"kind": "gen", "gen": cat._current_gen("px")}
+    else:
+        fs, p = cat._hfs(cat._data_path("px"))
+        stale = {
+            "kind": "dir",
+            "files": sorted(f for f, _ in cat._list_parquet_recursive(fs, p)),
+        }
+    state_path = os.path.join(root, "_catalog.json")
+    with open(state_path) as fh:
+        state = json.load(fh)
+    state["tables"]["px"]["pk_clean"] = stale
+    with open(state_path, "w") as fh:
+        json.dump(state, fh)
+
+    reopened = Catalog(spark, root, commit_mode=mode)
+    reopened.upsert("px", _rows(spark, [("E", D1, 9.0)]))
+    got = _content(reopened, "px")
+    assert [t for t, *_ in got] == ["A", "D", "E"], got  # D deduped
+    with open(state_path) as fh:
+        assert json.load(fh)["tables"]["px"]["pk_clean"] == stale
+
+
 @pytest.mark.parametrize("mode", MODES)
-def test_rival_append_mid_upsert_falls_back(spark, tmp_path, mode, probe_always):
+def test_rival_append_mid_upsert_falls_back(spark, tmp_path, mode):
     """A rival batch committed between the pre-insert check and the
     post-insert confirmation must force the full optimize — its rows
     are LWW-deduped against ours, never left as silent duplicates."""
@@ -259,25 +278,29 @@ def test_fastpath_filelist_gen_check_airtight(spark, tmp_path):
     assert not cat._upsert_base_undisturbed("m", token)
 
 
-def test_narrowed_filelist_rival_mid_probe_falls_back(spark, tmp_path, probe_always):
-    """Filelist: a rival commit between the undisturbed check and the
-    skip decision breaks the expected-generation re-check; the upsert
-    must rerun the FULL optimize so the rival's duplicates resolve."""
+def test_narrowed_filelist_rival_mid_probe_falls_back(spark, tmp_path):
+    """Filelist, empty-base fast path: a rival commit between the
+    undisturbed check and the skip decision breaks the expected-
+    generation re-check; the upsert must rerun the FULL optimize so
+    the rival's duplicates resolve."""
     root = str(tmp_path / "nr_race")
     a = Catalog(spark, root, commit_mode="filelist")
     a.create("m", SCHEMA, None, ["ticker", "date"])
-    a.upsert("m", _rows(spark, [("A", D1, 1.0)]))
-    assert a._valid_pk_clean_token("m") is not None
-    b = Catalog(spark, root, commit_mode="filelist")
 
     real_undisturbed = Catalog._upsert_base_undisturbed
     fired = {"done": False}
+    calls: list[str] = []
+    orig, wrapped = _counting(calls)
+    Catalog._optimize_once = wrapped
 
     def racing_check(self, name, token):
         ok = real_undisturbed(self, name, token)
-        # rival lands AFTER the check passes, BEFORE the skip decision
+        # rival lands AFTER the check passes, BEFORE the skip decision;
+        # constructed now, so it stamps a DIFFERENT ingest seq and the
+        # batch probe never sees its rows
         if self is a and ok and not fired["done"]:
             fired["done"] = True
+            b = Catalog(spark, root, commit_mode="filelist")
             b.insert("m", _rows(spark, [("X", D2, 8.0), ("X", D2, 8.5)]))
         return ok
 
@@ -286,17 +309,17 @@ def test_narrowed_filelist_rival_mid_probe_falls_back(spark, tmp_path, probe_alw
         a.upsert("m", _rows(spark, [("B", D2, 2.0)]))
     finally:
         Catalog._upsert_base_undisturbed = real_undisturbed
+        Catalog._optimize_once = orig
+    assert calls == ["m"], "rival mid-probe must force the full optimize"
     got = _content(a, "m")
-    assert [t for t, *_ in got] == ["A", "B", "X"], got  # X deduped
+    assert [t for t, *_ in got] == ["B", "X"], got  # X deduped
 
 
-def test_manifest_empty_base_rival_mid_probe_falls_back(spark, tmp_path, probe_always):
+def test_manifest_empty_base_rival_mid_probe_falls_back(spark, tmp_path):
     """Manifest mode, empty-base fast path: a rival append landing
-    BETWEEN the undisturbed check and the probe's snapshot read used
-    to be classified as already-proven-clean 'older rows' and never
-    examined (older_known_empty skips the cross-collision probe) — its
-    internal duplicates survived while optimize was skipped. The
-    post-probe re-check (listing + write-UUID) must now catch it."""
+    BETWEEN the undisturbed check and the probe's snapshot read carries
+    another ingest seq, so the batch probe never examines its rows.
+    The post-probe re-check (listing + write-UUID) must catch it."""
     root = str(tmp_path / "mftoctou")
     a = Catalog(spark, root, commit_mode="manifest")
     a.create("m", SCHEMA, None, ["ticker", "date"])
@@ -307,15 +330,15 @@ def test_manifest_empty_base_rival_mid_probe_falls_back(spark, tmp_path, probe_a
     orig, wrapped = _counting(calls)
     Catalog._optimize_once = wrapped
 
-    def racing_probe(self, name, base, seq, older_known_empty=False):
+    def racing_probe(self, name, seq):
         if self is a and not fired["done"]:
             fired["done"] = True
             # constructed NOW so the rival loads the post-insert
             # next_seq and stamps a DIFFERENT ingest seq — its rows
-            # read as 'older rows', the exact blind spot
+            # fall outside the batch probe, the exact blind spot
             b = Catalog(spark, root, commit_mode="manifest")
             b.insert("m", _rows(spark, [("X", D2, 8.0), ("X", D2, 8.5)]))
-        return real_probe(self, name, base, seq, older_known_empty)
+        return real_probe(self, name, seq)
 
     Catalog._batch_dup_probe = racing_probe
     try:
@@ -340,11 +363,11 @@ def _bin_rows(spark, data):
     return spark.createDataFrame([(bytearray(k), v) for k, v in data], BIN_SCHEMA)
 
 
-def test_binary_pk_collect_branch_falls_back(spark, tmp_path, probe_always):
-    """Binary PKs collect as bytearray (unhashable — set() throws
-    TypeError): the collect branch must fall back to the distributed
-    probe instead of erroring out of upsert AFTER the insert committed.
-    Clean batches still skip optimize; dup batches still resolve."""
+def test_binary_pk_collect_branch_falls_back(spark, tmp_path):
+    """Binary PKs collect as bytearray (unhashable), which once broke a
+    driver-side key collect in the probe; the probe stays distributed.
+    A clean empty-base binary batch still skips optimize; later
+    upserts optimize and resolve collisions."""
     cat = Catalog(spark, str(tmp_path / "binpk"), commit_mode="rename")
     cat.create("b", BIN_SCHEMA, None, ["key"])
     calls: list[str] = []
@@ -354,55 +377,12 @@ def test_binary_pk_collect_branch_falls_back(spark, tmp_path, probe_always):
         cat.upsert("b", _bin_rows(spark, [(b"k1", 1.0), (b"k2", 2.0)]))
         assert calls == [], "clean empty-base binary batch must still skip"
         cat.upsert("b", _bin_rows(spark, [(b"k3", 3.0)]))
-        assert calls == [], "clean marker-base binary batch must still skip"
         cat.upsert("b", _bin_rows(spark, [(b"k1", 9.0)]))  # collision
-        assert calls == ["b"], "binary collision must run the full optimize"
+        assert calls == ["b", "b"], "non-empty bases run the full optimize"
     finally:
         Catalog._optimize_once = orig
     got = sorted((bytes(r["key"]), r["val"]) for r in cat.table("b").collect())
     assert got == [(b"k1", 9.0), (b"k2", 2.0), (b"k3", 3.0)]
-
-
-def test_probe_shuffled_join_above_broadcast_cap(spark, tmp_path, probe_always, monkeypatch):
-    """With both the collect cap and the broadcast cap forced to 0 the
-    probe must take the plain shuffled semi-join and still decide
-    correctly — the stability path for backfill-sized batches."""
-    monkeypatch.setattr(Catalog, "_PROBE_COLLECT_MAX_BYTES", 0)
-    monkeypatch.setattr(Catalog, "_PROBE_BROADCAST_MAX_BYTES", 0)
-    cat = Catalog(spark, str(tmp_path / "nobc"), commit_mode="rename")
-    cat.create("px", SCHEMA, ["year"], ["ticker", "date"])
-    calls: list[str] = []
-    orig, wrapped = _counting(calls)
-    Catalog._optimize_once = wrapped
-    try:
-        cat.upsert("px", _rows(spark, [("A", D1, 1.0), ("B", D2, 2.0)]))
-        assert calls == [], "clean shuffled-probe upsert must skip optimize"
-        cat.upsert("px", _rows(spark, [("C", D1, 3.0)]))
-        assert calls == [], "marker-clean shuffled probe must skip"
-        cat.upsert("px", _rows(spark, [("A", D1, 7.0)]))  # collision
-        assert calls == ["px"]
-    finally:
-        Catalog._optimize_once = orig
-    assert [c for *_, c in _content(cat, "px")] == [7.0, 2.0, 3.0]
-
-
-@pytest.mark.parametrize("mode", ("rename", "filelist"))
-def test_clean_upserts_keep_file_count_bounded(spark, tmp_path, mode, probe_always, monkeypatch):
-    """The skip path never rewrites, so N clean upserts used to grow N
-    batches of small files without bound. With the compaction routing
-    the live file count stays bounded by the threshold (+ one batch)
-    and the content is untouched."""
-    monkeypatch.setenv("NT_UPSERT_COMPACT_FILES", "6")
-    cat = Catalog(spark, str(tmp_path / f"cmp_{mode}"), commit_mode=mode)
-    cat.create("px", SCHEMA, None, ["ticker", "date"])
-    expected = []
-    for i in range(12):
-        d = dt.date(2024, 1, 2) + dt.timedelta(days=i)
-        cat.upsert("px", _rows(spark, [(f"T{i}", d, float(i))]))
-        expected.append((f"T{i}", str(d), d.year, float(i)))
-    nf = cat._live_file_count("px")
-    assert nf <= 6 + 2, f"file count must stay bounded, got {nf}"
-    assert _content(cat, "px") == sorted(expected)
 
 
 def test_fastpath_keyless_table_not_engaged(spark, tmp_path):
@@ -411,3 +391,23 @@ def test_fastpath_keyless_table_not_engaged(spark, tmp_path):
     assert cat._upsert_empty_base_token("nk") is None
     cat.upsert("nk", _rows(spark, [("A", D1, 1.0), ("A", D1, 1.0)]))
     assert cat.table("nk").count() == 2  # no PK: append keeps both
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_empty_base_token_reads_footers(spark, tmp_path, mode, monkeypatch):
+    """A table whose committed files hold zero rows is an empty base;
+    one holding a row is not. Local footers decide — no table scan."""
+    cat = Catalog(spark, str(tmp_path / f"ft_{mode}"), commit_mode=mode)
+    cat.create("px", SCHEMA, None, ["ticker", "date"])
+    cat.insert("px", _rows(spark, []))  # commits a zero-row file
+    assert cat.data_files("px"), "the empty insert must commit a file"
+
+    def no_scan(self, name):
+        raise AssertionError("emptiness must come from the footers")
+
+    monkeypatch.setattr(Catalog, "_raw_table", no_scan)
+    assert cat._upsert_empty_base_token("px") is not None
+    monkeypatch.undo()
+    cat.insert("px", _rows(spark, [("A", D1, 1.0)]))
+    monkeypatch.setattr(Catalog, "_raw_table", no_scan)
+    assert cat._upsert_empty_base_token("px") is None
