@@ -38,6 +38,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import threading
 import warnings
 from dataclasses import dataclass, field
 
@@ -196,6 +197,10 @@ class Catalog:
             os.makedirs(root, exist_ok=True)
         self._meta_path = os.path.join(root, "_catalog.json")
         self._state = self._load()
+        # Guards the ingest seq and every _catalog.json write: flows
+        # run independent stages from several threads on one catalog,
+        # and all of them share one seq counter and one .tmp path.
+        self._lock = threading.RLock()
 
     # ---- metadata ----
     def _load(self) -> dict:
@@ -214,46 +219,55 @@ class Catalog:
                 return json.load(f)
         return {"tables": {}, "next_seq": 1}
 
+    def _take_seq(self) -> int:
+        """Allocate the next ingest seq and persist the counter."""
+        with self._lock:
+            seq = self._state["next_seq"]
+            self._state["next_seq"] = seq + 1
+            self._save()
+        return seq
+
     def _save(self) -> None:
-        payload = json.dumps(self._state, indent=2)
-        if self._uri_root:
-            scheme = self.root.split("://", 1)[0]
-            if scheme in ("s3", "s3a", "s3n", "gs", "abfs", "abfss", "oss", "wasb", "wasbs"):
-                # object stores: create+write IS a single PUT uploaded
-                # at close, so a crash mid-write leaves the OLD object
-                # — direct overwrite-create is the atomic choice there
-                # (rename would be copy+delete, strictly worse).
-                fs, p = self._hfs(self._meta_path)
-                out = fs.create(p, True)
+        with self._lock:
+            payload = json.dumps(self._state, indent=2)
+            if self._uri_root:
+                scheme = self.root.split("://", 1)[0]
+                if scheme in ("s3", "s3a", "s3n", "gs", "abfs", "abfss", "oss", "wasb", "wasbs"):
+                    # object stores: create+write IS a single PUT uploaded
+                    # at close, so a crash mid-write leaves the OLD object
+                    # — direct overwrite-create is the atomic choice there
+                    # (rename would be copy+delete, strictly worse).
+                    fs, p = self._hfs(self._meta_path)
+                    out = fs.create(p, True)
+                    try:
+                        out.write(bytearray(payload.encode("utf-8")))
+                    finally:
+                        out.close()
+                    return
+                # file:// and hdfs://: create+write streams straight into
+                # the destination, so a crash mid-write leaves a TRUNCATED
+                # catalog file. Write aside, then atomically swap in via
+                # FileContext.rename(OVERWRITE) — atomic on both.
+                jvm = self.spark._jvm
+                fs, tmp = self._hfs(self._meta_path + ".tmp")
+                out = fs.create(tmp, True)
                 try:
                     out.write(bytearray(payload.encode("utf-8")))
                 finally:
                     out.close()
+                _, dst = self._hfs(self._meta_path)
+                fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+                    tmp.toUri(), self.spark._jsc.hadoopConfiguration()
+                )
+                rename_enum = jvm.org.apache.hadoop.fs.Options.Rename
+                opts = self.spark.sparkContext._gateway.new_array(rename_enum, 1)
+                opts[0] = rename_enum.OVERWRITE
+                fc.rename(tmp, dst, opts)
                 return
-            # file:// and hdfs://: create+write streams straight into
-            # the destination, so a crash mid-write leaves a TRUNCATED
-            # catalog file. Write aside, then atomically swap in via
-            # FileContext.rename(OVERWRITE) — atomic on both.
-            jvm = self.spark._jvm
-            fs, tmp = self._hfs(self._meta_path + ".tmp")
-            out = fs.create(tmp, True)
-            try:
-                out.write(bytearray(payload.encode("utf-8")))
-            finally:
-                out.close()
-            _, dst = self._hfs(self._meta_path)
-            fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-                tmp.toUri(), self.spark._jsc.hadoopConfiguration()
-            )
-            rename_enum = jvm.org.apache.hadoop.fs.Options.Rename
-            opts = self.spark.sparkContext._gateway.new_array(rename_enum, 1)
-            opts[0] = rename_enum.OVERWRITE
-            fc.rename(tmp, dst, opts)
-            return
-        tmp = self._meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(payload)
-        os.replace(tmp, self._meta_path)
+            tmp = self._meta_path + ".tmp"
+            with open(tmp, "w") as f:
+                f.write(payload)
+            os.replace(tmp, self._meta_path)
 
     def _meta(self, name: str) -> TableMeta:
         raw = self._state["tables"].get(name)
@@ -1376,8 +1390,9 @@ class Catalog:
             return
         self.spark.catalog.refreshByPath(self._data_path(name))
 
-    def insert(self, name: str, df: DataFrame, mode: str = "append") -> None:
-        """Append rows; stamps a monotone _ingest_seq for upsert ordering."""
+    def insert(self, name: str, df: DataFrame, mode: str = "append") -> int:
+        """Append rows; stamps a monotone _ingest_seq for upsert
+        ordering and returns the seq it stamped."""
         if mode not in ("append", "overwrite"):
             raise ValueError(f"mode must be append|overwrite, got {mode!r}")
         meta = self._meta(name)
@@ -1392,14 +1407,13 @@ class Catalog:
             batch = batch.persist()
         try:
             self._check_constraints(name, batch)  # gate BEFORE any write
-            seq = self._state["next_seq"]
-            self._state["next_seq"] = seq + 1
-            self._save()
+            seq = self._take_seq()
             out = batch.withColumn(INGEST_COL, F.lit(seq).cast("long"))
             self._write(name, out, mode)
         finally:
             if gated:
                 batch.unpersist()
+        return seq
 
     def upsert(self, name: str, df: DataFrame) -> None:
         """insert + optimize, with one shortcut for an empty base.
@@ -1420,8 +1434,7 @@ class Catalog:
         gate, and a traced nightly run showed it never fired
         (``fastpath_ratio`` 0)."""
         base = self._upsert_empty_base_token(name)
-        seq = self._state["next_seq"]  # the seq insert will stamp
-        self.insert(name, df, mode="append")
+        seq = self.insert(name, df, mode="append")
         if base is not None and self._upsert_base_undisturbed(name, base):
             expect = base[1] + 1 if base[0] == "gen" else None
             # the post-probe re-check closes the probe-window TOCTOU for
@@ -1727,9 +1740,7 @@ class Catalog:
                 )
             incoming = src.filter(~F.col("__del")).drop("__del")
             self._check_constraints(name, incoming)  # same gate as insert
-            seq = self._state["next_seq"]
-            self._state["next_seq"] = seq + 1
-            self._save()
+            seq = self._take_seq()
             survivors = incoming.withColumn(INGEST_COL, F.lit(seq).cast("long"))
             src_keys = src.select(*keys)
 
@@ -2229,10 +2240,11 @@ class Catalog:
                 }
                 for f in fields
             },
-            "analyzed_at_seq": self._state["next_seq"],
         }
-        self._state["tables"][name]["stats"] = stats
-        self._save()
+        with self._lock:
+            stats["analyzed_at_seq"] = self._state["next_seq"]
+            self._state["tables"][name]["stats"] = stats
+            self._save()
         return stats
 
     def stats(self, name: str) -> dict | None:
@@ -2697,10 +2709,11 @@ class Catalog:
         die on a type mismatch, after a later add_column)."""
         if self.time_travel:
             return
-        entry = self._state["tables"].get(name)
-        if entry and entry.get("dropped_columns"):
-            entry["dropped_columns"] = []
-            self._save()
+        with self._lock:
+            entry = self._state["tables"].get(name)
+            if entry and entry.get("dropped_columns"):
+                entry["dropped_columns"] = []
+                self._save()
 
     def _rewrite_table(
         self, name: str, deduped: DataFrame, preserve_layout: bool = False

@@ -1,19 +1,28 @@
 """DAG runner: the reference's nightly flow graph over the catalog.
 
 Reproduces ``daily_flow`` / the backfill entry points
-(__main__.py:22-49): twelve stages run in dependency order, each
-reading its inputs from catalog tables and upserting its outputs —
-the same read -> transform -> create/insert/optimize lifecycle as the
-reference (SURVEY.md §3.1). Cron scheduling and failure webhooks are
-deployment concerns; ``on_failure`` is a pluggable callback.
+(__main__.py:22-49) as one dependency-scheduled stage graph. The
+edges are declared once, in :data:`GRAPH`, and both flows run it: a
+stage starts the moment every stage it reads from has committed, so
+independent branches (returns, factor model, covariances, signals,
+benchmark) submit their Spark jobs concurrently instead of leaving
+the cores idle behind one job at a time. Each stage reads its inputs
+from catalog tables and upserts its outputs — the same read ->
+transform -> create/insert/optimize lifecycle as the reference
+(SURVEY.md §3.1). Cron scheduling and failure webhooks are deployment
+concerns; ``on_failure`` is a pluggable callback.
 
 The backfill here is the full-history variant (T5). Daily increments
-reuse the same stage functions with the T2 freshness gate and a T3
-tail-window slice (callers filter ``date == end`` before upserting).
+run the same graph with the T2 freshness gate and a T3 tail-window
+slice (each stage keeps only ``date == end`` before upserting).
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -176,6 +185,156 @@ def ensure_tables(cat: Catalog) -> None:
         cat.create(name, spec["schema"], spec["partition"], spec["pk"], mode="skip")
 
 
+# The DAG both flows run: stage -> the stages whose committed tables it
+# reads (besides the ingest tables: calendar, universe, prices). A
+# stage upserts the table it is named after, or the tables its comment
+# names; a pinned frame never leaves the stage that pins it, so no two
+# threads first-touch one lazy checkpoint. tests/test_dag_graph.py checks every stage's reads
+# against these edges.
+GRAPH: dict[str, tuple[str, ...]] = {
+    "stock_returns": (),
+    "etf_returns": (),
+    # fitted (pinned) -> factor_loadings, idio_vol
+    "factor_model": ("stock_returns", "etf_returns"),
+    "factor_covariances": ("etf_returns",),
+    # signals -> scores
+    "signals": ("stock_returns",),
+    # uni_ret (pinned in the backfill) -> benchmark_weights, benchmark_returns
+    "benchmark": ("stock_returns",),
+    "betas": ("benchmark",),
+    "alphas": ("signals", "factor_model"),
+    # portfolio_weights, portfolio_metrics
+    "portfolio": ("alphas", "benchmark", "factor_covariances"),
+}
+
+
+def _run_graph(spark: SparkSession, stages: dict[str, Callable[[], None]]) -> None:
+    """Run each stage of :data:`GRAPH` once, as soon as every stage it
+    reads from has committed.
+
+    A thread is started only for a ready stage with no idle thread to
+    take it, so the pool never grows past the graph's width — there is
+    no size to tune. Stages run under
+    ``inheritable_thread_target(spark)``: the caller's job group, tags
+    and scheduler pool reach every job a stage starts. After the first
+    stage error no stage starts; the running ones finish, every thread
+    is joined, and the error propagates with its traceback."""
+    waiting = dict(GRAPH)
+    running: dict[Future, str] = {}
+    done: set[str] = set()
+    with ThreadPoolExecutor(max_workers=len(GRAPH), thread_name_prefix="nt-dag") as pool:
+        while waiting or running:
+            for name in [n for n, deps in waiting.items() if done.issuperset(deps)]:
+                del waiting[name]
+                target = inheritable_thread_target(spark)(stages[name])
+                running[pool.submit(target)] = name
+            finished, _ = wait(running, return_when=FIRST_COMPLETED)
+            for fut in finished:
+                fut.result()
+                done.add(running.pop(fut))
+
+
+def _upsert_portfolio(cat: Catalog, weights: DataFrame) -> None:
+    """The QP's weights and its per-date metrics, from one computation."""
+    weights = weights.cache()
+    try:
+        cat.upsert(
+            "portfolio_weights",
+            weights.select("ticker", "date", F.year("date").cast("int").alias("year"), "weight"),
+        )
+        cat.upsert("portfolio_metrics", weights.select("date", "lambda", "active_risk").distinct())
+    finally:
+        weights.unpersist()
+
+
+def _backfill_stages(
+    cat: Catalog, window: int, half_life: float
+) -> dict[str, Callable[[], None]]:
+    """The full-history body of every :data:`GRAPH` stage."""
+
+    def stock_returns():
+        cat.upsert("stock_returns", compute_returns(cat.table("stock_prices")))
+
+    def etf_returns():
+        cat.upsert("etf_returns", compute_returns(cat.table("etf_prices")))
+
+    def factor_model():
+        # pinned: BOTH the loadings and idio-vol upserts materialize
+        # `fitted` — unpinned, the rolling-OLS grouped-map kernel (the
+        # flow's most expensive stage) executes twice
+        fitted = _pin(
+            estimate_factor_model(
+                cat.table("stock_returns"), cat.table("etf_returns"), FACTORS, window
+            )
+        )
+        cat.upsert("factor_loadings", clean_factor_loadings(fitted, FACTORS, half_life))
+        cat.upsert("idio_vol", clean_idio_vol(fitted, window, half_life))
+
+    def factor_covariances():
+        cat.upsert(
+            "factor_covariances",
+            estimate_factor_covariances(cat.table("etf_returns"), FACTORS, window, half_life),
+        )
+
+    def signals():
+        cat.upsert("signals", calculate_signals(cat.table("stock_returns")))
+        cat.upsert("scores", calculate_scores(cat.table("signals")))
+
+    def benchmark():
+        # pinned: the weights and returns upserts both read uni_ret —
+        # unpinned, the full-panel universe x returns join runs twice
+        uni_ret = _pin(
+            cat.table("universe")
+            .join(
+                cat.table("stock_returns").select("date", "ticker", "return"),
+                ["date", "ticker"],
+                "left",
+            )
+            .filter(F.col("return").isNotNull())
+        )
+        cat.upsert("benchmark_weights", calculate_benchmark_weights(uni_ret))
+        cat.upsert(
+            "benchmark_returns",
+            calculate_benchmark_returns(uni_ret, cat.table("benchmark_weights")),
+        )
+
+    def betas():
+        cat.upsert(
+            "betas",
+            estimate_betas(
+                cat.table("stock_returns"), cat.table("benchmark_returns"), window, half_life
+            ),
+        )
+
+    def alphas():
+        cat.upsert("alphas", calculate_alphas(cat.table("scores"), cat.table("idio_vol")))
+
+    def portfolio():
+        _upsert_portfolio(
+            cat,
+            compute_portfolio_weights(
+                cat.table("alphas"),
+                cat.table("benchmark_weights"),
+                cat.table("factor_loadings"),
+                cat.table("factor_covariances"),
+                cat.table("idio_vol"),
+                FACTORS,
+            ),
+        )
+
+    return {
+        "stock_returns": stock_returns,
+        "etf_returns": etf_returns,
+        "factor_model": factor_model,
+        "factor_covariances": factor_covariances,
+        "signals": signals,
+        "benchmark": benchmark,
+        "betas": betas,
+        "alphas": alphas,
+        "portfolio": portfolio,
+    }
+
+
 def backfill_flow(
     spark: SparkSession,
     cat: Catalog,
@@ -195,75 +354,166 @@ def backfill_flow(
         for src in ("stock_prices", "etf_prices"):
             if cat.table(src).limit(1).count() == 0:
                 raise ValueError(f"No values found: {src} is empty")
-        stock_returns = compute_returns(cat.table("stock_prices"))
-        cat.upsert("stock_returns", stock_returns)
-        etf_returns = compute_returns(cat.table("etf_prices"))
-        cat.upsert("etf_returns", etf_returns)
-
-        stock_returns = cat.table("stock_returns")
-        etf_returns = cat.table("etf_returns")
-
-        # pinned: BOTH the loadings and idio-vol upserts materialize
-        # `fitted` — unpinned, the rolling-OLS grouped-map kernel (the
-        # flow's most expensive stage) executes twice
-        fitted = _pin(estimate_factor_model(stock_returns, etf_returns, FACTORS, window))
-        cat.upsert(
-            "factor_loadings", clean_factor_loadings(fitted, FACTORS, half_life)
-        )
-        cat.upsert("idio_vol", clean_idio_vol(fitted, window, half_life))
-        cat.upsert(
-            "factor_covariances",
-            estimate_factor_covariances(etf_returns, FACTORS, window, half_life),
-        )
-
-        signals = calculate_signals(stock_returns)
-        cat.upsert("signals", signals)
-        scores = calculate_scores(cat.table("signals"))
-        cat.upsert("scores", scores)
-        cat.upsert("alphas", calculate_alphas(cat.table("scores"), cat.table("idio_vol")))
-
-        # pinned: the weights and returns upserts both read uni_ret —
-        # unpinned, the full-panel universe x returns join runs twice
-        uni_ret = (
-            cat.table("universe")
-            .join(stock_returns.select("date", "ticker", "return"), ["date", "ticker"], "left")
-            .filter(F.col("return").isNotNull())
-        )
-        uni_ret = _pin(uni_ret)
-        bweights = calculate_benchmark_weights(uni_ret)
-        cat.upsert("benchmark_weights", bweights)
-        bret = calculate_benchmark_returns(uni_ret, cat.table("benchmark_weights"))
-        cat.upsert("benchmark_returns", bret)
-
-        cat.upsert(
-            "betas",
-            estimate_betas(stock_returns, cat.table("benchmark_returns"), window, half_life),
-        )
-
-        weights = compute_portfolio_weights(
-            cat.table("alphas"),
-            cat.table("benchmark_weights"),
-            cat.table("factor_loadings"),
-            cat.table("factor_covariances"),
-            cat.table("idio_vol"),
-            FACTORS,
-        ).cache()
-        try:
-            cat.upsert(
-                "portfolio_weights",
-                weights.select(
-                    "ticker", "date", F.year("date").cast("int").alias("year"), "weight"
-                ),
-            )
-            cat.upsert(
-                "portfolio_metrics",
-                weights.select("date", "lambda", "active_risk").distinct(),
-            )
-        finally:
-            weights.unpersist()
+        _run_graph(spark, _backfill_stages(cat, window, half_life))
     except Exception as exc:
         _fire_failure_hook(on_failure, exc)
         raise
+
+
+def _lookback(cal: DataFrame, today, sizes: tuple[int, ...]):
+    """``(end, starts)``: the last market date before ``today`` and, per
+    lookback size n, the first of the last n market dates up to
+    ``end`` (all of them when fewer than n exist) — one aggregate.
+
+    Lookbacks are windows of COMPLETED market dates: the calendar
+    covers today and future schedule dates, and an unbounded last-N
+    would silently shift (or empty) every factor window."""
+    d = F.sort_array(F.collect_set("date"), asc=False)
+    row = (
+        cal.filter(F.col("date") < F.lit(today))
+        .agg(d.alias("d"))
+        .select(
+            F.element_at("d", 1).alias("end"),
+            *[
+                F.element_at("d", F.least(F.lit(n), F.size("d"))).alias(f"s{n}")
+                for n in sizes
+            ],
+        )
+        .first()
+    )
+    return row["end"], {n: row[f"s{n}"] for n in sizes}
+
+
+def _daily_stages(
+    cat: Catalog,
+    end,
+    starts: dict,
+    window: int,
+    half_life: float,
+    reversal_window: int,
+) -> dict[str, Callable[[], None]]:
+    """The end-date body of every :data:`GRAPH` stage; ``starts`` maps
+    each lookback size to its first date (:func:`_lookback`)."""
+
+    def tail(df, n_dates: int):
+        return df.filter(
+            (F.col("date") >= F.lit(starts[n_dates])) & (F.col("date") <= F.lit(end))
+        )
+
+    def only_end(df):
+        return df.filter(F.col("date") == F.lit(end))
+
+    # returns recompute over FULL price history, like the reference
+    # (returns_flow.py has only a full-replace variant, no tail) — so
+    # a ticker resuming after any gap still gets its end-date return
+    # from the last available close; only the end date is upserted.
+    def stock_returns():
+        cat.upsert("stock_returns", only_end(compute_returns(cat.table("stock_prices"))))
+
+    def etf_returns():
+        cat.upsert("etf_returns", only_end(compute_returns(cat.table("etf_prices"))))
+
+    def factor_model():
+        # pinned: both tail upserts materialize `fitted` (see backfill)
+        fitted = _pin(
+            estimate_factor_model(
+                tail(cat.table("stock_returns"), 2 * window),
+                tail(cat.table("etf_returns"), 2 * window),
+                FACTORS,
+                window,
+            )
+        )
+        cat.upsert(
+            "factor_loadings", only_end(clean_factor_loadings(fitted, FACTORS, half_life))
+        )
+        cat.upsert("idio_vol", only_end(clean_idio_vol(fitted, window, half_life)))
+
+    def factor_covariances():
+        cat.upsert(
+            "factor_covariances",
+            only_end(
+                estimate_factor_covariances(
+                    tail(cat.table("etf_returns"), window), FACTORS, window, half_life
+                )
+            ),
+        )
+
+    def signals():
+        # NOTE: the reference's daily reversal flow uses exactly a
+        # 21-date lookback (get_trading_date_range(window=21)), so a
+        # ticker missing one of those dates loses its end-date signal —
+        # faithful zero-slack behavior, same as the reference.
+        signals = only_end(
+            calculate_signals(
+                tail(cat.table("stock_returns"), reversal_window), window=reversal_window
+            )
+        )
+        if signals.limit(1).count() == 0:
+            raise ValueError("No values found: empty daily signals")
+        cat.upsert("signals", signals)
+        cat.upsert("scores", calculate_scores(only_end(cat.table("signals"))))
+
+    def benchmark():
+        uni_ret = (
+            only_end(cat.table("universe"))
+            .join(
+                only_end(cat.table("stock_returns")).select("date", "ticker", "return"),
+                ["date", "ticker"],
+                "left",
+            )
+            .filter(F.col("return").isNotNull())
+        )
+        if uni_ret.limit(1).count() == 0:
+            raise ValueError("No values found: end-date universe returns are empty")
+        cat.upsert("benchmark_weights", calculate_benchmark_weights(uni_ret))
+        cat.upsert(
+            "benchmark_returns",
+            calculate_benchmark_returns(uni_ret, only_end(cat.table("benchmark_weights"))),
+        )
+
+    def betas():
+        cat.upsert(
+            "betas",
+            only_end(
+                estimate_betas(
+                    tail(cat.table("stock_returns"), 2 * window),
+                    tail(cat.table("benchmark_returns"), 2 * window),
+                    window,
+                    half_life,
+                )
+            ),
+        )
+
+    def alphas():
+        cat.upsert(
+            "alphas",
+            only_end(calculate_alphas(only_end(cat.table("scores")), cat.table("idio_vol"))),
+        )
+
+    def portfolio():
+        _upsert_portfolio(
+            cat,
+            compute_portfolio_weights(
+                only_end(cat.table("alphas")),
+                only_end(cat.table("benchmark_weights")),
+                only_end(cat.table("factor_loadings")),
+                only_end(cat.table("factor_covariances")),
+                only_end(cat.table("idio_vol")),
+                FACTORS,
+            ),
+        )
+
+    return {
+        "stock_returns": stock_returns,
+        "etf_returns": etf_returns,
+        "factor_model": factor_model,
+        "factor_covariances": factor_covariances,
+        "signals": signals,
+        "benchmark": benchmark,
+        "betas": betas,
+        "alphas": alphas,
+        "portfolio": portfolio,
+    }
 
 
 def daily_flow(
@@ -290,131 +540,20 @@ def daily_flow(
     full-history backfill values — that approximation is the
     reference's own (factor_model_flow.py:179-199).
     """
-    from nt_data_pipelines_spark.pipelines.calendar import freshness_gate, last_market_date
+    from nt_data_pipelines_spark.pipelines.calendar import freshness_gate
 
     cal = cat.table("calendar")
     if not freshness_gate(cal, today):
         return False
-    # bounded by today: the calendar covers future schedule dates, and
-    # the nightly flow processes data through the last COMPLETED
-    # market day, never a future one
-    end = last_market_date(cal, before=today)
-
-    from nt_data_pipelines_spark.pipelines.calendar import trading_date_range
-
-    tail_starts: dict[int, object] = {}
-    # lookbacks are windows of COMPLETED market dates: the calendar
-    # covers today and future schedule dates, and an unbounded
-    # last-N would silently shift (or empty) every factor window
-    cal_past = cal.filter(F.col("date") <= F.lit(end))
-
-    def tail(df, n_dates: int):
-        # one driver action per distinct lookback size, cached
-        if n_dates not in tail_starts:
-            tail_starts[n_dates] = (
-                trading_date_range(cal_past, n_dates).agg(F.min("date")).first()[0]
-            )
-        start = tail_starts[n_dates]
-        return df.filter((F.col("date") >= F.lit(start)) & (F.col("date") <= F.lit(end)))
-
-    def only_end(df):
-        return df.filter(F.col("date") == F.lit(end))
-
     try:
-        # returns recompute over FULL price history, like the reference
-        # (returns_flow.py has only a full-replace variant, no tail) —
-        # so a ticker resuming after any gap still gets its end-date
-        # return from the last available close; only the end date is
-        # upserted.
-        stock_ret = only_end(compute_returns(cat.table("stock_prices")))
-        cat.upsert("stock_returns", stock_ret)
-        etf_ret = only_end(compute_returns(cat.table("etf_prices")))
-        cat.upsert("etf_returns", etf_ret)
-
-        stock_returns = tail(cat.table("stock_returns"), 2 * window)
-        etf_returns = tail(cat.table("etf_returns"), 2 * window)
-
-        # pinned: both tail upserts materialize `fitted` (see backfill)
-        fitted = _pin(estimate_factor_model(stock_returns, etf_returns, FACTORS, window))
-        cat.upsert(
-            "factor_loadings",
-            only_end(clean_factor_loadings(fitted, FACTORS, half_life)),
+        # bounded by today: the calendar covers future schedule dates,
+        # and the nightly flow processes data through the last
+        # COMPLETED market day, never a future one
+        end, starts = _lookback(cal, today, (2 * window, window, reversal_window))
+        _run_graph(
+            spark,
+            _daily_stages(cat, end, starts, window, half_life, reversal_window),
         )
-        cat.upsert("idio_vol", only_end(clean_idio_vol(fitted, window, half_life)))
-        cat.upsert(
-            "factor_covariances",
-            only_end(
-                estimate_factor_covariances(
-                    tail(cat.table("etf_returns"), window), FACTORS, window, half_life
-                )
-            ),
-        )
-
-        # NOTE: the reference's daily reversal flow uses exactly a
-        # 21-date lookback (get_trading_date_range(window=21)), so a
-        # ticker missing one of those dates loses its end-date signal —
-        # faithful zero-slack behavior, same as the reference.
-        signals = only_end(
-            calculate_signals(
-                tail(cat.table("stock_returns"), reversal_window), window=reversal_window
-            )
-        )
-        if signals.limit(1).count() == 0:
-            raise ValueError("No values found: empty daily signals")
-        cat.upsert("signals", signals)
-        scores = calculate_scores(only_end(cat.table("signals")))
-        cat.upsert("scores", scores)
-        cat.upsert(
-            "alphas",
-            only_end(calculate_alphas(only_end(cat.table("scores")), cat.table("idio_vol"))),
-        )
-
-        uni_ret = (
-            only_end(cat.table("universe"))
-            .join(
-                only_end(cat.table("stock_returns")).select("date", "ticker", "return"),
-                ["date", "ticker"],
-                "left",
-            )
-            .filter(F.col("return").isNotNull())
-        )
-        if uni_ret.limit(1).count() == 0:
-            raise ValueError("No values found: end-date universe returns are empty")
-        bweights = calculate_benchmark_weights(uni_ret)
-        cat.upsert("benchmark_weights", bweights)
-        cat.upsert(
-            "benchmark_returns",
-            calculate_benchmark_returns(uni_ret, only_end(cat.table("benchmark_weights"))),
-        )
-
-        cat.upsert(
-            "betas",
-            only_end(
-                estimate_betas(
-                    tail(cat.table("stock_returns"), 2 * window),
-                    tail(cat.table("benchmark_returns"), 2 * window),
-                    window,
-                    half_life,
-                )
-            ),
-        )
-
-        weights = compute_portfolio_weights(
-            only_end(cat.table("alphas")),
-            only_end(cat.table("benchmark_weights")),
-            only_end(cat.table("factor_loadings")),
-            only_end(cat.table("factor_covariances")),
-            only_end(cat.table("idio_vol")),
-            FACTORS,
-        ).cache()
-        try:
-            cat.upsert(
-                "portfolio_weights",
-                weights.select("ticker", "date", F.year("date").cast("int").alias("year"), "weight"),
-            )
-            cat.upsert("portfolio_metrics", weights.select("date", "lambda", "active_risk").distinct())
-        finally:
-            weights.unpersist()
         return True
     except Exception as exc:
         _fire_failure_hook(on_failure, exc)
