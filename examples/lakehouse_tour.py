@@ -3,7 +3,8 @@
 Run: python examples/lakehouse_tour.py  (~2 min on local CPUs)
 
 Demonstrates, on the driver testdata:
-1. CDC merge, time travel, and schema evolution on a manifest catalog;
+1. CDC merge, append-level time travel, stats-pruned scans and schema
+   evolution on a filelist (manifest-log) catalog;
 2. JSONL ingestion with corrupt-record quarantine;
 3. unigram-LM quality scoring and the perplexity band filter;
 4. the compressed ANN stack: PQ encode -> IVF-PQ search;
@@ -50,8 +51,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     tmp = tempfile.mkdtemp(prefix="tour_")
 
-    print("== 1. merge / time travel / schema evolution ==")
-    cat = Catalog(spark, f"{tmp}/lake", commit_mode="manifest", time_travel=2)
+    print("== 1. filelist catalog: merge / time travel / pruning / schema evolution ==")
+    cat = Catalog(spark, f"{tmp}/lake", commit_mode="filelist", time_travel=3)
     schema = T.StructType(
         [
             T.StructField("ticker", T.StringType()),
@@ -61,39 +62,31 @@ def main() -> None:
     )
     cat.create("px", schema, None, ["ticker", "date"])
     d = dt.date(2024, 1, 2)
-    cat.insert("px", spark.createDataFrame([("A", d, 1.0), ("B", d, 2.0)], schema))
+    cat.insert("px", spark.createDataFrame([("A", d, 1.0)], schema))
+    cat.insert("px", spark.createDataFrame([("B", d, 2.0)], schema))
+    hist = cat.history("px")
+    print("  every commit is a snapshot:", hist)
+    g = hist[1]["generation"]
+    print("  as of gen", g, ":", [r.ticker for r in cat.table_at("px", g).collect()])
+    # file-surgical CDC merge: only files holding a matched key are rewritten
     cdc = T.StructType(list(schema.fields) + [T.StructField("deleted", T.BooleanType())])
     cat.merge("px", spark.createDataFrame(
         [("A", d, 10.0, False), ("B", d, 0.0, True), ("C", d, 3.0, False)], cdc
     ), delete_col="deleted")
-    print("  after merge:", sorted((r.ticker, r.close) for r in cat.table("px").collect()))
-    print("  history:", cat.history("px"))
-    cat.add_column("px", T.StructField("volume", T.DoubleType()))
-    print("  evolved columns:", cat.table("px").columns)
-
-    print("== 1b. filelist mode: append-level snapshots + log pruning ==")
-    fl = Catalog(spark, f"{tmp}/fl_lake", commit_mode="filelist", time_travel=3)
-    fl.create("px", schema, None, ["ticker", "date"])
-    fl.insert("px", spark.createDataFrame([("A", d, 1.0)], schema))
-    fl.insert("px", spark.createDataFrame([("B", d, 2.0)], schema))
-    hist = fl.history("px")
-    print("  every commit is a snapshot:", hist)
-    g = hist[1]["generation"]
-    print("  as of gen", g, ":", [r.ticker for r in fl.table_at("px", g).collect()])
-    # file-surgical upsert + stats-pruned range scan (round 6)
-    fl.upsert("px", spark.createDataFrame([("A", d, 9.0)], schema))
-    cur = fl._current_gen("px")
+    cur = cat._current_gen("px")
     print(
-        "  after surgical upsert:",
-        sorted((r.ticker, r.close) for r in fl.table("px").collect()),
-        f"(manifest {cur} references {len(fl._fl_manifest_files('px', cur))} files)",
+        "  after merge:",
+        sorted((r.ticker, r.close) for r in cat.table("px").collect()),
+        f"(manifest {cur} references {len(cat._fl_manifest_files('px', cur))} files)",
     )
-    rng = fl.scan_pruned("px", close=("between", 1.5, 10.0))
+    rng = cat.scan_pruned("px", close=("between", 5.0, 20.0))
     print(
-        "  range-pruned scan close in [1.5, 10]:",
+        "  range-pruned scan close in [5, 20]:",
         sorted(r.ticker for r in rng.collect()),
         f"reading {len(rng.inputFiles())} file(s)",
     )
+    cat.add_column("px", T.StructField("volume", T.DoubleType()))
+    print("  evolved columns:", cat.table("px").columns)
 
     print("== 2. JSONL ingest with quarantine ==")
     doc_schema = T.StructType(

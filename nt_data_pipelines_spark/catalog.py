@@ -27,10 +27,12 @@ Spark-first design:
   this would be a metastore; the contract is identical).
 
 All file mutations go through the Hadoop FileSystem API, so the same
-code runs on file://, hdfs://, or s3a:// roots (on S3 the staging
-rename is a copy — a manifest-based commit like Delta's would remove
-that; the dedup plan itself is unchanged). Table metadata stays in a
-driver-local JSON sidecar standing in for a metastore.
+code runs on file://, hdfs://, or s3a:// roots. Two commit protocols
+(``commit_mode``): ``rename`` swaps hive-layout directories, atomic
+where FS rename is (posix, HDFS); ``filelist`` commits a one-object
+manifest listing the table's files, Delta's log shape, atomic on
+object stores too. The dedup plan is the same in both. Table metadata
+stays in a driver-local JSON sidecar standing in for a metastore.
 """
 
 from __future__ import annotations
@@ -58,7 +60,7 @@ KEEP_MANIFESTS = 10  # manifest-log history margin retained by GC
 # the oldest retained generation's checkpoint).
 FL_CHECKPOINT_INTERVAL = 10
 # Schemes with no atomic exclusive-create through the Hadoop FS API —
-# manifest/filelist catalogs on these require an ExclusiveCommitter.
+# filelist catalogs on these require an ExclusiveCommitter.
 OBJECT_STORE_SCHEMES = ("s3", "s3a", "s3n", "gs", "abfs", "abfss", "oss", "wasb", "wasbs")
 # filelist mode records per-file min/max for the partition keys PLUS
 # the first N other eligible scalar columns (Delta's
@@ -99,39 +101,34 @@ class Catalog:
         time_travel: int = 0,
         committer=None,
     ):
-        """``commit_mode`` picks the full-rewrite commit protocol:
+        """``commit_mode`` picks the commit protocol:
 
-        - ``"rename"`` (default): rename-aside commit — atomic on
+        - ``"rename"`` (default): hive-layout table dir, appends write
+          into it, full rewrites commit rename-aside — atomic on
           HDFS/posix where FS rename is atomic; see _rewrite_table.
-        - ``"manifest"``: generation dirs + a one-file manifest commit
-          (the Delta/Iceberg-log idea): each rewrite lands in a fresh
-          ``<table>.g<N>`` dir, then commits by creating manifest file
-          ``N.json`` — a single small-object write, atomic on S3-class
-          stores where rename is copy+delete. Readers resolve the max
-          valid manifest; a crashed commit leaves garbage, never a
-          torn table.
+          What the DAG runs.
+        - ``"filelist"``: the Delta-log tier. Each commit creates one
+          manifest file ``N.json`` listing the table's FILES — a
+          single small-object write, atomic on S3-class stores where
+          rename is copy+delete. Appends write a fresh batch dir and
+          commit a manifest referencing old + new files, so every
+          append is a snapshot; rewrites commit a manifest referencing
+          only the staged files, so readers of older snapshots keep
+          their exact file set. Readers resolve the max valid
+          manifest; a crashed commit leaves garbage, never a torn
+          table. GC removes batch dirs no retained manifest
+          references.
 
-        - ``"filelist"``: the Delta-log tier. Manifests list FILES,
-          not directories: appends write a fresh batch dir and commit
-          a manifest referencing old + new files (one small-object
-          write — appends become atomic, snapshot-able commits, fixing
-          manifest mode's append-mutates-generation caveat); rewrites
-          commit a manifest referencing only the staged files, so
-          readers of older snapshots keep their exact file set. GC
-          removes batch dirs no retained manifest references.
-
-        ``time_travel`` (manifest/filelist modes) keeps that many
-        SUPERSEDED generations readable via :meth:`table_at` /
-        :meth:`history`. In manifest mode each retained generation is
-        a full table copy; in filelist mode retained generations SHARE
-        unchanged files (append-mostly tables retain history almost
-        for free — the Delta economics). Retention is opt-in and
-        bounded by ``KEEP_MANIFESTS``; the default 0 GCs superseded
-        data at the next rewrite commit.
+        ``time_travel`` (filelist mode) keeps that many SUPERSEDED
+        generations readable via :meth:`table_at` / :meth:`history`.
+        Retained generations SHARE unchanged files (append-mostly
+        tables retain history almost for free — the Delta economics).
+        Retention is opt-in and bounded by ``KEEP_MANIFESTS``; the
+        default 0 GCs superseded data at the next commit.
 
         ``committer`` (an :class:`~nt_data_pipelines_spark.committers.
         ExclusiveCommitter`) overrides the manifest-commit primitive.
-        Required when a manifest/filelist catalog is rooted on an
+        Required when a filelist catalog is rooted on an
         object store (s3a://, gs://, ...): those stores have no atomic
         exclusive-create — S3A "rename" is copy+delete, so two racing
         writers can both win a generation and one acknowledged commit
@@ -142,22 +139,18 @@ class Catalog:
         such a catalog raises ``ValueError`` here rather than racing
         quietly in production.
         """
-        if commit_mode not in ("rename", "manifest", "filelist"):
+        if commit_mode not in ("rename", "filelist"):
             raise ValueError(
-                f"commit_mode must be rename|manifest|filelist, got {commit_mode!r}"
+                f"commit_mode must be rename|filelist, got {commit_mode!r}"
             )
         if type(time_travel) is not int or not 0 <= time_travel < KEEP_MANIFESTS:
             raise ValueError(
                 f"time_travel must be an int in [0, {KEEP_MANIFESTS}), got {time_travel!r}"
             )
         if time_travel and commit_mode == "rename":
-            raise ValueError("time_travel requires commit_mode='manifest' or 'filelist'")
+            raise ValueError("time_travel requires commit_mode='filelist'")
         scheme = root.split("://", 1)[0] if "://" in root else "file"
-        if (
-            committer is None
-            and commit_mode in ("manifest", "filelist")
-            and scheme in OBJECT_STORE_SCHEMES
-        ):
+        if committer is None and commit_mode == "filelist" and scheme in OBJECT_STORE_SCHEMES:
             # The loud refusal: manifest commits need an atomic
             # exclusive-create, and object stores only offer one via
             # conditional PUT (S3 If-None-Match, GCS
@@ -231,8 +224,7 @@ class Catalog:
         with self._lock:
             payload = json.dumps(self._state, indent=2)
             if self._uri_root:
-                scheme = self.root.split("://", 1)[0]
-                if scheme in ("s3", "s3a", "s3n", "gs", "abfs", "abfss", "oss", "wasb", "wasbs"):
+                if self.root.split("://", 1)[0] in OBJECT_STORE_SCHEMES:
                     # object stores: create+write IS a single PUT uploaded
                     # at close, so a crash mid-write leaves the OLD object
                     # — direct overwrite-create is the atomic choice there
@@ -281,7 +273,7 @@ class Catalog:
     def _path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
-    # ---- manifest commit (commit_mode="manifest") ----
+    # ---- manifest log: the filelist commit primitives ----
     def _manifest_dir(self, name: str) -> str:
         return self._path(name) + "._manifest"
 
@@ -321,23 +313,6 @@ class Catalog:
         gens = self._manifest_gens(name)
         return (gens[-1] if gens else -1) + 1
 
-    def _gen_dir(self, name: str, gen: int) -> str:
-        return self._path(name) if gen < 0 else f"{self._path(name)}.g{gen}"
-
-    def _gen_data_dir(self, name: str, gen: int) -> str:
-        """Resolve a generation's DATA directory through its manifest.
-
-        Writers stage into uniquely-named dirs (``<t>.g<N>-<uid>``) so
-        two racing writers can never overwrite each other's staged
-        files; the manifest records which dir won. Legacy manifests
-        without a ``dir`` field fall back to the derived name."""
-        if gen < 0:
-            return self._path(name)
-        doc = self._read_manifest(name, gen)
-        if doc and isinstance(doc.get("dir"), str):
-            return os.path.join(self.root, doc["dir"])
-        return self._gen_dir(name, gen)
-
     @staticmethod
     def _wraps_java_class(e: Exception, suffix: str, fallback: bool) -> bool:
         """Whether a py4j error wraps a Java exception class ending in
@@ -366,20 +341,6 @@ class Catalog:
         return cls._wraps_java_class(
             e, "FileAlreadyExistsException", "exist" in str(e).lower()
         )
-
-    @staticmethod
-    def _parse_gen(basename: str) -> int | None:
-        """Generation number from a data-dir basename
-        (``t.g3`` or ``t.g3-ab12cd34``), None if unparseable."""
-        marker = basename.rfind(".g")
-        if marker < 0:
-            return None
-        tail = basename[marker + 2 :]
-        tail = tail.split("-", 1)[0]
-        try:
-            return int(tail)
-        except ValueError:
-            return None
 
     @classmethod
     def _is_not_found(cls, e: Exception) -> bool:
@@ -413,7 +374,7 @@ class Catalog:
         return doc if isinstance(doc, dict) and doc.get("generation") == gen else None
 
     def _commit_manifest(
-        self, name: str, gen: int, dir_name: str | None = None,
+        self, name: str, gen: int,
         files: list[str] | None = None, file_stats: dict | None = None,
         add: list[str] | None = None, remove: list[str] | None = None,
         add_stats: dict | None = None,
@@ -454,8 +415,6 @@ class Catalog:
                 f"generation {gen} of {name!r} was committed by another writer"
             )
         doc: dict = {"generation": gen}
-        if dir_name is not None:
-            doc["dir"] = dir_name
         if files is not None:
             # checkpoint form: the complete file set (and stats) as of
             # this generation — resolution starts replay here
@@ -527,15 +486,6 @@ class Catalog:
             raise ConcurrentWriteError(
                 f"generation {gen} of {name!r} was committed by another writer"
             )
-
-    def _data_path(self, name: str) -> str:
-        """Where the table's files live RIGHT NOW. In manifest mode
-        this resolves through the manifest log (one LIST per call —
-        a metastore would cache this on a real deployment); in rename
-        mode it is the plain table dir."""
-        if self.commit_mode == "manifest":
-            return self._gen_data_dir(name, self._current_gen(name))
-        return self._path(name)
 
     # ---- filelist commit protocol (commit_mode="filelist") ----
     def _fl_root(self, name: str) -> str:
@@ -861,11 +811,11 @@ class Catalog:
         lost race deletes the staged dir and surfaces the OCC signal
         (the caller recomputes against the winner's rows).
 
-        The target gen is pinned BEFORE the (long) staging write, like
-        manifest mode: a rival that commits while our Spark job runs
-        takes our pinned number, our exclusive create then collides,
-        and the OCC retry recomputes with the rival's rows — allocating
-        after the write would silently supersede the rival instead.
+        The target gen is pinned BEFORE the (long) staging write: a
+        rival that commits while our Spark job runs takes our pinned
+        number, our exclusive create then collides, and the OCC retry
+        recomputes with the rival's rows — allocating after the write
+        would silently supersede the rival instead.
         ``target_gen`` lets a caller that pinned EARLIER (the surgical
         paths, which read their base manifest between pin and
         fallback) keep its pin — re-pinning here would let a rival
@@ -967,8 +917,8 @@ class Catalog:
         g = self._current_gen(name) if gen is None else gen
         schema = self._with_ingest(meta.struct)
         if g < 0:
-            # pre-manifest state: a table written under rename/manifest
-            # mode being reopened as filelist — read the plain dir so
+            # pre-manifest state: a table written under rename mode
+            # being reopened as filelist — read the plain dir so
             # the migration path shows the data instead of an empty
             # table (the first filelist append imports these files
             # into manifest 0's base)
@@ -1091,7 +1041,7 @@ class Catalog:
         import re as _re
 
         # commit/GC paths derive sibling paths by SUFFIX (<t>.old,
-        # <t>.staging, <t>.g<N>, <t>.data, <t>._manifest) and delete
+        # <t>.staging, <t>.compact, <t>.data, <t>._manifest) and delete
         # them — a table named like another's reserved sibling would be
         # silently destroyed by that table's maintenance. Dots and
         # slashes are therefore refused outright.
@@ -1124,12 +1074,10 @@ class Catalog:
     def _bootstrap_write(self, name: str, df: DataFrame) -> None:
         """create()'s initial empty materialization. Nothing committed
         exists yet, so a plain write IS crash-safe here (worst case the
-        caller retries create) — and manifest mode must start in its
-        documented pre-manifest plain state (history() empty until the
-        first rewrite). Filelist mode commits generation 0 so history
-        starts at creation, per its contract. User-level overwrites
-        (:meth:`insert` mode='overwrite') instead always route through
-        the crash-safe full rewrite in :meth:`_write`."""
+        caller retries create). Filelist mode commits generation 0 so
+        history starts at creation, per its contract. User-level
+        overwrites (:meth:`insert` mode='overwrite') instead always
+        route through the crash-safe full rewrite in :meth:`_write`."""
         if self.commit_mode == "filelist":
             self._rewrite_table_filelist(name, df)
             return
@@ -1333,13 +1281,9 @@ class Catalog:
             }
 
     def _delete_all_data(self, name: str) -> None:
-        """Remove every artifact of a table: the plain dir, and in
-        manifest mode all generation dirs + the manifest log."""
+        """Remove every artifact of a table: the plain dir, and the
+        filelist batch dirs + manifest log."""
         self._fs_delete(self._path(name))
-        fs, _ = self._hfs(self.root)
-        jvm = self.spark._jvm
-        for st in fs.globStatus(jvm.org.apache.hadoop.fs.Path(self._path(name) + ".g*")) or []:
-            fs.delete(st.getPath(), True)
         self._fs_delete(self._fl_root(name))
         self._fs_delete(self._manifest_dir(name))
 
@@ -1352,11 +1296,9 @@ class Catalog:
         if mode == "overwrite":
             # EVERY mode routes overwrites through the crash-safe full
             # rewrite: a raw Spark Overwrite deletes the destination
-            # before its job commits, leaving no complete copy (rename
-            # mode) or tearing a committed generation that time travel
-            # still references (manifest mode). The data is independent
-            # of the base, so a lost filelist commit race just re-pins
-            # and retries — no recompute.
+            # before its job commits, leaving no complete copy. The data
+            # is independent of the base, so a lost filelist commit race
+            # just re-pins and retries — no recompute.
             self._with_occ_retry(name, lambda: self._rewrite_table(name, df))
             return
         if self.commit_mode == "filelist":
@@ -1366,19 +1308,12 @@ class Catalog:
             return
         meta = self._meta(name)
         writer = df.write.mode(mode)
-        # Hive partition layout in EVERY commit mode. Manifest
-        # generations used to keep a uniform unpartitioned layout —
-        # which silently dropped partition pruning exactly on the
-        # S3-class stores manifest mode targets. Uniformity holds as
-        # long as every writer into a generation dir partitions the
-        # same way: appends land under the current generation's
-        # year=.../ subdirs and rewrites lay fresh generation dirs out
-        # hive-style too (_rewrite_table_manifest). A year-filtered
-        # scan then prunes at file-listing time in both modes
-        # (test_manifest_scan_prunes_partitions pins the plan).
+        # rename mode appends into the live dir's hive year=.../
+        # subdirs (rewrites keep that layout too, _rewrite_table), so a
+        # year-filtered scan prunes at file-listing time
         if meta.partition_keys:
             writer = writer.partitionBy(*meta.partition_keys)
-        writer.parquet(self._data_path(name))
+        writer.parquet(self._path(name))
         self._refresh(name)
 
     def _refresh(self, name: str) -> None:
@@ -1388,7 +1323,7 @@ class Catalog:
         if self.commit_mode == "filelist":
             self.spark.catalog.refreshByPath(self._fl_root(name))
             return
-        self.spark.catalog.refreshByPath(self._data_path(name))
+        self.spark.catalog.refreshByPath(self._path(name))
 
     def insert(self, name: str, df: DataFrame, mode: str = "append") -> int:
         """Append rows; stamps a monotone _ingest_seq for upsert
@@ -1439,10 +1374,10 @@ class Catalog:
             expect = base[1] + 1 if base[0] == "gen" else None
             # the post-probe re-check closes the probe-window TOCTOU for
             # BOTH token kinds: filelist re-checks the OCC generation,
-            # dir tokens (rename/manifest) re-run the listing + write-
-            # UUID check — a rival append landing between the first
-            # undisturbed check and the probe's snapshot read carries
-            # another ingest seq, so the probe would never examine it
+            # rename's dir token re-runs the listing + write-UUID check
+            # — a rival append landing between the first undisturbed
+            # check and the probe's snapshot read carries another
+            # ingest seq, so the probe would never examine it
             if not self._batch_dup_probe(name, seq) and (
                 self._current_gen(name) == expect
                 if expect is not None
@@ -1521,12 +1456,11 @@ class Catalog:
                 if self._holds_rows(name, [self._fl_abs(f) for f in files]):
                     return None
             return ("gen", gen)
-        # rename / manifest: the live data dir. rename mode is single-
-        # writer by contract (its rewrite commit has no OCC either);
-        # manifest appends are additionally guarded by the gen + write-
-        # UUID checks in _upsert_base_undisturbed.
-        ddir = self._data_path(name)
-        fs, p = self._hfs(ddir)
+        # rename: the live table dir. rename mode is single-writer by
+        # contract (its rewrite commit has no OCC either); appends are
+        # still guarded by the write-UUID check in
+        # _upsert_base_undisturbed.
+        fs, p = self._hfs(self._path(name))
         if not fs.exists(p):
             return None
         listing = self._list_parquet_recursive(fs, p)
@@ -1534,8 +1468,7 @@ class Catalog:
             return None
         if self._holds_rows(name, [f for f, _ in listing]):
             return None
-        gen = self._current_gen(name) if self.commit_mode == "manifest" else -1
-        return ("dir", frozenset(f for f, _ in listing), gen)
+        return ("dir", frozenset(f for f, _ in listing))
 
     def _holds_rows(self, name: str, paths: list[str]) -> bool:
         """Whether any of the table's committed data files ``paths``
@@ -1570,10 +1503,8 @@ class Catalog:
             # commit, or even a torn manifest burning a number, pushes
             # ours past base+1 and we fall back to the full optimize)
             return self._current_gen(name) == token[1] + 1
-        _, pre_files, gen0 = token
-        if self.commit_mode == "manifest" and self._current_gen(name) != gen0:
-            return False  # a rival rewrite committed a new generation
-        fs, p = self._hfs(self._data_path(name))
+        _, pre_files = token
+        fs, p = self._hfs(self._path(name))
         if not fs.exists(p):
             return False
         current = {path for path, _ in self._list_parquet_recursive(fs, p)}
@@ -1621,7 +1552,8 @@ class Catalog:
         ``build`` receives the current full table (ingest bookkeeping
         included) and returns the rows to keep/transform; the result is
         committed through the same crash-safe rewrite path as
-        ``optimize`` (rename-aside or manifest, per ``commit_mode``).
+        ``optimize`` (rename-aside or a filelist manifest commit, per
+        ``commit_mode``).
         The transform must preserve the table's schema — deletes are
         filters/anti-joins, so this is the row-level DELETE primitive.
         Losing a manifest-commit race recomputes ``build`` against the
@@ -1707,10 +1639,9 @@ class Catalog:
         commit. Scale shape: the source is typically an incremental
         batch orders of magnitude smaller than the table, so the
         duplicate-key probe and the anti-join against target keys are
-        cheap; the commit itself is the table rewrite (file-level
-        Delta-style logs that rewrite only touched files are the next
-        tier, out of scope for this directory-manifest catalog — same
-        trade documented on ``optimize``).
+        cheap. In rename mode the commit is the full table rewrite; in
+        filelist mode it rewrites only the files holding a matched key
+        (:meth:`_fl_apply_changes`).
         """
         meta = self._meta(name)
         keys = [on] if isinstance(on, str) else list(on or meta.primary_keys)
@@ -1776,9 +1707,7 @@ class Catalog:
         """:meth:`table_at` with last-write-wins primary-key dedup —
         the state a generation RESOLVES to (see changes_between)."""
         if self.commit_mode == "rename":
-            raise ValueError(
-                "changes_between() requires commit_mode='manifest' or 'filelist'"
-            )
+            raise ValueError("changes_between() requires commit_mode='filelist'")
         meta = self._meta(name)
         pks = meta.primary_keys
         if not pks:
@@ -1788,19 +1717,9 @@ class Catalog:
                 f"generation {generation} of {name!r} is not readable "
                 "(never committed, or GC'd — raise time_travel to retain more)"
             )
-        if self.commit_mode == "filelist":
-            raw = self._fl_read(name, generation)
-        else:
-            ddir = self._gen_data_dir(name, generation)
-            fs, p = self._hfs(ddir)
-            if not fs.exists(p):
-                raise LookupError(
-                    f"generation {generation} of {name!r} data was GC'd — "
-                    "raise time_travel to retain more"
-                )
-            raw = self.spark.read.schema(self._with_ingest(meta.struct)).parquet(ddir)
         return (
-            raw.withColumn("__rn", F.row_number().over(self._lww_window(meta)))
+            self._fl_read(name, generation)
+            .withColumn("__rn", F.row_number().over(self._lww_window(meta)))
             .filter(F.col("__rn") == 1)
             .select(*[f.name for f in meta.struct.fields])
         )
@@ -2145,7 +2064,7 @@ class Catalog:
         # legacy pre-manifest filelist state falls through to the plain
         # directory listing below — table() shows those rows, so
         # data_files()/compact() must see their files too
-        fs, root = self._hfs(self._data_path(name))
+        fs, root = self._hfs(self._path(name))
         out: list[tuple[str, int]] = []
         stack = [root]
         while stack:
@@ -2280,81 +2199,51 @@ class Catalog:
             preserve_layout=True,
         )
 
-    # ---- time travel (manifest mode) ----
+    # ---- time travel (filelist mode) ----
     def history(self, name: str) -> list[dict]:
-        """Readable snapshots, oldest first: ``[{"generation", "dir"}]``.
+        """Readable snapshots, oldest first: ``[{"generation",
+        "n_files"}]``.
 
-        Only generations whose manifest AND data directory both survive
-        GC appear — with ``time_travel=N`` that is the current
-        generation plus up to N predecessors. Snapshot granularity is
-        the REWRITE (optimize/rewrite/merge): appends land inside the
-        then-current generation dir, so a historical generation reads
-        as the table just before the next rewrite, not just after its
-        own. (Append-level snapshots need file-set manifests — the
-        Delta-log tier this catalog deliberately stops short of.)
-        A manifest-mode table that has never been rewritten has NO
-        generations yet — its live state (readable via :meth:`table`)
-        becomes snapshot 0 at the first optimize/rewrite/merge commit
-        — so ``history`` returns an empty list until then. In filelist
-        mode EVERY commit (appends included) is a generation, so
-        history starts at table creation.
+        EVERY commit (appends included) is a generation, so history
+        starts at table creation. Only generations whose manifest
+        resolves and whose files survive GC appear — with
+        ``time_travel=N`` that is the current generation plus up to N
+        predecessors.
         """
         if self.commit_mode == "rename":
-            raise ValueError("history() requires commit_mode='manifest' or 'filelist'")
+            raise ValueError("history() requires commit_mode='filelist'")
         self._meta(name)
         cur = self._current_gen(name)  # one manifest-dir LIST
         out = []
         for g in range(max(0, cur - KEEP_MANIFESTS), cur + 1):
-            doc = self._read_manifest(name, g)  # one read per generation
-            if doc is None:
-                continue
-            if self.commit_mode == "filelist":
-                resolved = self._fl_resolve(name, g)
-                if resolved is None:
-                    continue  # delta with no surviving checkpoint base
-                files = resolved[0]
-                try:
-                    readable = not files or self._fl_snapshot_readable(name, g, files)
-                except LookupError:
-                    # readability unverifiable (a torn RETAINED gen
-                    # blocks the keep-set): a LISTING skips the row —
-                    # same treatment as a torn gen itself — while
-                    # table_at/_fl_read keep the loud raise
-                    readable = False
-                if readable:
-                    out.append({"generation": g, "n_files": len(files)})
-                continue
-            dir_name = (
-                doc["dir"] if isinstance(doc.get("dir"), str)
-                else os.path.basename(self._gen_dir(name, g))
-            )
-            fs, p = self._hfs(os.path.join(self.root, dir_name))
-            if fs.exists(p):
-                out.append({"generation": g, "dir": dir_name})
+            resolved = self._fl_resolve(name, g)
+            if resolved is None:
+                continue  # torn/GC'd, or a delta with no surviving base
+            files = resolved[0]
+            try:
+                readable = not files or self._fl_snapshot_readable(name, g, files)
+            except LookupError:
+                # readability unverifiable (a torn RETAINED gen blocks
+                # the keep-set): a LISTING skips the row — same
+                # treatment as a torn gen itself — while
+                # table_at/_fl_read keep the loud raise
+                readable = False
+            if readable:
+                out.append({"generation": g, "n_files": len(files)})
         return out
 
     def table_at(self, name: str, generation: int) -> DataFrame:
         """The table as of ``generation`` (see :meth:`history` for the
         snapshot semantics and retention rules)."""
         if self.commit_mode == "rename":
-            raise ValueError("table_at() requires commit_mode='manifest' or 'filelist'")
+            raise ValueError("table_at() requires commit_mode='filelist'")
         meta = self._meta(name)
         if self._read_manifest(name, generation) is None:
             raise LookupError(
                 f"generation {generation} of {name!r} is not readable "
                 "(never committed, or GC'd — raise time_travel to retain more)"
             )
-        if self.commit_mode == "filelist":
-            df = self._fl_read(name, generation)
-            return df.select(*[f.name for f in meta.struct.fields])
-        ddir = self._gen_data_dir(name, generation)
-        fs, p = self._hfs(ddir)
-        if not fs.exists(p):
-            raise LookupError(
-                f"generation {generation} of {name!r} data was GC'd — "
-                "raise time_travel to retain more"
-            )
-        df = self.spark.read.schema(self._with_ingest(meta.struct)).parquet(ddir)
+        df = self._fl_read(name, generation)
         return df.select(*[f.name for f in meta.struct.fields])
 
     # ---- optimize (PK dedup, last write wins) ----
@@ -2380,23 +2269,16 @@ class Catalog:
         # alone would pick an arbitrary survivor.
         w = self._lww_window(meta)
         if self.commit_mode == "filelist" and self._current_gen(name) >= 0:
-            # File-level incremental OPTIMIZE — the Delta shape the
-            # directory-manifest modes cannot do (see the manifest
-            # branch below): only files holding a copy of a duplicated
-            # key are rewritten; every clean file carries over BY
-            # REFERENCE in the next manifest.
+            # File-level incremental OPTIMIZE (the Delta shape): only
+            # files holding a copy of a duplicated key are rewritten;
+            # every clean file carries over BY REFERENCE in the next
+            # manifest.
             self._optimize_filelist_incremental(name, meta, pks, w)
-        elif meta.partition_keys and self.commit_mode in ("manifest", "filelist"):
-            # The dirty-partition dynamic overwrite mutates the CURRENT
-            # generation dir in place — outside the manifest commit
-            # protocol, so a crash mid-overwrite would tear a committed
-            # generation. Route through the atomic full-table manifest
-            # rewrite instead: correctness over incremental compaction
-            # cost in manifest mode, whose log entries are DIRECTORIES.
-            # (Filelist mode's entries are files, so it takes the
-            # incremental branch above; a filelist table still in its
-            # legacy pre-manifest state lands here too — the full
-            # rewrite doubles as its migration.)
+        elif meta.partition_keys and self.commit_mode == "filelist":
+            # A partitioned filelist table still in its legacy
+            # pre-manifest state: the full rewrite commits its first
+            # manifest, so it doubles as the migration (the dirty-
+            # partition overwrite below would stay outside the log).
             if not dup_keys.limit(1).count():
                 return
             deduped = (
@@ -2695,7 +2577,7 @@ class Catalog:
             staged.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*meta.partition_keys)
-            .parquet(self._data_path(name))
+            .parquet(self._path(name))
         )
         self._fs_delete(staging)
         self._refresh(name)
@@ -2718,11 +2600,12 @@ class Catalog:
     def _rewrite_table(
         self, name: str, deduped: DataFrame, preserve_layout: bool = False
     ) -> None:
-        """Full-table rewrite via rename-aside commit.
+        """Full-table rewrite: filelist mode commits a manifest
+        (:meth:`_rewrite_table_filelist`), rename mode a rename-aside.
 
         ``preserve_layout`` only affects filelist mode (no hive dirs):
-        rename/manifest modes MUST partitionBy to keep the hive layout,
-        and within each hive dir the caller's task partitioning already
+        rename mode MUST partitionBy to keep the hive layout, and
+        within each hive dir the caller's task partitioning already
         dictates the file split.
 
         Protocol: write staging -> rename live aside (.old) -> rename
@@ -2733,12 +2616,9 @@ class Catalog:
         .old is garbage. The earlier delete-then-rename left a window
         where the only complete copy sat in .staging with nothing at
         the table path. Note FS rename is only atomic per-rename on
-        HDFS/posix; on S3 it's copy+delete, where a manifest-commit
-        layer is the real answer — documented in docs/SCALE.md.
+        HDFS/posix; on S3 it's copy+delete, so object stores use
+        filelist mode — documented in docs/SCALE.md.
         """
-        if self.commit_mode == "manifest":
-            self._rewrite_table_manifest(name, deduped)
-            return
         if self.commit_mode == "filelist":
             self._rewrite_table_filelist(name, deduped, preserve_layout)
             return
@@ -2770,115 +2650,6 @@ class Catalog:
         self._refresh(name)
         self._clear_dropped(name)
 
-    def _rewrite_table_manifest(self, name: str, deduped: DataFrame) -> None:
-        """Full-table rewrite committed by one manifest-file write.
-
-        Protocol: write the new data into a FRESH generation dir ->
-        create manifest ``gen.json`` (THE commit: one small-object
-        write, atomic even where rename is copy+delete) -> best-effort
-        GC of the previous generation. Crash windows: before the
-        manifest write, readers resolve the old generation and the
-        half-written dir is invisible garbage the next rewrite clears;
-        after it, the new generation is committed and at worst the old
-        dir lingers until the next rewrite's GC. No window tears the
-        table."""
-        import uuid
-
-        # _next_gen (not current+1): a TORN manifest at current+1 would
-        # otherwise deadlock every retry — burned generations are
-        # skipped, readers still resolve the highest valid manifest
-        gen = self._next_gen(name)
-        # Writer-unique staging dir: two racing writers targeting the
-        # same generation can never overwrite each other's files; the
-        # exclusive manifest create decides whose dir wins.
-        new_dir = f"{self._path(name)}.g{gen}-{uuid.uuid4().hex[:8]}"
-        meta = self._meta(name)
-        writer = deduped.write.mode("overwrite")
-        if meta.partition_keys:
-            # generations carry the hive layout so partition pruning
-            # survives manifest mode (appends into this dir partition
-            # identically — _write)
-            writer = writer.partitionBy(*meta.partition_keys)
-        try:
-            writer.parquet(new_dir)
-        except Exception as e:
-            # A winner one-or-more generations ahead may have GC'd our
-            # in-flight staging dir out from under the write (its GC
-            # only deletes dirs parsed strictly BELOW its own gen, so
-            # this needs the winner to be at gen+1 or later — i.e. we
-            # provably lost the race). Surface it as the OCC loss
-            # signal so _with_occ_retry recomputes, instead of a raw
-            # Hadoop IO error that would abort the whole optimize.
-            fs_probe, staged = self._hfs(new_dir)
-            if self._current_gen(name) >= gen and not fs_probe.exists(staged):
-                raise ConcurrentWriteError(
-                    f"staging dir for generation {gen} of {name!r} was garbage-"
-                    "collected by a concurrent writer that committed a later "
-                    "generation"
-                ) from e
-            raise
-        try:
-            self._commit_manifest(name, gen, os.path.basename(new_dir))
-        except ConcurrentWriteError:
-            # lost the race: our data was computed from a superseded
-            # state — it is garbage, not the next generation
-            self._fs_delete(new_dir)
-            raise
-        # GC superseded generations (incl. orphans a previous
-        # post-commit crash left behind); a crash here leaves garbage,
-        # never loss — the manifest already points at new_dir.
-        fs, _ = self._hfs(self.root)
-        jvm = self.spark._jvm
-        self._fs_delete(self._path(name))  # the pre-manifest plain dir
-        # Safety rules, both scheme-independent (basenames, never path
-        # strings — a URI/abspath compare once deleted EVERY gen):
-        #  - never delete a dir referenced by any valid manifest at or
-        #    above our generation (a faster concurrent writer may have
-        #    committed gen+1 while we were committing gen);
-        #  - only delete dirs whose parsed generation is strictly BELOW
-        #    our committed gen. A same-gen dir may belong to a loser
-        #    whose parquet write is STILL RUNNING — deleting it mid-
-        #    write crashes that writer with a raw IO error instead of
-        #    ConcurrentWriteError. The loser's own commit-failure
-        #    handler deletes its dir; if it crashed first, the orphan
-        #    parses < gen on the NEXT rewrite and is collected then.
-        latest = self._current_gen(name)
-        keep = {os.path.basename(new_dir)}
-        # time_travel widens the keep window below our own gen so the
-        # retained generations stay readable via table_at(); dirs whose
-        # manifest was never committed (orphan stagings) are still
-        # collected regardless of age.
-        for g in range(max(0, gen - self.time_travel), latest + 1):
-            doc = self._read_manifest(name, g)
-            if doc and isinstance(doc.get("dir"), str):
-                keep.add(doc["dir"])
-            else:
-                keep.add(os.path.basename(self._gen_dir(name, g)))
-        for st in fs.globStatus(jvm.org.apache.hadoop.fs.Path(self._path(name) + ".g*")) or []:
-            bn = st.getPath().getName()
-            parsed = self._parse_gen(bn)
-            if bn not in keep and parsed is not None and parsed < gen:
-                fs.delete(st.getPath(), True)
-        # Manifest-log GC: ordinary readers resolve the LATEST valid
-        # manifest and time travel reaches back at most time_travel
-        # (< KEEP_MANIFESTS) generations, so entries more than
-        # KEEP_MANIFESTS generations old are dead weight — drop them,
-        # keeping a margin so a concurrent reader mid-resolution never
-        # loses the file under its feet.
-        fs2, mdir = self._hfs(self._manifest_dir(name))
-        if fs2.exists(mdir):
-            for st in fs2.listStatus(mdir):
-                fname = st.getPath().getName()
-                if fname.endswith(".json"):
-                    try:
-                        g = int(fname[: -len(".json")])
-                    except ValueError:
-                        continue
-                    if g <= latest - KEEP_MANIFESTS:
-                        fs2.delete(st.getPath(), False)
-        self._refresh(name)
-        self._clear_dropped(name)
-
     def _recover(self, name: str) -> None:
         """Heal a crash inside :meth:`_rewrite_table`'s commit window.
 
@@ -2889,7 +2660,7 @@ class Catalog:
         removable — handled lazily by the next rewrite's cleanup.)
         """
         if self.commit_mode != "rename":
-            return  # manifest/filelist commits never leave a headless state
+            return  # filelist commits never leave a headless state
         fs, live = self._hfs(self._path(name))
         _, old = self._hfs(self._path(name) + ".old")
         if not fs.exists(live) and fs.exists(old):
@@ -2902,9 +2673,8 @@ class Catalog:
         self._recover(name)  # heal an interrupted rewrite commit, if any
         if self.commit_mode == "filelist":
             return self._fl_read(name)
-        df = self.spark.read.schema(self._with_ingest(meta.struct)).parquet(self._data_path(name))
         # partition columns come back typed by the declared schema
-        return df
+        return self.spark.read.schema(self._with_ingest(meta.struct)).parquet(self._path(name))
 
     def table(self, name: str) -> DataFrame:
         """Lazy scan, ingest bookkeeping hidden (the reference's bl.table).

@@ -1,4 +1,5 @@
-"""Pluggable exclusive-commit hooks for the catalog's manifest log.
+"""Pluggable exclusive-commit hooks for the catalog's manifest log
+(``commit_mode="filelist"``).
 
 The manifest commit (``Catalog._commit_manifest``) is the ONE write
 that must be exclusive: whoever creates ``<gen>.json`` first owns that
@@ -31,7 +32,7 @@ This module provides that hook:
   double-win the refusal in ``Catalog.__init__`` guards against and
   prove the conditional path closes it.
 
-A catalog opened in ``manifest``/``filelist`` mode on an object-store
+A catalog opened in ``filelist`` mode on an object-store
 scheme with no committer raises ``ValueError`` loudly rather than
 racing quietly — see ``Catalog.__init__``.
 

@@ -29,32 +29,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from nt_data_pipelines_spark.operators.text import words
+from nt_data_pipelines_spark.pin import pin
 
 DEFAULT_BUCKET_CAP = 64
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """Materialize a relation that the surrounding plan references
-    more than once.
-
-    The banded-minhash lineage (scan -> explode -> 16-way min
-    aggregation -> unpivot -> md5) is the expensive prefix of every
-    candidate generator, and Catalyst does NOT reuse it across the
-    branches of a self-join or a pairs/star union — each branch
-    re-executes the whole prefix (measured in the round-13 plan
-    captures: the exchange is not reused, so c1's signatures were
-    computed twice and the capped generator's windowed relation three
-    times). ``localCheckpoint(eager=False)`` computes the relation
-    once on first touch, persists MEMORY_AND_DISK, and truncates the
-    logical plan — the same stage-boundary idiom (and fault-tolerance
-    trade) documented at pipelines/corpus.CurationConfig.stage_boundary.
-    Lazy, so building a plan stays free of Spark jobs. The mechanism
-    is switchable for cluster deployments via ``NT_PIN_MODE``
-    (nt_data_pipelines_spark.pin).
-    """
-    from nt_data_pipelines_spark.pin import pin
-
-    return pin(df)
 
 
 class _DefaultCap(int):
@@ -143,7 +120,7 @@ def ngram_jaccard_pairs(
     """
     # pinned: both sides of the word self-join read the same exploded
     # relation — unpinned, the scan+explode+distinct runs twice
-    shingles = _pin(word_set(df, id_col, text_col))
+    shingles = pin(word_set(df, id_col, text_col))
     # set sizes per row (codegen), not a third pass over the shingle
     # relation — the exploded form is still needed below because the
     # word self-join IS the candidate generation here.
@@ -277,7 +254,7 @@ def _bounded_band_candidates(
     scale only).
     """
     if bucket_cap is None:
-        long = _pin(long)
+        long = pin(long)
         a = long.select("band", "band_hash", F.col(id_col).alias("id_a"))
         b = long.select("band", "band_hash", F.col(id_col).alias("id_b"))
         return (
@@ -291,7 +268,7 @@ def _bounded_band_candidates(
     wo = w.orderBy(*order).rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
-    sized = _pin(
+    sized = pin(
         long.select(
             F.col(id_col),
             "band",
@@ -331,7 +308,7 @@ def minhash_lsh_candidates(
     that is the whole point — at scale the shuffle key is the bucket,
     never the cross product.
     """
-    long = _pin(banded_minhash(df, id_col, text_col, num_hashes, bands))
+    long = pin(banded_minhash(df, id_col, text_col, num_hashes, bands))
     a = long.withColumnsRenamed({id_col: "id_a"})
     b_ = long.withColumnsRenamed({id_col: "id_b"})
     return (
@@ -424,7 +401,7 @@ def minhash_verified_dup_edges(
     # measured 0-row diff at sf1 and on the hot-bucket corpus).
     # Pinned: both sides of the edge join read the same relation, and
     # unpinned each side re-tokenizes the full corpus.
-    wsets = _pin(word_arrays(df, id_col, text_col))
+    wsets = pin(word_arrays(df, id_col, text_col))
     wa = wsets.select(F.col(id_col).alias("id_a"), F.col("__ws").alias("__wa"))
     wb = wsets.select(F.col(id_col).alias("id_b"), F.col("__ws").alias("__wb"))
     jac = (
@@ -523,7 +500,7 @@ def simhash_banded_pairs(
 
     chunk_cols = [_chunk(lo, hi).alias(f"c_{i}") for i, (lo, hi) in enumerate(bounds)]
     chunked = fingerprints.select(F.col(id_col), F.col(fp_col), *chunk_cols)
-    long = _pin(
+    long = pin(
         chunked.unpivot(
             ids=[id_col, fp_col],
             values=[f"c_{i}" for i in range(n_chunks)],
@@ -583,7 +560,7 @@ def minhash_jaccard_estimate(
     bucket_cap = _resolve_bucket_cap(bucket_cap, "minhash_jaccard_estimate")
     # referenced three times below (banding + both signature sides):
     # pinned so the shingle aggregation runs once, not three times
-    sigs = _pin(minhash_signatures(df, id_col, text_col, num_hashes))
+    sigs = pin(minhash_signatures(df, id_col, text_col, num_hashes))
     band_long = band_signatures(sigs, id_col, num_hashes, bands)
     cand = _bounded_band_candidates(band_long, id_col, bucket_cap)
     sa = sigs.select(
@@ -646,7 +623,7 @@ def containment_pairs(
     bucket_cap = _resolve_bucket_cap(bucket_cap, "containment_pairs")
     # pinned: referenced three times (sizes + both edge sides) — the
     # corpus would otherwise be re-tokenized per reference
-    wsets = _pin(word_arrays(df, id_col, text_col))
+    wsets = pin(word_arrays(df, id_col, text_col))
     sizes = wsets.select(id_col, _set_size(F.col("__ws")).alias("set_size"))
     long = banded_minhash(df, id_col, text_col, num_hashes, bands).join(
         sizes, id_col
@@ -797,7 +774,7 @@ def dedup_new_against_corpus(
     # state is never aggregated wholesale — and intersection/sizes
     # are codegen array ops. The explicit n_common >= 1 filter
     # reproduces the old inner common-join semantics exactly.
-    nw = _pin(
+    nw = pin(
         word_set(new_docs, id_col, text_col)
         .withColumnsRenamed({id_col: "id_new"})
         .groupBy("id_new")
@@ -1134,7 +1111,7 @@ def minhash_estimate_calibration(
     bucket_cap = _resolve_bucket_cap(bucket_cap, "minhash_estimate_calibration")
     # referenced three times (banding + both estimate sides): pinned so
     # the shingle aggregation runs once
-    sigs = _pin(minhash_signatures(df, id_col, text_col, num_hashes))
+    sigs = pin(minhash_signatures(df, id_col, text_col, num_hashes))
     band_long = band_signatures(sigs, id_col, num_hashes, bands)
     cand = _bounded_band_candidates(band_long, id_col, bucket_cap)
 
@@ -1158,7 +1135,7 @@ def minhash_estimate_calibration(
 
     # exact tier via per-row word arrays (see minhash_verified_dup_edges);
     # pinned: both edge sides read it
-    wsets = _pin(word_arrays(df, id_col, text_col))
+    wsets = pin(word_arrays(df, id_col, text_col))
     wa = wsets.select(F.col(id_col).alias("id_a"), F.col("__ws").alias("__wa"))
     wb = wsets.select(F.col(id_col).alias("id_b"), F.col("__ws").alias("__wb"))
     per_pair = (
@@ -1179,7 +1156,7 @@ def minhash_estimate_calibration(
     )
     # pinned: `total` re-aggregates `buckets`, so unpinned the whole
     # candidate+verify pipeline above would execute twice
-    buckets = _pin(
+    buckets = pin(
         per_pair.groupBy("err_bucket_16ths").agg(
             F.count(F.lit(1)).alias("n_pairs")
         )

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from nt_data_pipelines_spark.operators.text import _pin
+from nt_data_pipelines_spark.pin import pin
 
 
 def funnel_conversion(
@@ -42,14 +42,14 @@ def funnel_conversion(
     # survivor-count union below — unpinned, tier i's lineage
     # re-executes once per downstream step (O(steps^2) scans of the
     # event table for one funnel)
-    reach = _pin(
+    reach = pin(
         events.filter(F.col(type_col) == steps[0])
         .groupBy(user_col)
         .agg(F.min(ts_col).alias("__t"))
     )
     tiers = [reach]
     for step in steps[1:]:
-        reach = _pin(
+        reach = pin(
             events.filter(F.col(type_col) == step)
             .join(reach.select(user_col, "__t"), user_col)
             .filter(F.col(ts_col) > F.col("__t"))

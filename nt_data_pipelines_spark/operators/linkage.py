@@ -25,7 +25,7 @@ import warnings
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from nt_data_pipelines_spark.operators.text import _pin
+from nt_data_pipelines_spark.pin import pin
 
 DEFAULT_GRAM_DF = 1000
 
@@ -103,12 +103,12 @@ def fuzzy_string_pairs(
     t = F.col(text_col)
     # pinned: the gram-array build is read by the size frame, the
     # exploded blocking relation and (capped branch) both verify sides
-    base = _pin(
+    base = pin(
         df.select(F.col(id_col).alias("id"), _char_ngrams(t, ngram).alias("__g"))
     )
     sz = base.select("id", F.size("__g").cast("long").alias("n_g"))
     # pinned: self-joined (and df-counted in the capped branch)
-    g = _pin(base.select("id", F.explode("__g").alias("gram")))
+    g = pin(base.select("id", F.explode("__g").alias("gram")))
     if max_gram_df is None:
         pairs = (
             g.alias("a")
@@ -197,7 +197,7 @@ def edit_distance_pairs(
     max_gram_df = _resolve_gram_cap(max_gram_df, "edit_distance_pairs")
     # pinned: read by the exploded blocking relation and both string
     # sides of the verify join
-    base = _pin(
+    base = pin(
         df.select(
             F.col(id_col).alias("id"),
             F.col(text_col).alias("__s"),
@@ -215,7 +215,7 @@ def edit_distance_pairs(
         g = g.join(rare, "gram")
     # pinned: the blocking self-join reads g twice (its lineage also
     # carries the df-count join in the capped branch)
-    g = _pin(g)
+    g = pin(g)
     cand = (
         g.alias("a")
         .join(
@@ -283,12 +283,12 @@ def prefix_filtered_pairs(
     t = F.col(text_col)
     # pinned: read by the size frame, the exploded relation and both
     # verify sides
-    base = _pin(
+    base = pin(
         df.select(F.col(id_col).alias("id"), _char_ngrams(t, ngram).alias("__g"))
     )
     sz = base.select("id", F.size("__g").cast("long").alias("n_g"))
     # pinned: the df-count aggregate and the rank join both read it
-    g = _pin(base.select("id", F.explode("__g").alias("gram")))
+    g = pin(base.select("id", F.explode("__g").alias("gram")))
     dfreq = g.groupBy("gram").agg(F.count(F.lit(1)).alias("__df"))
     ranked = g.join(dfreq, "gram").withColumn(
         "__rk",
@@ -309,7 +309,7 @@ def prefix_filtered_pairs(
     )
     # pinned: the candidate join reads the prefix relation twice —
     # unpinned, the whole rank-window lineage executes per side
-    prefix = _pin(prefix)
+    prefix = pin(prefix)
     cand = (
         prefix.alias("a")
         .join(

@@ -33,7 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nt_data_pipelines_spark.operators.text import _pin, words
+from nt_data_pipelines_spark.operators.text import words
+from nt_data_pipelines_spark.pin import pin
 
 
 def unigram_logprob(
@@ -54,7 +55,7 @@ def unigram_logprob(
     """
     # pinned: the vocabulary count and the surprisal join both read
     # the exploded token relation
-    toks = _pin(
+    toks = pin(
         df.select(F.col(id_col), F.explode(words(text_col)).alias("word")).filter(
             F.col("word") != ""
         )
@@ -115,7 +116,7 @@ def bigram_logprob(
 
     # pinned: gram counts, prefix counts and the surprisal join all
     # read the exploded bigram relation
-    grams = _pin(
+    grams = pin(
         df.select(
             F.col(id_col), F.explode(_word_ngrams(text_col, 2)).alias("gram")
         ).withColumn("prefix", F.substring_index("gram", " ", 1))
@@ -173,7 +174,7 @@ def perplexity_band_filter(
         raise ValueError("need 0 <= lo_quantile < hi_quantile <= 1")
     # pinned: the quantile aggregate and the band filter both read the
     # scored relation — unpinned, the whole unigram pipeline runs twice
-    scored = _pin(
+    scored = pin(
         unigram_logprob(df, id_col, text_col).filter(F.col("n_tokens") > 0)
     )
     bounds = scored.agg(
@@ -232,7 +233,7 @@ def pmi_collocations(
         raise ValueError(f"min_count must be >= 1, got {min_count}")
     # pinned: four aggregates (pairs, both marginals, total) read the
     # exploded pair relation
-    grams = _pin(
+    grams = pin(
         df.select(F.explode(_word_ngrams(text_col, 2)).alias("gram")).select(
             F.substring_index("gram", " ", 1).alias("w1"),
             F.substring_index("gram", " ", -1).alias("w2"),

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from nt_data_pipelines_spark.operators.text import _pin
+from nt_data_pipelines_spark.pin import pin
 
 
 def as_double_array(col: Column | str) -> Column:
@@ -125,7 +125,7 @@ def lsh_near_dup_pairs(
     # pinned: the bucket self-join reads the signature relation (k
     # hyperplane dot products per row) twice; ditto the vector
     # projection for both verify sides
-    sig = _pin(lsh_signatures(corpus, id_col, vec_col, num_planes, dim))
+    sig = pin(lsh_signatures(corpus, id_col, vec_col, num_planes, dim))
     a = sig.select(F.col(id_col).alias("id_a"), "bucket")
     b = sig.select(F.col(id_col).alias("id_b"), "bucket")
     cand = (
@@ -134,7 +134,7 @@ def lsh_near_dup_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    vecs = _pin(corpus.select(F.col(id_col), as_double_array(vec_col).alias("__v")))
+    vecs = pin(corpus.select(F.col(id_col), as_double_array(vec_col).alias("__v")))
     va = vecs.select(F.col(id_col).alias("id_a"), F.col("__v").alias("vec_a"))
     vb = vecs.select(F.col(id_col).alias("id_b"), F.col("__v").alias("vec_b"))
     cos = F.round(cosine(F.col("vec_a"), F.col("vec_b")), 6) + 0.0
@@ -264,7 +264,7 @@ def banded_hyperplane_pairs(
         )
     # a generator cannot nest inside WHEN — evaluate the length guard
     # as a (always-true-or-throwing) filter, then explode
-    sig = _pin(
+    sig = pin(
         corpus.filter(guard.isNull())
         .select(F.col(id_col), F.explode(F.array(*band_rows)).alias("s"))
         .select(id_col, "s.band", "s.bucket")
@@ -277,7 +277,7 @@ def banded_hyperplane_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    vecs = _pin(corpus.select(F.col(id_col), as_double_array(vec_col).alias("__v")))
+    vecs = pin(corpus.select(F.col(id_col), as_double_array(vec_col).alias("__v")))
     va = vecs.select(F.col(id_col).alias("id_a"), F.col("__v").alias("vec_a"))
     vb = vecs.select(F.col(id_col).alias("id_b"), F.col("__v").alias("vec_b"))
     cos = F.round(cosine(F.col("vec_a"), F.col("vec_b")), 6) + 0.0
@@ -396,7 +396,7 @@ def _cap_hot_buckets(
         raise ValueError(f"bucket_cap must be >= 2, got {bucket_cap}")
     # pinned: the bucket-count aggregate and the join back both read
     # the signature relation
-    sig = _pin(sig)
+    sig = pin(sig)
     counts = sig.groupBy("bucket").agg(F.count(F.lit(1)).alias("__n"))
     groups = F.ceil(F.col("__n") / F.lit(bucket_cap)).cast("long")
     # md5, not xxhash64: the salt changes which pairs are candidates,
@@ -438,7 +438,7 @@ def knn_graph(
     cosine with dst-id tie-break (engine-stable).
     """
     edges = _knn_candidates(corpus, id_col, vec_col, num_planes, dim, bucket_cap)
-    vecs = _pin(corpus.select(F.col(id_col), as_double_array(vec_col).alias("__v")))
+    vecs = pin(corpus.select(F.col(id_col), as_double_array(vec_col).alias("__v")))
     va = vecs.select(F.col(id_col).alias("src_id"), F.col("__v").alias("va"))
     vb = vecs.select(F.col(id_col).alias("dst_id"), F.col("__v").alias("vb"))
     cand = (
@@ -468,7 +468,7 @@ def _knn_candidates(
     # pinned: the per-(bucket, salt) self-join reads the capped
     # signature relation twice (and the cap itself joins the raw
     # signatures against their bucket counts — pinned inside)
-    sig = _pin(
+    sig = pin(
         _cap_hot_buckets(
             lsh_signatures(corpus, id_col, vec_col, num_planes, dim), id_col, bucket_cap
         )

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from nt_data_pipelines_spark.pin import pin
+
 # Tiny public stopword lexicons (top function words per language).
 STOPWORD_LEXICON: dict[str, list[str]] = {
     "en": ["the", "a", "of", "and", "to", "in", "is", "it", "you", "that"],
@@ -28,21 +30,6 @@ STOPWORD_LEXICON: dict[str, list[str]] = {
 # A BPE-ish tokenizer regex: alphabetic runs, digit runs, single
 # non-alphanumeric marks. Compatible across Java regex and RE2.
 TOKEN_REGEX = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \\t\\n\\r]"
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """Materialize a relation the surrounding plan references more than
-    once — ``localCheckpoint(eager=False)``, computed on first touch,
-    persisted MEMORY_AND_DISK, logical plan truncated. Catalyst does
-    not reuse a subtree across the branches that reference it, so an
-    unpinned n-gram/tokenize lineage re-executes per reference (same
-    idiom and fault-tolerance trade as operators/dedup._pin and
-    pipelines/corpus.CurationConfig.stage_boundary). Mechanism
-    switchable for cluster deployments via ``NT_PIN_MODE``
-    (nt_data_pipelines_spark.pin)."""
-    from nt_data_pipelines_spark.pin import pin
-
-    return pin(df)
 
 
 def words(text: Column | str) -> Column:
@@ -484,7 +471,7 @@ def benchmark_contamination(
     # one gram-array pass over the corpus, pinned: the probe join and
     # the per-doc totals both read it — unpinned, the n-gram build
     # (regex/split + concat per position) runs twice over the corpus
-    garr = _pin(
+    garr = pin(
         corpus.select(F.col(id_col), F.array_distinct(grams).alias("__g"))
     )
     corpus_grams = garr.select(F.col(id_col), F.explode("__g").alias("gram"))
@@ -649,7 +636,7 @@ def bloom_contamination(
     grams = _word_ngrams(text_col, n)
     # one gram-array pass over the corpus, pinned (see
     # benchmark_contamination — probe + totals share it)
-    garr = _pin(
+    garr = pin(
         corpus.select(F.col(id_col), F.array_distinct(grams).alias("__g"))
     )
     corpus_grams = garr.select(F.col(id_col), F.explode("__g").alias("gram"))
@@ -722,7 +709,7 @@ def tfidf_top_terms(
     )
     # pinned: doc lengths, document frequencies and the score join all
     # read the per-(doc, word) count relation
-    wc = _pin(exploded.groupBy(id_col, "word").agg(F.count(F.lit(1)).alias("c")))
+    wc = pin(exploded.groupBy(id_col, "word").agg(F.count(F.lit(1)).alias("c")))
     doc_len = wc.groupBy(id_col).agg(F.sum("c").alias("n_words"))
     dfreq = wc.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
     tfidf6 = (
@@ -879,7 +866,7 @@ def bm25_scores(
     ws = words(text_col)
     # pinned: the corpus scalars and the term-frequency explode both
     # read the tokenized relation
-    docs = _pin(
+    docs = pin(
         df.select(F.col(id_col), ws.alias("__ws")).withColumn(
             "dl", F.size("__ws").cast("long")
         )
@@ -894,7 +881,7 @@ def bm25_scores(
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     # pinned: the per-term df aggregate and the score join both read tf
-    tf = _pin(tf)
+    tf = pin(tf)
     dft = tf.groupBy("word").agg(F.count(F.lit(1)).alias("dft"))
     avgdl = F.col("S").cast("double") / F.col("N")
     idf = F.log((F.col("N") - F.col("dft") + 0.5) / (F.col("dft") + 0.5) + 1)
@@ -934,7 +921,7 @@ def duplicated_ngram_fraction(
     # corpus-wide frequency shuffle (see gram_key: ~6x fewer key bytes).
     # Pinned: the frequency aggregate and the per-doc roll-up join both
     # read this relation — unpinned, the n-gram build runs twice.
-    grams = _pin(
+    grams = pin(
         df.select(
             F.col(id_col),
             F.explode(
@@ -1432,7 +1419,7 @@ def remove_duplicate_spans(
     ws = words(text_col)
     # pinned: referenced by the gram explosion, the position explosion
     # and the final rebuild join — one tokenize pass instead of three
-    base = _pin(
+    base = pin(
         df.select(F.col(id_col), ws.alias("__ws"), F.size(ws).alias("__nw"))
     )
 
@@ -1445,7 +1432,7 @@ def remove_duplicate_spans(
     # pinned: the repeated-gram count and the covered-position join
     # both read this relation — unpinned, the tokenize + per-position
     # gram hashing (the dominant per-row cost) runs twice
-    grams = _pin(
+    grams = pin(
         base.select(
             F.col(id_col),
             F.posexplode(

@@ -3,9 +3,9 @@
 Catalyst does not reuse a subtree across the branches that reference
 it — every self-join side, every "aggregate X then join X back", every
 frame feeding two sinks re-executes its full upstream lineage per
-reference. The engine pins such relations once (the ``_pin`` idiom in
-operators/dedup.py, operators/text.py, pipelines/runner.py, and the
-``stage_boundary`` machinery in pipelines/corpus.py).
+reference. The engine pins such relations once with :func:`pin` (the
+operators, the DAG runner, and the ``stage_boundary`` machinery in
+pipelines/corpus.py).
 
 The default pin — ``localCheckpoint(eager=False, MEMORY_AND_DISK)`` —
 computes the relation on first touch, truncates the logical plan (no
@@ -49,7 +49,13 @@ def pin_mode() -> str:
 
 def pin(df: DataFrame) -> DataFrame:
     """Materialize-once marker for a relation referenced more than once
-    downstream; mechanism per ``NT_PIN_MODE`` (module docstring)."""
+    downstream (a self-join's sides, an aggregate joined back, a frame
+    feeding two upserts): Catalyst would otherwise re-execute its whole
+    lineage per reference. Lazy — computed on first touch, so building
+    a plan runs no Spark job. The default ``localCheckpoint`` truncates
+    the plan and trades lineage for speed (a lost executor fails the
+    job); blocks are released with the session. Mechanism per
+    ``NT_PIN_MODE`` (module docstring)."""
     from pyspark import StorageLevel
 
     mode = pin_mode()

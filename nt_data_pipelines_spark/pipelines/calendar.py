@@ -4,9 +4,9 @@
   utils/calendar.py:8-12)
 - ``trading_date_range``: trailing-N trading dates via desc sort +
   limit (O3, utils/calendar.py:15-19)
-- ``freshness_gate``: the daily flows' T2 precondition — proceed only
-  when the calendar's last market date equals "yesterday"
-  (stock_prices_flow.py:135-144, repeated across every daily flow)
+
+The daily flows' T2 freshness gate (stock_prices_flow.py:135-144) lives
+in ``runner.daily_flow``, read off the same aggregate as its lookbacks.
 """
 
 from __future__ import annotations
@@ -27,9 +27,10 @@ def last_market_date(calendar: DataFrame, before: dt.date | None = None) -> dt.d
 def market_is_open(calendar: DataFrame, today: dt.date) -> bool:
     """True when ``today`` is a trading date (trading_flow.py:262-266).
 
-    Distinct from :func:`freshness_gate`: the trading flow runs on any
-    open market day (Monday trades using Friday's weights), while the
-    data flows gate on the calendar being ingested up to yesterday.
+    Distinct from the daily flows' freshness gate: the trading flow
+    runs on any open market day (Monday trades using Friday's
+    weights), while the data flows gate on the calendar being
+    ingested up to yesterday.
     Requires the calendar table to cover ``today`` (the S9 calendar
     ingestion loads the exchange schedule, which includes the current
     day) — an un-ingested calendar reads as closed, never as a trade.
@@ -41,13 +42,3 @@ def trading_date_range(calendar: DataFrame, window: int) -> DataFrame:
     """Last ``window`` trading dates (the incremental-slice lookback, T3)."""
     return calendar.select("date").distinct().orderBy(F.desc("date")).limit(window)
 
-
-def freshness_gate(calendar: DataFrame, today: dt.date) -> bool:
-    """True when yesterday was the most recent market date STRICTLY
-    BEFORE today — the daily flows skip their run otherwise (T2).
-
-    Bounded by ``today`` because the ingested calendar legitimately
-    covers today and future schedule dates (:func:`market_is_open`
-    REQUIRES it to) — an unbounded global max would then never equal
-    yesterday and the nightly DAG would silently stop forever."""
-    return last_market_date(calendar, before=today) == today - dt.timedelta(days=1)

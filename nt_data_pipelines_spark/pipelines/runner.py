@@ -19,6 +19,7 @@ slice (each stage keeps only ``date == end`` before upserting).
 
 from __future__ import annotations
 
+import datetime as dt
 from collections.abc import Callable
 from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 
@@ -29,6 +30,7 @@ from pyspark.sql import types as T
 
 from nt_data_pipelines_spark.catalog import Catalog
 from nt_data_pipelines_spark.config import FACTORS
+from nt_data_pipelines_spark.pin import pin
 from nt_data_pipelines_spark.pipelines import (
     calculate_alphas,
     calculate_benchmark_returns,
@@ -47,21 +49,6 @@ _D = T.DoubleType()
 _S = T.StringType()
 _DT = T.DateType()
 _I = T.IntegerType()
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """Materialize a relation consumed by more than one downstream
-    upsert — localCheckpoint(eager=False): computed on first touch,
-    persisted MEMORY_AND_DISK, logical plan truncated (no
-    InMemoryRelation re-planning under AQE; same idiom and
-    fault-tolerance trade as pipelines/corpus.CurationConfig.
-    stage_boundary). Blocks are released with the session; the flow
-    runs once per schedule tick, so no explicit unpersist. Mechanism
-    switchable for cluster deployments via ``NT_PIN_MODE``
-    (nt_data_pipelines_spark.pin)."""
-    from nt_data_pipelines_spark.pin import pin
-
-    return pin(df)
 
 
 def _fire_failure_hook(on_failure, exc: BaseException) -> None:
@@ -262,7 +249,7 @@ def _backfill_stages(
         # pinned: BOTH the loadings and idio-vol upserts materialize
         # `fitted` — unpinned, the rolling-OLS grouped-map kernel (the
         # flow's most expensive stage) executes twice
-        fitted = _pin(
+        fitted = pin(
             estimate_factor_model(
                 cat.table("stock_returns"), cat.table("etf_returns"), FACTORS, window
             )
@@ -283,7 +270,7 @@ def _backfill_stages(
     def benchmark():
         # pinned: the weights and returns upserts both read uni_ret —
         # unpinned, the full-panel universe x returns join runs twice
-        uni_ret = _pin(
+        uni_ret = pin(
             cat.table("universe")
             .join(
                 cat.table("stock_returns").select("date", "ticker", "return"),
@@ -364,20 +351,20 @@ def _lookback(cal: DataFrame, today, sizes: tuple[int, ...]):
     """``(end, starts)``: the last market date before ``today`` and, per
     lookback size n, the first of the last n market dates up to
     ``end`` (all of them when fewer than n exist) — one aggregate.
+    ``end`` and every start are None when no date precedes ``today``.
 
     Lookbacks are windows of COMPLETED market dates: the calendar
     covers today and future schedule dates, and an unbounded last-N
     would silently shift (or empty) every factor window."""
     d = F.sort_array(F.collect_set("date"), asc=False)
+    # get() is 0-based and NULL out of bounds; element_at raises on an
+    # empty array under ANSI
     row = (
         cal.filter(F.col("date") < F.lit(today))
         .agg(d.alias("d"))
         .select(
-            F.element_at("d", 1).alias("end"),
-            *[
-                F.element_at("d", F.least(F.lit(n), F.size("d"))).alias(f"s{n}")
-                for n in sizes
-            ],
+            F.get("d", 0).alias("end"),
+            *[F.get("d", F.least(F.lit(n), F.size("d")) - 1).alias(f"s{n}") for n in sizes],
         )
         .first()
     )
@@ -415,7 +402,7 @@ def _daily_stages(
 
     def factor_model():
         # pinned: both tail upserts materialize `fitted` (see backfill)
-        fitted = _pin(
+        fitted = pin(
             estimate_factor_model(
                 tail(cat.table("stock_returns"), 2 * window),
                 tail(cat.table("etf_returns"), 2 * window),
@@ -527,7 +514,10 @@ def daily_flow(
 ) -> bool:
     """The nightly incremental run (reference daily_*_flow semantics).
 
-    T2: skip unless yesterday was the last market date. T3: each stage
+    T2: skip unless yesterday was the last market date before
+    ``today`` (the calendar covers today and future schedule dates, so
+    the bound is what keeps the gate from closing forever); returns
+    whether the flow ran. T3: each stage
     recomputes over its trailing lookback (2xWINDOW for regressions,
     WINDOW for covariances, 21 for reversal) read through date-range
     filters — with year-partitioned tables Catalyst prunes the scan to
@@ -540,16 +530,13 @@ def daily_flow(
     full-history backfill values — that approximation is the
     reference's own (factor_model_flow.py:179-199).
     """
-    from nt_data_pipelines_spark.pipelines.calendar import freshness_gate
-
     cal = cat.table("calendar")
-    if not freshness_gate(cal, today):
-        return False
     try:
-        # bounded by today: the calendar covers future schedule dates,
-        # and the nightly flow processes data through the last
-        # COMPLETED market day, never a future one
+        # the gate and the lookback come from one aggregate: end is the
+        # last COMPLETED market day, never a future one
         end, starts = _lookback(cal, today, (2 * window, window, reversal_window))
+        if end != today - dt.timedelta(days=1):
+            return False
         _run_graph(
             spark,
             _daily_stages(cat, end, starts, window, half_life, reversal_window),

@@ -101,7 +101,7 @@ def _run_sequence(spark, tmp, mode, ops):
         assert rng == {k for k in model if 2 <= k <= 4}, ops
 
 
-@pytest.mark.parametrize("mode", ["rename", "manifest", "filelist"])
+@pytest.mark.parametrize("mode", ["rename", "filelist"])
 @given(ops=st.lists(OP, min_size=1, max_size=5))
 @settings(**_SETTINGS)
 def test_catalog_matches_model_under_random_ops(spark, tmp_path_factory, mode, ops):
@@ -109,7 +109,7 @@ def test_catalog_matches_model_under_random_ops(spark, tmp_path_factory, mode, o
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("mode", ["manifest", "filelist"])
+@pytest.mark.parametrize("mode", ["filelist"])
 @given(ops=st.lists(OP, min_size=6, max_size=14))
 @settings(
     max_examples=100,
@@ -117,7 +117,7 @@ def test_catalog_matches_model_under_random_ops(spark, tmp_path_factory, mode, o
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
 def test_catalog_matches_model_deep_histories(spark, tmp_path_factory, mode, ops):
-    """Deep profile (--runslow): 100 examples per manifest mode with
+    """Deep profile (--runslow): 100 examples in filelist mode with
     histories long enough that filelist runs routinely CROSS the
     checkpoint-cadence boundary (every commit is a generation, so a
     10-op sequence passes gen 10) — the surgical merge/delete/optimize

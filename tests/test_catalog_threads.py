@@ -28,7 +28,7 @@ from nt_data_pipelines_spark.catalog import INGEST_COL, Catalog
 SCHEMA = T.StructType(
     [T.StructField("k", T.IntegerType()), T.StructField("v", T.DoubleType())]
 )
-MODES = ("rename", "manifest", "filelist")
+MODES = ("rename", "filelist")
 
 
 def _content(cat, name):

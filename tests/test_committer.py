@@ -9,8 +9,8 @@ Three claims, each demonstrated rather than asserted:
    double-wins, and the full filelist concurrency fuzz (appenders vs
    rewriter vs vacuum) stays invariant-clean when every commit is
    arbitrated by the hook instead of the built-in hardlink path.
-3. A manifest/filelist catalog on an object-store scheme with no
-   committer refuses loudly at construction.
+3. A filelist catalog on an object-store scheme with no committer
+   refuses loudly at construction.
 """
 
 from __future__ import annotations
@@ -54,7 +54,7 @@ def _fake_batch(root: str, name: str, tag: str):
 
 
 @pytest.mark.parametrize("scheme", ["s3a", "s3", "gs", "abfss"])
-@pytest.mark.parametrize("mode", ["manifest", "filelist"])
+@pytest.mark.parametrize("mode", ["filelist"])
 def test_object_store_root_without_committer_refuses(spark, scheme, mode):
     with pytest.raises(ValueError, match="exclusive committer"):
         Catalog(spark, f"{scheme}://bucket/lake", commit_mode=mode)

@@ -57,8 +57,7 @@ def test_filelist_roundtrip_upsert_merge(spark, tmp_path):
 
 def test_filelist_appends_are_snapshots(spark, tmp_path):
     """The headline filelist win: EVERY commit — appends included —
-    is a time-travelable generation (manifest mode only snapshots
-    rewrites)."""
+    is a time-travelable generation, so history starts at creation."""
     cat = Catalog(spark, str(tmp_path / "fl"), commit_mode="filelist", time_travel=3)
     cat.create("m", SCHEMA, None, ["ticker", "date"], mode="replace")
     cat.insert("m", _rows(spark, [("A", D1, 1.0)]))
@@ -703,10 +702,9 @@ def test_scan_pruned_nan_stats_are_conservative(spark, tmp_path):
 
 def test_overwrite_insert_goes_through_crash_safe_rewrite(spark, tmp_path):
     """Regression (review finding): insert(mode='overwrite') must not
-    raw-Overwrite the live dir (rename mode) or a committed generation
-    dir (manifest mode) — both route through the full-rewrite commit,
-    and old snapshots stay intact."""
-    for mode, tt in (("rename", 0), ("manifest", 2), ("filelist", 2)):
+    raw-Overwrite the live dir (rename mode) — both modes route through
+    the full-rewrite commit, and filelist's old snapshots stay intact."""
+    for mode, tt in (("rename", 0), ("filelist", 2)):
         cat = Catalog(spark, str(tmp_path / f"ow_{mode}"), commit_mode=mode,
                       time_travel=tt)
         cat.create("m", SCHEMA, None, ["ticker", "date"], mode="replace")

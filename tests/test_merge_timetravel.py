@@ -1,4 +1,4 @@
-"""Catalog MERGE (CDC apply-changes) and manifest-mode time travel."""
+"""Catalog MERGE (CDC apply-changes) and filelist-mode time travel."""
 
 from __future__ import annotations
 
@@ -74,71 +74,48 @@ def test_merge_without_delete_col_and_guards(spark, tmp_path):
         cat.merge("flat", spark.createDataFrame([(1.0,)], nopk))
 
 
-def test_merge_atomic_in_manifest_mode(spark, tmp_path):
-    cat = Catalog(spark, str(tmp_path / "mlake"), commit_mode="manifest")
+def test_merge_atomic_in_filelist_mode(spark, tmp_path):
+    cat = Catalog(spark, str(tmp_path / "mlake"), commit_mode="filelist")
     cat.create("px", SCHEMA, None, ["ticker", "date"], mode="replace")
     cat.insert("px", _rows(spark, [("A", D1, 1.0), ("B", D2, 2.0)]))
+    g = cat._current_gen("px")
     cat.merge("px", _cdc(spark, [("A", D1, 9.0, False), ("B", D2, 0.0, True)]),
               delete_col="deleted")
+    assert cat._current_gen("px") == g + 1  # one commit
     assert _state(cat, "px") == [("A", 9.0)]
-    fresh = Catalog(spark, str(tmp_path / "mlake"), commit_mode="manifest")
+    fresh = Catalog(spark, str(tmp_path / "mlake"), commit_mode="filelist")
     assert _state(fresh, "px") == [("A", 9.0)]
 
 
 def test_time_travel_reads_retained_generations(spark, tmp_path):
     cat = Catalog(
-        spark, str(tmp_path / "tt"), commit_mode="manifest", time_travel=2
+        spark, str(tmp_path / "tt"), commit_mode="filelist", time_travel=2
     )
     cat.create("m", SCHEMA, None, ["ticker", "date"], mode="replace")
     cat.insert("m", _rows(spark, [("A", D1, 1.0)]))
     for v in (2.0, 3.0, 4.0):
         cat.merge("m", _rows(spark, [("A", D1, v)]))
-    hist = cat.history("m")
-    gens = [h["generation"] for h in hist]
-    assert gens == sorted(gens) and len(gens) == 3  # current + 2 retained
-    assert [r["close"] for r in cat.table_at("m", gens[-1]).collect()] == [4.0]
-    assert [r["close"] for r in cat.table_at("m", gens[0]).collect()] == [2.0]
+    gens = [h["generation"] for h in cat.history("m")]
+    cur = gens[-1]
+    # current + 2 retained; the empty creation snapshot needs no files
+    assert gens == [0, cur - 2, cur - 1, cur]
+    assert [r["close"] for r in cat.table_at("m", cur).collect()] == [4.0]
+    assert [r["close"] for r in cat.table_at("m", cur - 2).collect()] == [2.0]
     # beyond retention: GC'd
     with pytest.raises(LookupError, match="GC'd|not readable"):
-        cat.table_at("m", gens[0] - 1)
-
-
-def test_time_travel_snapshots_cut_at_rewrites_not_appends(spark, tmp_path):
-    """Appends mutate the CURRENT generation dir in place, so a
-    historical generation reads as the table just before the NEXT
-    rewrite — the documented snapshot granularity."""
-    cat = Catalog(spark, str(tmp_path / "tt2"), commit_mode="manifest", time_travel=2)
-    cat.create("m", SCHEMA, None, ["ticker", "date"], mode="replace")
-    cat.insert("m", _rows(spark, [("A", D1, 1.0)]))
-    cat.merge("m", _rows(spark, [("A", D1, 2.0)]))  # -> gen g
-    g = cat.history("m")[-1]["generation"]
-    cat.insert("m", _rows(spark, [("B", D2, 5.0)]))  # append into gen g
-    cat.merge("m", _rows(spark, [("A", D1, 3.0)]))  # -> gen g+1
-    at_g = sorted((r["ticker"], r["close"]) for r in cat.table_at("m", g).collect())
-    assert at_g == [("A", 2.0), ("B", 5.0)]  # append visible in snapshot g
-    at_g1 = sorted((r["ticker"], r["close"]) for r in cat.table_at("m", g + 1).collect())
-    assert at_g1 == [("A", 3.0), ("B", 5.0)]
+        cat.table_at("m", cur - 3).collect()
 
 
 def test_time_travel_guards(spark, tmp_path):
     with pytest.raises(ValueError, match="time_travel requires"):
         Catalog(spark, str(tmp_path / "x"), time_travel=2)
     with pytest.raises(ValueError, match="time_travel must be"):
-        Catalog(spark, str(tmp_path / "x"), commit_mode="manifest", time_travel=True)
+        Catalog(spark, str(tmp_path / "x"), commit_mode="filelist", time_travel=True)
     with pytest.raises(ValueError, match="time_travel must be"):
-        Catalog(spark, str(tmp_path / "x"), commit_mode="manifest", time_travel=99)
+        Catalog(spark, str(tmp_path / "x"), commit_mode="filelist", time_travel=99)
     cat = Catalog(spark, str(tmp_path / "r"))
     cat.create("m", SCHEMA, None, ["ticker", "date"], mode="replace")
-    with pytest.raises(ValueError, match="requires commit_mode='manifest'"):
+    with pytest.raises(ValueError, match="requires commit_mode='filelist'"):
         cat.history("m")
-    with pytest.raises(ValueError, match="requires commit_mode='manifest'"):
+    with pytest.raises(ValueError, match="requires commit_mode='filelist'"):
         cat.table_at("m", 0)
-
-
-def test_history_empty_before_first_rewrite(spark, tmp_path):
-    cat = Catalog(spark, str(tmp_path / "h0"), commit_mode="manifest", time_travel=2)
-    cat.create("m", SCHEMA, None, ["ticker", "date"], mode="replace")
-    cat.insert("m", _rows(spark, [("A", D1, 1.0)]))
-    assert cat.history("m") == []  # appends only: no generations yet
-    cat.merge("m", _rows(spark, [("A", D1, 2.0)]))
-    assert [h["generation"] for h in cat.history("m")] == [0]

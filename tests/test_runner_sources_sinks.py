@@ -8,12 +8,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from nt_data_pipelines_spark.catalog import Catalog
-from nt_data_pipelines_spark.pipelines.calendar import (
-    freshness_gate,
-    last_market_date,
-    trading_date_range,
+from nt_data_pipelines_spark.pipelines.calendar import last_market_date, trading_date_range
+from nt_data_pipelines_spark.pipelines.runner import (
+    TABLES,
+    _lookback,
+    backfill_flow,
+    daily_flow,
+    ensure_tables,
 )
-from nt_data_pipelines_spark.pipelines.runner import backfill_flow, ensure_tables
 from nt_data_pipelines_spark.pipelines.trading import notional_deltas, target_notionals
 from nt_data_pipelines_spark.sinks import (
     RecordingBroker,
@@ -52,12 +54,35 @@ def test_fetch_bars_chunked_union_and_empty_schema(spark):
     assert [f.name for f in empty.schema.fields][:3] == ["ticker", "date", "open"]
 
 
-def test_calendar_utils_and_freshness_gate(spark):
+def test_calendar_utils_and_freshness_gate(spark, tmp_path):
     cal = S.load_calendar(spark, 30)
     last = last_market_date(cal)
+    dates = sorted(r["date"] for r in cal.collect())
     assert trading_date_range(cal, 5).count() == 5
-    assert freshness_gate(cal, last + dt.timedelta(days=1))
-    assert not freshness_gate(cal, last + dt.timedelta(days=3))
+    end, starts = _lookback(cal, last + dt.timedelta(days=1), (5, 100))
+    assert end == last
+    assert starts == {5: dates[-5], 100: dates[0]}  # fewer than 100: all of them
+
+    # daily_flow's gate is _lookback's end == yesterday. Only the
+    # calendar exists, so an open gate fails on the first stage's read
+    # and a closed one returns False before any stage starts.
+    cat = Catalog(spark, str(tmp_path / "lake"))
+    spec = TABLES["calendar"]
+    cat.create("calendar", spec["schema"], spec["partition"], spec["pk"])
+    cat.insert("calendar", cal)
+    calls = []
+
+    def run(today):
+        return daily_flow(
+            spark, cat, today, window=5, half_life=2.0, on_failure=lambda: calls.append(today)
+        )
+
+    with pytest.raises(KeyError, match="does not exist"):
+        run(last + dt.timedelta(days=1))
+    assert calls == [last + dt.timedelta(days=1)]
+    assert run(last + dt.timedelta(days=3)) is False  # gap days: stale calendar
+    assert run(dates[0]) is False  # no market date before today: closed, no raise
+    assert len(calls) == 1
 
 
 @pytest.mark.slow

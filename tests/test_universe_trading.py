@@ -302,13 +302,25 @@ def test_freshness_gate_tolerates_future_calendar(spark):
 
     from pyspark.sql import types as T
 
-    from nt_data_pipelines_spark.pipelines.calendar import freshness_gate
+    from nt_data_pipelines_spark.pipelines.runner import _lookback
 
     today = dt.date(2024, 1, 9)
     cal = spark.createDataFrame(
         [(dt.date(2024, 1, d),) for d in (5, 8, 9, 10, 11)],  # incl. future
         T.StructType([T.StructField("date", T.DateType())]),
     )
-    assert freshness_gate(cal, today)                     # last before 9th = 8th
-    assert freshness_gate(cal, dt.date(2024, 1, 11))      # last before 11th = 10th
-    assert not freshness_gate(cal, dt.date(2024, 1, 13))  # last before 13th = 11th
+
+    def gate(t):  # daily_flow's gate
+        return _lookback(cal, t, ())[0] == t - dt.timedelta(days=1)
+
+    # lookbacks stop at the last date before today, future dates unseen
+    assert _lookback(cal, today, (1, 2, 9)) == (
+        dt.date(2024, 1, 8),
+        {1: dt.date(2024, 1, 8), 2: dt.date(2024, 1, 5), 9: dt.date(2024, 1, 5)},
+    )
+    assert gate(today)                     # last before 9th = 8th
+    assert gate(dt.date(2024, 1, 11))      # last before 11th = 10th
+    assert not gate(dt.date(2024, 1, 13))  # last before 13th = 11th
+    # no date before today: an empty array, NULLs rather than an error
+    assert _lookback(cal, dt.date(2024, 1, 5), (2,)) == (None, {2: None})
+    assert not gate(dt.date(2024, 1, 5))

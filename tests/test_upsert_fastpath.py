@@ -40,7 +40,7 @@ SCHEMA = T.StructType(
 D1 = dt.date(2024, 1, 2)
 D2 = dt.date(2025, 1, 3)
 
-MODES = ("rename", "manifest", "filelist")
+MODES = ("rename", "filelist")
 
 
 def _rows(spark, data):
@@ -201,7 +201,7 @@ def test_stale_pk_clean_entry_is_ignored(spark, tmp_path, mode):
     if mode == "filelist":
         stale = {"kind": "gen", "gen": cat._current_gen("px")}
     else:
-        fs, p = cat._hfs(cat._data_path("px"))
+        fs, p = cat._hfs(cat._path("px"))
         stale = {
             "kind": "dir",
             "files": sorted(f for f, _ in cat._list_parquet_recursive(fs, p)),
@@ -315,13 +315,13 @@ def test_narrowed_filelist_rival_mid_probe_falls_back(spark, tmp_path):
     assert [t for t, *_ in got] == ["B", "X"], got  # X deduped
 
 
-def test_manifest_empty_base_rival_mid_probe_falls_back(spark, tmp_path):
-    """Manifest mode, empty-base fast path: a rival append landing
+def test_rename_empty_base_rival_mid_probe_falls_back(spark, tmp_path):
+    """Rename mode, empty-base fast path: a rival append landing
     BETWEEN the undisturbed check and the probe's snapshot read carries
     another ingest seq, so the batch probe never examines its rows.
     The post-probe re-check (listing + write-UUID) must catch it."""
-    root = str(tmp_path / "mftoctou")
-    a = Catalog(spark, root, commit_mode="manifest")
+    root = str(tmp_path / "rntoctou")
+    a = Catalog(spark, root, commit_mode="rename")
     a.create("m", SCHEMA, None, ["ticker", "date"])
 
     real_probe = Catalog._batch_dup_probe
@@ -336,7 +336,7 @@ def test_manifest_empty_base_rival_mid_probe_falls_back(spark, tmp_path):
             # constructed NOW so the rival loads the post-insert
             # next_seq and stamps a DIFFERENT ingest seq — its rows
             # fall outside the batch probe, the exact blind spot
-            b = Catalog(spark, root, commit_mode="manifest")
+            b = Catalog(spark, root, commit_mode="rename")
             b.insert("m", _rows(spark, [("X", D2, 8.0), ("X", D2, 8.5)]))
         return real_probe(self, name, seq)
 
