@@ -295,10 +295,10 @@ class Catalog:
         return sorted(gens)
 
     def _current_gen(self, name: str) -> int:
-        """Highest generation with a VALID manifest file, or -1 (the
-        pre-manifest plain table dir). A torn manifest (crash mid-
-        write) parses as invalid JSON and is skipped — the previous
-        generation stays current."""
+        """Highest generation with a VALID manifest file, or -1 (no
+        manifest yet — see :meth:`_fl_current`). A torn manifest
+        (crash mid-write) parses as invalid JSON and is skipped — the
+        previous generation stays current."""
         for g in reversed(self._manifest_gens(name)):
             if self._read_manifest(name, g) is not None:
                 return g
@@ -493,9 +493,10 @@ class Catalog:
 
     @staticmethod
     def _is_checkpoint(doc: dict) -> bool:
-        """A manifest carrying the COMPLETE file set (replay base).
-        Every pre-delta-log manifest wrote full ``files``, so legacy
-        logs read as all-checkpoint — no migration step."""
+        """A manifest carrying the COMPLETE file set (replay base):
+        every full rewrite, and every commit on the
+        ``FL_CHECKPOINT_INTERVAL`` cadence. A log of nothing but
+        checkpoints resolves like any other."""
         return isinstance(doc.get("files"), list)
 
     @staticmethod
@@ -563,61 +564,58 @@ class Catalog:
         resolved = self._fl_resolve(name, gen)
         return None if resolved is None else resolved[0]
 
-    def _fl_keep_files(self, name: str, gen: int) -> list[str]:
-        """Resolved files of a RETAINED generation, for keep-set math.
+    def _fl_snapshot(self, name: str, gen: int) -> tuple[list[str], dict]:
+        """(files, file_stats) of a generation, or LookupError.
 
-        A retained generation that cannot be resolved is an invariant
-        violation (the log-trim rule preserves every replay base inside
-        the retention window), and treating it as an empty contribution
-        would let GC delete files that snapshot still references —
-        turning a loud read-path LookupError into silent data loss on
-        the most destructive path. Raise instead, mirroring _fl_read;
-        _fl_gc converts the raise into a warned sweep abort (it runs
-        AFTER a successful commit, which must not look failed).
-        """
-        files = self._fl_manifest_files(name, gen)
-        if files is None:
+        Never answers "empty" for a generation that cannot be resolved
+        (its manifest or its replay base is torn or GC'd): an empty
+        read would be a silently wrong answer, a commit on an empty
+        base would drop every live file, and an empty GC keep-set
+        would doom files a retained snapshot still references. _fl_gc
+        turns the raise into a warned sweep abort (it runs AFTER a
+        successful commit, which must not look failed)."""
+        resolved = self._fl_resolve(name, gen)
+        if resolved is None:
             raise LookupError(
-                f"retained generation {gen} of {name!r} cannot be "
-                "resolved (torn or missing replay base?) — refusing a "
-                "partial keep-set that could doom its files"
+                f"generation {gen} of {name!r} cannot be resolved (torn or "
+                "missing replay base?) — refusing to treat it as empty"
             )
-        return files
+        return resolved
+
+    def _fl_current(self, name: str) -> tuple[int, list[str], dict]:
+        """The current snapshot ``(gen, files, file_stats)``.
+
+        A table with no valid manifest is empty, ``(-1, [], {})``:
+        create's generation-0 commit never landed. If rename-mode data
+        sits in its plain dir instead, the table was never adopted into
+        the log, and every filelist operation refuses it until
+        :meth:`convert_to_filelist` has run."""
+        gen = self._current_gen(name)
+        if gen < 0:
+            fs, plain = self._hfs(self._path(name))
+            if fs.exists(plain):
+                raise LookupError(
+                    f"table {name!r} holds rename-mode data and is not in the "
+                    f"filelist log: run convert_to_filelist({name!r}) first"
+                )
+            return -1, [], {}
+        return (gen, *self._fl_snapshot(name, gen))
 
     def _fl_abs(self, rel: str) -> str:
         return os.path.join(self.root, rel)
 
     def _fl_list_parquet(self, name: str, dir_path: str) -> list[str]:
-        """Root-relative paths of every parquet file under a dir.
+        """Root-relative paths of every parquet file under a batch dir.
 
         Relative paths keep manifests portable if the lake root moves;
-        the split marker is the table's data-dir basename, so the same
-        code works whether the FS layer reports scheme-qualified or
-        plain paths."""
+        the split marker is the table's ``<t>.data/`` basename, so the
+        same code works whether the FS layer reports scheme-qualified
+        or plain paths."""
         fs, root = self._hfs(dir_path)
-        # marker = the first root-relative path component of dir_path
-        # ("<t>.data/" for batch dirs, "<t>/" for a legacy plain dir
-        # being imported) — scheme-agnostic either way
-        fl_base = os.path.basename(self._fl_root(name))
-        marker = (
-            fl_base + "/"
-            if f"/{fl_base}/" in dir_path + "/" or dir_path.endswith(fl_base)
-            else os.path.basename(self._path(name)) + "/"
+        marker = os.path.basename(self._fl_root(name)) + "/"
+        return sorted(
+            p[p.rfind(marker):] for p, _ in self._list_parquet_recursive(fs, root)
         )
-        out: list[str] = []
-        stack = [root]
-        while stack:
-            p = stack.pop()
-            if not fs.exists(p):
-                continue
-            for st in fs.listStatus(p):
-                if st.isDirectory():
-                    stack.append(st.getPath())
-                elif st.getPath().getName().endswith(".parquet"):
-                    full = st.getPath().toString()
-                    idx = full.rfind(marker)
-                    out.append(full[idx:])
-        return sorted(out)
 
     def _fl_write_batch(
         self, name: str, df: DataFrame, cluster: bool = True
@@ -713,23 +711,18 @@ class Catalog:
         reading the base would let a rival slip a commit in between
         and have its files silently dropped from every later
         generation (permanent committed-data loss).
+
+        A LookupError (table not in the log, unresolvable base) is
+        raised before any commit; the GC after a commit never raises
+        one, so a caller may treat it as "nothing committed".
         """
-        meta = self._meta(name)
-        migrated = False
-        migrated_dir: str | None = None
         for _ in range(25):
             target = self._next_gen(name)
-            cur = self._current_gen(name)
-            if cur >= target:
-                continue  # a rival advanced past our pinned target
-            if cur >= 0:
-                if migrated_dir is not None:
-                    # a rival won the migration race; our imported
-                    # batch is garbage (the winner imported the legacy
-                    # rows itself) — don't leak it as crash debris
-                    self._fs_delete(migrated_dir)
-                    migrated_dir, migrated = None, False
-                if target % FL_CHECKPOINT_INTERVAL != 0:
+            if target % FL_CHECKPOINT_INTERVAL != 0:
+                cur = self._current_gen(name)
+                if cur >= target:
+                    continue  # a rival advanced past our pinned target
+                if cur >= 0:
                     # delta append: O(new files) commit payload, no
                     # base read at all — the resolved snapshot is
                     # (previous gen) + add at read time
@@ -743,42 +736,13 @@ class Catalog:
                         continue
                     self._fl_gc(name, target)
                     return
-                # checkpoint due: materialize the full snapshot
-                resolved = self._fl_resolve(name, cur)
-                if resolved is None:
-                    raise LookupError(
-                        f"generation {cur} of {name!r} cannot be resolved "
-                        "(checkpoint base GC'd?) — refusing to write a "
-                        "checkpoint that would drop its files"
-                    )
-                prev, stats = resolved
-            else:
-                # migration: import a pre-manifest plain dir's files
-                # into the first filelist generation's base
-                fs, plain = self._hfs(self._path(name))
-                if not fs.exists(plain):
-                    prev, stats = [], {}
-                elif meta.partition_keys:
-                    # Partitioned legacy tables store the partition
-                    # column in hive DIR NAMES, not in the file data.
-                    # A manifest referencing those files directly would
-                    # scan them as explicit paths (no basePath), so the
-                    # partition column surfaces NULL for every legacy
-                    # row — and the next rewrite makes that permanent.
-                    # REWRITE the legacy rows into a proper filelist
-                    # batch (partition values materialized into the
-                    # data) and import the rewritten files instead. The
-                    # dir-scan below resolves the partition columns via
-                    # hive discovery because the read root IS the base
-                    # path.
-                    legacy = self.spark.read.schema(
-                        self._with_ingest(meta.struct)
-                    ).parquet(self._path(name))
-                    migrated_dir, prev, stats = self._fl_write_batch(name, legacy)
-                    migrated = True
-                else:
-                    prev = self._fl_list_parquet(name, self._path(name))
-                    stats = {}
+            # checkpoint due — or no valid manifest yet, even when torn
+            # manifests burned the first numbers: a delta with no
+            # checkpoint below it would never resolve. Materialize the
+            # full snapshot (empty for a table not yet committed).
+            cur, prev, stats = self._fl_current(name)
+            if cur >= target:
+                continue
             stats.update(new_stats or {})
             try:
                 self._commit_manifest(
@@ -788,12 +752,6 @@ class Catalog:
             except ConcurrentWriteError:
                 continue
             self._fl_gc(name, target)
-            if migrated:
-                # the legacy rows now live in the rewritten batch; the
-                # hive-layout plain dir is superseded garbage (and no
-                # manifest of a partitioned table ever references it)
-                self._fs_delete(self._path(name))
-                self.spark.catalog.refreshByPath(self._path(name))
             return
         raise ConcurrentWriteError(
             f"append to {name!r} lost {25} consecutive commit races"
@@ -868,7 +826,7 @@ class Catalog:
                 # retained snapshot: protect its RESOLVED file set
                 # (delta manifests alone don't list carried-over files)
                 try:
-                    keep.update(self._fl_keep_files(name, g))
+                    keep.update(self._fl_snapshot(name, g)[0])
                 except LookupError as e:
                     warnings.warn(
                         f"filelist GC of {name!r} aborted, nothing deleted: {e}",
@@ -911,30 +869,16 @@ class Catalog:
                 )
 
     def _fl_read(self, name: str, gen: int | None = None) -> DataFrame:
-        """Scan a filelist generation (current if None) with hive
-        partition columns resolved via basePath."""
+        """Scan a filelist generation (current if None) from the files
+        its manifest lists — the partition columns live in the data.
+        Raises LookupError for a generation that cannot be resolved,
+        or a current table that is not in the log."""
         meta = self._meta(name)
-        g = self._current_gen(name) if gen is None else gen
         schema = self._with_ingest(meta.struct)
-        if g < 0:
-            # pre-manifest state: a table written under rename mode
-            # being reopened as filelist — read the plain dir so
-            # the migration path shows the data instead of an empty
-            # table (the first filelist append imports these files
-            # into manifest 0's base)
-            fs, plain = self._hfs(self._path(name))
-            if fs.exists(plain):
-                return self.spark.read.schema(schema).parquet(self._path(name))
-            return self.spark.createDataFrame([], schema)
-        files = self._fl_manifest_files(name, g)
-        if files is None:
-            # never treat an unresolvable generation as empty: zero
-            # rows would be a silently WRONG answer (the write paths
-            # raise for exactly this condition)
-            raise LookupError(
-                f"generation {g} of {name!r} cannot be resolved "
-                "(checkpoint base GC'd?) — refusing to read it as empty"
-            )
+        if gen is None:
+            g, files, _ = self._fl_current(name)
+        else:
+            g, files = gen, self._fl_snapshot(name, gen)[0]
         if not files:
             return self.spark.createDataFrame([], schema)
         if not self._fl_snapshot_readable(name, g, files):
@@ -1281,11 +1225,43 @@ class Catalog:
             }
 
     def _delete_all_data(self, name: str) -> None:
-        """Remove every artifact of a table: the plain dir, and the
-        filelist batch dirs + manifest log."""
+        """Remove every artifact of a table in either commit mode: the
+        rename-mode plain dir, and the filelist batch dirs + manifest
+        log."""
         self._fs_delete(self._path(name))
         self._fs_delete(self._fl_root(name))
         self._fs_delete(self._manifest_dir(name))
+
+    def convert_to_filelist(self, name: str) -> None:
+        """Adopt a table written under rename mode into the filelist
+        log — Delta's ``CONVERT TO DELTA``. A filelist catalog refuses
+        every other operation on such a table until this has run.
+
+        The plain dir's rows are read with the declared schema (hive
+        discovery restores the partition columns from the dir names)
+        and committed as the first generation through the full-rewrite
+        path, so the partition values land in the data and no manifest
+        ever points at a hive-layout file. Only after that commit is
+        the plain dir deleted. A crash before the commit leaves the
+        table as it was, so the conversion can simply run again; on a
+        table already in the log a call only removes a leftover plain
+        dir. A rival converter that commits first makes this call
+        raise :class:`ConcurrentWriteError` and leave no staged batch.
+        """
+        if self.commit_mode != "filelist":
+            raise ValueError("convert_to_filelist() requires commit_mode='filelist'")
+        meta = self._meta(name)
+        fs, plain = self._hfs(self._path(name))
+        if not fs.exists(plain):
+            return
+        target = self._next_gen(name)  # pinned before the "not in log" read
+        if self._current_gen(name) < 0:
+            rows = self.spark.read.schema(self._with_ingest(meta.struct)).parquet(
+                self._path(name)
+            )
+            self._rewrite_table_filelist(name, rows, target_gen=target)
+        self._fs_delete(self._path(name))
+        self.spark.catalog.refreshByPath(self._path(name))
 
     # ---- write path ----
     @staticmethod
@@ -1302,8 +1278,12 @@ class Catalog:
             self._with_occ_retry(name, lambda: self._rewrite_table(name, df))
             return
         if self.commit_mode == "filelist":
-            _, files, stats = self._fl_write_batch(name, df)
-            self._fl_commit_append(name, files, stats)
+            bdir, files, stats = self._fl_write_batch(name, df)
+            try:
+                self._fl_commit_append(name, files, stats)
+            except LookupError:
+                self._fs_delete(bdir)  # raised before the commit: garbage
+                raise
             self._refresh(name)
             return
         meta = self._meta(name)
@@ -1394,7 +1374,9 @@ class Catalog:
 
     def _list_parquet_recursive(self, fs, p) -> list[tuple[str, int]]:
         """(path, length) for every parquet data file under ``p``,
-        recursively — hive partition subdirs included.
+        recursively — hive partition subdirs included. The one parquet
+        walker: the upsert fast path, rename-mode ``data_files`` and
+        filelist batch listing all use it.
 
         Local roots walk the OS directly: the Hadoop RemoteIterator
         costs one py4j round-trip per file (~1-2 ms each), which turns
@@ -1437,8 +1419,6 @@ class Catalog:
             return None  # optimize() is already a metadata no-op
         if self.commit_mode == "filelist":
             gen = self._current_gen(name)
-            if gen < 0:
-                return None  # pre-manifest legacy state: unknown base
             resolved = self._fl_resolve(name, gen)
             if resolved is None:
                 return None
@@ -1600,7 +1580,7 @@ class Catalog:
         a matching row are rewritten (see :meth:`_fl_apply_changes`).
         """
         cols = [on] if isinstance(on, str) else list(on)
-        if self.commit_mode == "filelist" and self._current_gen(name) >= 0:
+        if self.commit_mode == "filelist":
             meta = self._meta(name)
             key_df = keys.select(*cols)
             self._with_occ_retry(
@@ -1675,7 +1655,7 @@ class Catalog:
             survivors = incoming.withColumn(INGEST_COL, F.lit(seq).cast("long"))
             src_keys = src.select(*keys)
 
-            if self.commit_mode == "filelist" and self._current_gen(name) >= 0:
+            if self.commit_mode == "filelist":
                 # file-surgical apply-changes: only files holding a
                 # matched key are rewritten (see _fl_apply_changes)
                 self._with_occ_retry(
@@ -2001,23 +1981,7 @@ class Catalog:
                     df = df.filter(c < F.lit(hi) if hi_strict else c <= F.lit(hi))
             return df
 
-        gen = self._current_gen(name)
-        if gen < 0:
-            # legacy (pre-manifest) table reopened as filelist: no
-            # manifest stats to prune on yet — fall back to the plain
-            # scan with the filters applied, mirroring _fl_read's
-            # migration branch (an empty frame here would be a
-            # silently WRONG answer, not a pruned one)
-            return _row_filter(self.table(name))
-        resolved = self._fl_resolve(name, gen)
-        if resolved is None:
-            # mirror _fl_read: unresolvable != empty — an empty pruned
-            # scan here would be a silently wrong answer
-            raise LookupError(
-                f"generation {gen} of {name!r} cannot be resolved "
-                "(checkpoint base GC'd?) — refusing to read it as empty"
-            )
-        files, stats = resolved
+        _, files, stats = self._fl_current(name)
         kinds = {f.name: self._col_kind(f.dataType) for f in meta.struct.fields}
         kept = []
         for rel in files:
@@ -2046,37 +2010,15 @@ class Catalog:
     # ---- operational maintenance ----
     def data_files(self, name: str) -> list[tuple[str, int]]:
         """(path, bytes) of every live parquet data file."""
-        gen = self._current_gen(name) if self.commit_mode == "filelist" else -1
-        if self.commit_mode == "filelist" and gen >= 0:
-            rels = self._fl_manifest_files(name, gen)
-            if rels is None:
-                raise LookupError(
-                    f"generation {gen} of {name!r} cannot be resolved "
-                    "(checkpoint base GC'd?) — refusing to report no "
-                    "data files"
-                )
+        if self.commit_mode == "filelist":
             out = []
-            for rel in rels:
+            for rel in self._fl_current(name)[1]:
                 fs, p = self._hfs(self._fl_abs(rel))
                 if fs.exists(p):
                     out.append((p.toString(), fs.getFileStatus(p).getLen()))
             return out
-        # legacy pre-manifest filelist state falls through to the plain
-        # directory listing below — table() shows those rows, so
-        # data_files()/compact() must see their files too
         fs, root = self._hfs(self._path(name))
-        out: list[tuple[str, int]] = []
-        stack = [root]
-        while stack:
-            p = stack.pop()
-            if not fs.exists(p):
-                continue
-            for st in fs.listStatus(p):
-                if st.isDirectory():
-                    stack.append(st.getPath())
-                elif st.getPath().getName().endswith(".parquet"):
-                    out.append((st.getPath().toString(), st.getLen()))
-        return out
+        return self._list_parquet_recursive(fs, root) if fs.exists(root) else []
 
     def compact(self, name: str, target_file_bytes: int = 128 * 1024 * 1024) -> dict:
         """Small-file compaction: rewrite the table into ~size-targeted
@@ -2257,10 +2199,6 @@ class Catalog:
         pks = meta.primary_keys
         if not pks:
             return
-        full = self._raw_table(name)
-        dup_keys = (
-            full.groupBy(*pks).agg(F.count(F.lit(1)).alias("__n")).filter(F.col("__n") > 1)
-        )
         # Dedup rank is GLOBAL over the PK (a key may have copies in
         # several partitions when the PK doesn't determine the
         # partition value — last write must win across all of them).
@@ -2268,26 +2206,18 @@ class Catalog:
         # inserted batch* share an ingest seq, and partition order
         # alone would pick an arbitrary survivor.
         w = self._lww_window(meta)
-        if self.commit_mode == "filelist" and self._current_gen(name) >= 0:
+        if self.commit_mode == "filelist":
             # File-level incremental OPTIMIZE (the Delta shape): only
             # files holding a copy of a duplicated key are rewritten;
             # every clean file carries over BY REFERENCE in the next
             # manifest.
             self._optimize_filelist_incremental(name, meta, pks, w)
-        elif meta.partition_keys and self.commit_mode == "filelist":
-            # A partitioned filelist table still in its legacy
-            # pre-manifest state: the full rewrite commits its first
-            # manifest, so it doubles as the migration (the dirty-
-            # partition overwrite below would stay outside the log).
-            if not dup_keys.limit(1).count():
-                return
-            deduped = (
-                full.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-            self._rewrite_table(name, deduped)
-        elif meta.partition_keys:
+            return
+        full = self._raw_table(name)
+        dup_keys = (
+            full.groupBy(*pks).agg(F.count(F.lit(1)).alias("__n")).filter(F.col("__n") > 1)
+        )
+        if meta.partition_keys:
             # partitions holding any copy of a duplicated key must be
             # rewritten (winners kept, losers dropped everywhere)
             dirty = (
@@ -2335,16 +2265,12 @@ class Catalog:
 
     def _abs_to_rel(self, name: str, abs_path: str) -> str:
         """Root-relative manifest path from input_file_name() output
-        (scheme-qualified absolute), via the table's path markers —
-        same convention as :meth:`_fl_list_parquet`."""
-        for marker in (
-            os.path.basename(self._fl_root(name)) + "/",
-            os.path.basename(self._path(name)) + "/",
-        ):
-            idx = abs_path.rfind(marker)
-            if idx >= 0:
-                return abs_path[idx:]
-        raise ValueError(f"path {abs_path!r} is not under table {name!r}")
+        (scheme-qualified absolute), via the table's ``<t>.data/``
+        marker — same convention as :meth:`_fl_list_parquet`."""
+        idx = abs_path.rfind(os.path.basename(self._fl_root(name)) + "/")
+        if idx < 0:
+            raise ValueError(f"path {abs_path!r} is not under table {name!r}")
+        return abs_path[idx:]
 
     def _optimize_filelist_incremental(
         self, name: str, meta: TableMeta, pks: list[str], w
@@ -2368,21 +2294,11 @@ class Catalog:
         retention GC drops them (shared-file economics intact).
         """
         target = self._next_gen(name)
-        gen = self._current_gen(name)
+        gen, files, base_stats = self._fl_current(name)
         if gen >= target:
             raise ConcurrentWriteError(
                 f"optimize of {name!r} raced a rival past its pinned generation"
             )
-        resolved = self._fl_resolve(name, gen) if gen >= 0 else None
-        if gen >= 0 and resolved is None:
-            # never treat an unresolvable CURRENT generation as empty:
-            # committing on that base would drop every live file
-            raise LookupError(
-                f"generation {gen} of {name!r} cannot be resolved "
-                "(checkpoint base GC'd?) — refusing to optimize on an "
-                "empty base"
-            )
-        files, base_stats = resolved or ([], {})
         if not files:
             return
         schema = self._with_ingest(meta.struct)
@@ -2451,10 +2367,12 @@ class Catalog:
         files) payload, the apply-changes economics the docstring above
         promises — except when ``target`` lands on the checkpoint
         cadence, where the full resolved set is materialized so later
-        replays stay O(FL_CHECKPOINT_INTERVAL)."""
+        replays stay O(FL_CHECKPOINT_INTERVAL), and on an empty base,
+        which may have no checkpoint below it for a delta to replay
+        from (no valid manifest yet) and costs nothing extra."""
         bdir, new_files, new_stats = self._fl_write_batch(name, new_df)
         try:
-            if target % FL_CHECKPOINT_INTERVAL == 0:
+            if target % FL_CHECKPOINT_INTERVAL == 0 or not files:
                 kept_set = set(files) - set(dirty_rel)
                 stats = {f: s for f, s in base_stats.items() if f in kept_set}
                 stats.update(new_stats)
@@ -2499,21 +2417,11 @@ class Catalog:
         clustered full rewrite.
         """
         target = self._next_gen(name)
-        gen = self._current_gen(name)
+        gen, files, base_stats = self._fl_current(name)
         if gen >= target:
             raise ConcurrentWriteError(
                 f"merge into {name!r} raced a rival past its pinned generation"
             )
-        resolved = self._fl_resolve(name, gen) if gen >= 0 else None
-        if gen >= 0 and resolved is None:
-            # see _optimize_filelist_incremental: an unresolvable
-            # current generation must fail loudly, not read as empty
-            raise LookupError(
-                f"generation {gen} of {name!r} cannot be resolved "
-                "(checkpoint base GC'd?) — refusing to merge on an "
-                "empty base"
-            )
-        files, base_stats = resolved or ([], {})
         schema = self._with_ingest(meta.struct)
         if not files:
             if survivors is None:

@@ -264,20 +264,142 @@ def test_scan_pruned_numeric_stats_not_lexicographic(spark, tmp_path):
     assert [r["ticker"] for r in got.collect()] == ["B"]
 
 
-def test_filelist_reopens_legacy_rename_table(spark, tmp_path):
-    """Regression (review finding): a table written under rename mode
-    must stay readable — and importable — when the catalog is reopened
-    as filelist."""
-    root = str(tmp_path / "mig")
-    old = Catalog(spark, root)  # rename mode
-    old.create("m", SCHEMA, None, ["ticker", "date"], mode="replace")
-    old.insert("m", _rows(spark, [("A", D1, 1.0)]))
+def _rename_table(spark, root, keys):
+    """A table written by a rename-mode catalog: hive layout when
+    partitioned, so ``year`` lives in the dir names only."""
+    old = Catalog(spark, root)
+    old.create("px", SCHEMA, keys, ["ticker", "date"], mode="replace")
+    old.insert("px", _rows(spark, [("A", D1, 1.0), ("B", D2, 2.0)]))
+    old.insert("px", _rows(spark, [("C", D1, 3.0)]))
+    return old
+
+
+@pytest.mark.parametrize(
+    "keys", [None, ["year"]], ids=["unpartitioned", "partitioned"]
+)
+def test_convert_to_filelist(spark, tmp_path, keys):
+    """convert_to_filelist adopts a rename-mode table into the log as
+    generation 0: rows and partition values survive (hive dir names
+    are materialized into the data), every filelist operation works
+    afterwards, and the plain dir is gone."""
+    root = str(tmp_path / "conv")
+    old = _rename_table(spark, root, keys)
+    with pytest.raises(ValueError, match="requires commit_mode='filelist'"):
+        old.convert_to_filelist("px")
+    fl = Catalog(spark, root, commit_mode="filelist", time_travel=5)
+    fl.convert_to_filelist("px")
+    assert not os.path.exists(os.path.join(root, "px"))
+    assert [h["generation"] for h in fl.history("px")] == [0]
+
+    def rows(c):
+        return sorted((r["ticker"], r["year"], r["close"]) for r in c.table("px").collect())
+
+    want = [("A", 2024, 1.0), ("B", 2025, 2.0), ("C", 2024, 3.0)]
+    assert rows(fl) == want
+    assert rows(Catalog(spark, root, commit_mode="filelist")) == want
+    pruned = fl.scan_pruned("px", year=2024)
+    assert sorted(r["ticker"] for r in pruned.collect()) == ["A", "C"]
+    fl.convert_to_filelist("px")  # already in the log: a no-op
+    assert [h["generation"] for h in fl.history("px")] == [0]
+    fl.rewrite("px", lambda df: df)
+    assert rows(fl) == want
+    fl.insert("px", _rows(spark, [("D", D2, 4.0)]))
+    want.append(("D", 2025, 4.0))
+    assert len(fl.data_files("px")) > 1
+    assert fl.compact("px", target_file_bytes=1 << 30)["files_after"] == 1
+    assert rows(fl) == want
+    assert fl.history("px")[0]["generation"] == 0
+
+
+def test_filelist_refuses_rename_table_until_converted(spark, tmp_path):
+    """A rename-mode table reopened as filelist is not in the log:
+    every operation raises one error naming convert_to_filelist, and
+    none of them leaves a manifest or a staged batch behind."""
+    root = str(tmp_path / "ref")
+    old = _rename_table(spark, root, ["year"])
     fl = Catalog(spark, root, commit_mode="filelist")
-    assert _state(fl, "m") == [("A", 1.0)]  # plain-dir fallback read
-    fl.insert("m", _rows(spark, [("B", D2, 2.0)]))  # imports legacy files
-    assert _state(fl, "m") == [("A", 1.0), ("B", 2.0)]
+    batch = _rows(spark, [("A", D1, 9.0)])
+    ops = {
+        "table": lambda: fl.table("px"),
+        "insert": lambda: fl.insert("px", batch),
+        "upsert": lambda: fl.upsert("px", batch),
+        "merge": lambda: fl.merge("px", batch),
+        "delete_matching": lambda: fl.delete_matching("px", batch, "ticker"),
+        "scan_pruned": lambda: fl.scan_pruned("px", year=2024),
+        "data_files": lambda: fl.data_files("px"),
+        "compact": lambda: fl.compact("px"),
+        "optimize": lambda: fl.optimize("px"),
+    }
+    data = os.path.join(root, "px.data")
+    for op, fn in ops.items():
+        with pytest.raises(LookupError, match="convert_to_filelist"):
+            fn()
+        assert not os.path.exists(os.path.join(root, "px._manifest")), op
+        assert not os.path.exists(data) or not os.listdir(data), op
+    assert sorted(r["ticker"] for r in old.table("px").collect()) == ["A", "B", "C"]
+
+
+def test_filelist_create_crash_window(spark, tmp_path):
+    """create() registers the table, then commits generation 0. A
+    crash in between leaves a registered table with no manifest: it
+    reads as empty and accepts every write. A torn 0.json burns the
+    first number, and the first commit must still be a checkpoint —
+    a delta with no checkpoint below it would never resolve."""
+    import shutil
+
+    root = str(tmp_path / "cw")
+    cat = Catalog(spark, root, commit_mode="filelist")
+    names = ("ins", "ups", "mrg", "torn_ins", "torn_mrg")
+    for n in names:
+        cat.create(n, SCHEMA, ["year"], ["ticker", "date"], mode="replace")
+        shutil.rmtree(os.path.join(root, f"{n}._manifest"))
+        shutil.rmtree(os.path.join(root, f"{n}.data"))
+    for n in ("torn_ins", "torn_mrg"):
+        os.makedirs(os.path.join(root, f"{n}._manifest"))
+        with open(os.path.join(root, f"{n}._manifest", "0.json"), "w") as f:
+            f.write('{"generation": ')
+    cat._fl_cache.clear()
+    assert cat.table("ins").count() == 0
+    assert cat.data_files("ins") == []
+    batch = _rows(spark, [("A", D1, 1.0), ("B", D2, 2.0)])
+    cat.insert("ins", batch)
+    cat.upsert("ups", batch)
+    cat.merge("mrg", batch)
+    cat.insert("torn_ins", batch)
+    cat.merge("torn_mrg", batch)
     fresh = Catalog(spark, root, commit_mode="filelist")
-    assert _state(fresh, "m") == [("A", 1.0), ("B", 2.0)]
+    for n in names:
+        assert _state(fresh, n) == [("A", 1.0), ("B", 2.0)], n
+    for n in ("torn_ins", "torn_mrg"):
+        assert cat._current_gen(n) == 1
+        assert cat._is_checkpoint(cat._read_manifest(n, 1)), n
+
+
+def test_convert_to_filelist_race_has_one_winner(spark, tmp_path):
+    """Two converters racing for generation 0: exactly one commits;
+    the loser raises ConcurrentWriteError and deletes its staged
+    batch."""
+    from nt_data_pipelines_spark.catalog import ConcurrentWriteError
+
+    root = str(tmp_path / "race")
+    _rename_table(spark, root, None)
+    a = Catalog(spark, root, commit_mode="filelist")
+    b = Catalog(spark, root, commit_mode="filelist")
+    real_commit = a._commit_manifest
+
+    def racing_commit(name, gen, **kw):
+        b.convert_to_filelist(name)  # the rival commits gen 0 first
+        return real_commit(name, gen, **kw)
+
+    a._commit_manifest = racing_commit
+    with pytest.raises(ConcurrentWriteError):
+        a.convert_to_filelist("px")
+    del a._commit_manifest
+    assert a._manifest_gens("px") == [0]
+    assert len(os.listdir(os.path.join(root, "px.data"))) == 1  # the winner's
+    assert a.vacuum("px", older_than_hours=0) == []
+    assert not os.path.exists(os.path.join(root, "px"))
+    assert _state(a, "px") == [("A", 1.0), ("B", 2.0), ("C", 3.0)]
 
 
 def test_changes_between_null_key_rows(spark, tmp_path):
@@ -290,50 +412,6 @@ def test_changes_between_null_key_rows(spark, tmp_path):
     hist = [h["generation"] for h in cat.history("m")]
     feed = cat.changes_between("m", hist[-2], hist[-1]).collect()
     assert [(r["ticker"], r["_change_type"]) for r in feed] == [("B", "insert")]
-
-
-def test_filelist_migration_materializes_partition_columns(spark, tmp_path):
-    """Regression (advice, high): a PARTITIONED legacy (rename-mode)
-    table imported into filelist mode must keep its partition-column
-    values. Legacy hive layout stores them in dir names only; the
-    migration must rewrite them INTO the data — referencing the files
-    directly surfaces year=NULL for every legacy row, and the next
-    rewrite makes that loss permanent."""
-    root = str(tmp_path / "migp")
-    old = Catalog(spark, root)  # rename mode, hive-partitioned
-    old.create("px", SCHEMA, ["year"], ["ticker", "date"], mode="replace")
-    old.insert("px", _rows(spark, [("A", D1, 1.0), ("B", D2, 2.0)]))
-    fl = Catalog(spark, root, commit_mode="filelist")
-    fl.insert("px", _rows(spark, [("C", D1, 3.0)]))  # triggers the import
-
-    def years(c):
-        return sorted((r["ticker"], r["year"]) for r in c.table("px").collect())
-
-    want = [("A", 2024), ("B", 2025), ("C", 2024)]
-    assert years(fl) == want
-    # the rewrite path (merge/optimize) must not vaporize legacy values
-    fl.rewrite("px", lambda df: df)
-    assert years(fl) == want
-    # an independent reader resolves the same state
-    assert years(Catalog(spark, root, commit_mode="filelist")) == want
-    # pruned scans see the migrated rows under the right partitions
-    assert sorted(
-        r["ticker"] for r in fl.scan_pruned("px", year=2024).collect()
-    ) == ["A", "C"]
-
-
-def test_scan_pruned_legacy_table_falls_back_to_full_scan(spark, tmp_path):
-    """Regression (advice, medium): scan_pruned on a legacy table
-    reopened as filelist (no manifest yet) must fall back to the plain
-    scan with filters — not silently return an EMPTY frame while
-    table() shows the rows."""
-    root = str(tmp_path / "migs")
-    old = Catalog(spark, root)
-    old.create("px", SCHEMA, ["year"], ["ticker", "date"], mode="replace")
-    old.insert("px", _rows(spark, [("A", D1, 1.0), ("B", D2, 2.0)]))
-    fl = Catalog(spark, root, commit_mode="filelist")
-    got = fl.scan_pruned("px", year=2024)
-    assert [r["ticker"] for r in got.collect()] == ["A"]
 
 
 def test_filelist_compact_and_zorder_preserve_layout(spark, tmp_path):
@@ -740,22 +818,6 @@ def test_readd_dropped_column_refused_until_rewrite(spark, tmp_path):
     cat.add_column("m", T.StructField("close", T.DoubleType(), True))
     rows = cat.table("m").collect()
     assert [r["close"] for r in rows] == [None]  # files-surface-NULL holds
-
-
-def test_legacy_filelist_compact_sees_plain_dir_files(spark, tmp_path):
-    """Regression (review finding): before the first manifest commit a
-    reopened legacy table's data_files()/compact() must report the
-    plain-dir files that table() reads."""
-    root = str(tmp_path / "legc")
-    old = Catalog(spark, root)
-    old.create("m", SCHEMA, None, ["ticker", "date"], mode="replace")
-    for i in range(3):
-        old.insert("m", _rows(spark, [(f"T{i}", D1, float(i))]))
-    fl = Catalog(spark, root, commit_mode="filelist")
-    assert len(fl.data_files("m")) >= 3
-    out = fl.compact("m", target_file_bytes=1 << 30)
-    assert out["files_after"] == 1
-    assert fl.table("m").count() == 3
 
 
 def test_change_feed_on_pre_optimize_append_generation(spark, tmp_path):
