@@ -274,40 +274,82 @@ def _rename_table(spark, root, keys):
     return old
 
 
-@pytest.mark.parametrize(
-    "keys", [None, ["year"]], ids=["unpartitioned", "partitioned"]
-)
-def test_convert_to_filelist(spark, tmp_path, keys):
-    """convert_to_filelist adopts a rename-mode table into the log as
-    generation 0: rows and partition values survive (hive dir names
-    are materialized into the data), every filelist operation works
-    afterwards, and the plain dir is gone."""
-    root = str(tmp_path / "conv")
-    old = _rename_table(spark, root, keys)
+def _years(cat):
+    return sorted((r["ticker"], r["year"], r["close"]) for r in cat.table("px").collect())
+
+
+def test_filelist_reopens_legacy_rename_table(spark, tmp_path):
+    """convert_to_filelist adopts an unpartitioned rename-mode table
+    into the log as generation 0: its rows survive, a fresh reader
+    agrees, the plain dir is gone, a second call is a no-op and later
+    inserts append. A rename-mode catalog cannot convert."""
+    root = str(tmp_path / "mig")
+    old = _rename_table(spark, root, None)
     with pytest.raises(ValueError, match="requires commit_mode='filelist'"):
         old.convert_to_filelist("px")
     fl = Catalog(spark, root, commit_mode="filelist", time_travel=5)
     fl.convert_to_filelist("px")
     assert not os.path.exists(os.path.join(root, "px"))
     assert [h["generation"] for h in fl.history("px")] == [0]
-
-    def rows(c):
-        return sorted((r["ticker"], r["year"], r["close"]) for r in c.table("px").collect())
-
     want = [("A", 2024, 1.0), ("B", 2025, 2.0), ("C", 2024, 3.0)]
-    assert rows(fl) == want
-    assert rows(Catalog(spark, root, commit_mode="filelist")) == want
-    pruned = fl.scan_pruned("px", year=2024)
-    assert sorted(r["ticker"] for r in pruned.collect()) == ["A", "C"]
+    assert _years(fl) == want
+    assert _years(Catalog(spark, root, commit_mode="filelist")) == want
     fl.convert_to_filelist("px")  # already in the log: a no-op
     assert [h["generation"] for h in fl.history("px")] == [0]
-    fl.rewrite("px", lambda df: df)
-    assert rows(fl) == want
     fl.insert("px", _rows(spark, [("D", D2, 4.0)]))
     want.append(("D", 2025, 4.0))
+    assert _years(Catalog(spark, root, commit_mode="filelist")) == want
+
+
+def test_filelist_migration_materializes_partition_columns(spark, tmp_path):
+    """Converting a hive-partitioned rename-mode table must keep its
+    partition-column values: the old layout stores them in dir names
+    only, so the conversion writes them INTO the data. Referencing the
+    files directly would surface year=NULL, and the next rewrite would
+    make that loss permanent."""
+    root = str(tmp_path / "migp")
+    _rename_table(spark, root, ["year"])
+    fl = Catalog(spark, root, commit_mode="filelist")
+    fl.convert_to_filelist("px")
+    assert not os.path.exists(os.path.join(root, "px"))
+    want = [("A", 2024, 1.0), ("B", 2025, 2.0), ("C", 2024, 3.0)]
+    assert _years(fl) == want
+    fl.rewrite("px", lambda df: df)
+    assert _years(fl) == want
+    assert _years(Catalog(spark, root, commit_mode="filelist")) == want
+
+
+def test_scan_pruned_legacy_table_falls_back_to_full_scan(spark, tmp_path):
+    """scan_pruned on a rename-mode table reopened as filelist must
+    never return an empty frame for a table that holds rows: before
+    conversion it raises the convert error, after it it prunes the
+    converted files to the matching rows."""
+    root = str(tmp_path / "migs")
+    _rename_table(spark, root, ["year"])
+    fl = Catalog(spark, root, commit_mode="filelist")
+    with pytest.raises(LookupError, match="convert_to_filelist"):
+        fl.scan_pruned("px", year=2024)
+    fl.convert_to_filelist("px")
+    got = fl.scan_pruned("px", year=2024)
+    assert sorted(r["ticker"] for r in got.collect()) == ["A", "C"]
+
+
+def test_legacy_filelist_compact_sees_plain_dir_files(spark, tmp_path):
+    """data_files()/compact() on a rename-mode table reopened as
+    filelist refuse until conversion; afterwards they report and
+    compact the converted files together with later appends."""
+    root = str(tmp_path / "legc")
+    _rename_table(spark, root, None)
+    fl = Catalog(spark, root, commit_mode="filelist", time_travel=5)
+    with pytest.raises(LookupError, match="convert_to_filelist"):
+        fl.data_files("px")
+    fl.convert_to_filelist("px")
+    fl.insert("px", _rows(spark, [("D", D2, 4.0)]))
     assert len(fl.data_files("px")) > 1
     assert fl.compact("px", target_file_bytes=1 << 30)["files_after"] == 1
-    assert rows(fl) == want
+    assert _years(fl) == [
+        ("A", 2024, 1.0), ("B", 2025, 2.0), ("C", 2024, 3.0), ("D", 2025, 4.0)
+    ]
     assert fl.history("px")[0]["generation"] == 0
 
 
