@@ -560,7 +560,9 @@ class Catalog:
         return list(out[0]), dict(out[1])
 
     def _fl_manifest_files(self, name: str, gen: int) -> list[str] | None:
-        """Relative file paths of a generation's RESOLVED snapshot."""
+        """Relative file paths of a generation's RESOLVED snapshot, or
+        None — an inspection accessor for tests and examples; the
+        catalog itself resolves through :meth:`_fl_snapshot`."""
         resolved = self._fl_resolve(name, gen)
         return None if resolved is None else resolved[0]
 
@@ -587,19 +589,32 @@ class Catalog:
 
         A table with no valid manifest is empty, ``(-1, [], {})``:
         create's generation-0 commit never landed. If rename-mode data
-        sits in its plain dir instead, the table was never adopted into
-        the log, and every filelist operation refuses it until
-        :meth:`convert_to_filelist` has run."""
+        sits in its plain dir instead, or the current snapshot lists
+        files there (:meth:`_fl_lists_plain_dir`), every filelist
+        operation refuses the table until :meth:`convert_to_filelist`
+        has run."""
         gen = self._current_gen(name)
         if gen < 0:
             fs, plain = self._hfs(self._path(name))
-            if fs.exists(plain):
-                raise LookupError(
-                    f"table {name!r} holds rename-mode data and is not in the "
-                    f"filelist log: run convert_to_filelist({name!r}) first"
-                )
-            return -1, [], {}
-        return (gen, *self._fl_snapshot(name, gen))
+            files, stats, outside = [], {}, fs.exists(plain)
+        else:
+            files, stats = self._fl_snapshot(name, gen)
+            outside = self._fl_lists_plain_dir(name, files)
+        if outside:
+            raise LookupError(
+                f"table {name!r} holds rename-mode data outside the filelist "
+                f"log: run convert_to_filelist({name!r}) first"
+            )
+        return gen, files, stats
+
+    def _fl_lists_plain_dir(self, name: str, files: list[str]) -> bool:
+        """Whether a snapshot lists files of the rename-mode plain dir.
+        Logs written by versions that adopted an unpartitioned
+        rename-mode table implicitly, on its first filelist append,
+        reference its ``<t>/`` files; :meth:`convert_to_filelist`
+        re-commits such a table."""
+        marker = os.path.basename(self._path(name)) + "/"
+        return any(f.startswith(marker) for f in files)
 
     def _fl_abs(self, rel: str) -> str:
         return os.path.join(self.root, rel)
@@ -872,13 +887,20 @@ class Catalog:
         """Scan a filelist generation (current if None) from the files
         its manifest lists — the partition columns live in the data.
         Raises LookupError for a generation that cannot be resolved,
-        or a current table that is not in the log."""
+        a current table that is not in the log, or an earlier
+        generation that lists rename-mode files."""
         meta = self._meta(name)
         schema = self._with_ingest(meta.struct)
         if gen is None:
             g, files, _ = self._fl_current(name)
         else:
             g, files = gen, self._fl_snapshot(name, gen)[0]
+            if self._fl_lists_plain_dir(name, files):
+                raise LookupError(
+                    f"generation {g} of {name!r} lists rename-mode files outside "
+                    f"the filelist log; generations committed before "
+                    f"convert_to_filelist({name!r}) cannot be read"
+                )
         if not files:
             return self.spark.createDataFrame([], schema)
         if not self._fl_snapshot_readable(name, g, files):
@@ -921,17 +943,15 @@ class Catalog:
                     # mid-scan with a raw path-not-found. Readability
                     # is unverifiable without the full keep-set; raise
                     # (read-worded — this is a read, not a sweep).
-                    kf = self._fl_manifest_files(name, g)
-                    if kf is None:
+                    try:
+                        keep.update(self._fl_snapshot(name, g)[0])
+                    except LookupError as e:
                         raise LookupError(
                             f"cannot verify that generation {gen} of "
-                            f"{name!r} is readable: retained generation "
-                            f"{g} is unresolvable (torn or missing "
-                            "replay base?), so the GC keep-set — the "
-                            "set of files a pre-retention snapshot may "
-                            "still share — cannot be computed"
-                        )
-                    keep.update(kf)
+                            f"{name!r} is readable: the GC keep-set it "
+                            "is checked against needs every retained "
+                            "generation"
+                        ) from e
             doomed = [f for f in files if f not in keep] or files[:1]
         fs, p = self._hfs(self._fl_abs(doomed[0]))
         return bool(fs.exists(p))
@@ -1240,13 +1260,21 @@ class Catalog:
         The plain dir's rows are read with the declared schema (hive
         discovery restores the partition columns from the dir names)
         and committed as the first generation through the full-rewrite
-        path, so the partition values land in the data and no manifest
-        ever points at a hive-layout file. Only after that commit is
-        the plain dir deleted. A crash before the commit leaves the
-        table as it was, so the conversion can simply run again; on a
-        table already in the log a call only removes a leftover plain
-        dir. A rival converter that commits first makes this call
-        raise :class:`ConcurrentWriteError` and leave no staged batch.
+        path, so no manifest points at a hive-layout file. Only then is
+        the plain dir deleted: a crash before the commit leaves a table
+        that converts again.
+
+        A table already in the log only loses a leftover plain dir,
+        unless its current snapshot lists files there
+        (:meth:`_fl_lists_plain_dir`): those rows are re-committed the
+        same way first, and earlier generations that list them can no
+        longer be read.
+
+        A rival converter that commits first makes this call fail: with
+        :class:`ConcurrentWriteError` while this call stages (its batch
+        is deleted), or with a Spark read error once the rival has
+        deleted the plain dir, which can leave a partly written,
+        unreferenced batch dir for :meth:`vacuum` to collect.
         """
         if self.commit_mode != "filelist":
             raise ValueError("convert_to_filelist() requires commit_mode='filelist'")
@@ -1254,12 +1282,18 @@ class Catalog:
         fs, plain = self._hfs(self._path(name))
         if not fs.exists(plain):
             return
-        target = self._next_gen(name)  # pinned before the "not in log" read
-        if self._current_gen(name) < 0:
-            rows = self.spark.read.schema(self._with_ingest(meta.struct)).parquet(
-                self._path(name)
+        target = self._next_gen(name)  # pinned before the base read
+        cur = self._current_gen(name)
+        read = self.spark.read.schema(self._with_ingest(meta.struct))
+        if cur < 0:
+            self._rewrite_table_filelist(
+                name, read.parquet(self._path(name)), target_gen=target
             )
-            self._rewrite_table_filelist(name, rows, target_gen=target)
+        else:
+            files = self._fl_snapshot(name, cur)[0]
+            if self._fl_lists_plain_dir(name, files):
+                rows = read.parquet(*[self._fl_abs(f) for f in files])
+                self._rewrite_table_filelist(name, rows, target_gen=target)
         self._fs_delete(self._path(name))
         self.spark.catalog.refreshByPath(self._path(name))
 
@@ -1412,17 +1446,14 @@ class Catalog:
         committed byte total above _EMPTY_PROBE_MAX_BYTES returns None
         without reading any file (the non-empty common case), otherwise
         the (at most ~1 MB) footprint's row count settles it
-        (:meth:`_holds_rows`).
+        (:meth:`_holds_rows`). In filelist mode it raises what
+        :meth:`_fl_current` raises, before the insert writes anything.
         """
         meta = self._meta(name)
         if not meta.primary_keys:
             return None  # optimize() is already a metadata no-op
         if self.commit_mode == "filelist":
-            gen = self._current_gen(name)
-            resolved = self._fl_resolve(name, gen)
-            if resolved is None:
-                return None
-            files = resolved[0]
+            gen, files, _ = self._fl_current(name)
             if files:
                 total = 0
                 for f in files:

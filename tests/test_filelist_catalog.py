@@ -320,10 +320,11 @@ def test_filelist_migration_materializes_partition_columns(spark, tmp_path):
 
 
 def test_scan_pruned_legacy_table_falls_back_to_full_scan(spark, tmp_path):
-    """scan_pruned on a rename-mode table reopened as filelist must
-    never return an empty frame for a table that holds rows: before
-    conversion it raises the convert error, after it it prunes the
-    converted files to the matching rows."""
+    """The name is historical: no fallback exists any more. scan_pruned
+    on a rename-mode table reopened as filelist must never return an
+    empty frame for a table that holds rows: before conversion it
+    raises the convert error, after it it prunes the converted files
+    to the matching rows."""
     root = str(tmp_path / "migs")
     _rename_table(spark, root, ["year"])
     fl = Catalog(spark, root, commit_mode="filelist")
@@ -335,8 +336,9 @@ def test_scan_pruned_legacy_table_falls_back_to_full_scan(spark, tmp_path):
 
 
 def test_legacy_filelist_compact_sees_plain_dir_files(spark, tmp_path):
-    """data_files()/compact() on a rename-mode table reopened as
-    filelist refuse until conversion; afterwards they report and
+    """The name is historical: filelist never reads the plain dir now.
+    data_files() on a rename-mode table reopened as filelist refuses
+    until conversion; afterwards data_files()/compact() report and
     compact the converted files together with later appends."""
     root = str(tmp_path / "legc")
     _rename_table(spark, root, None)
@@ -351,6 +353,38 @@ def test_legacy_filelist_compact_sees_plain_dir_files(spark, tmp_path):
         ("A", 2024, 1.0), ("B", 2025, 2.0), ("C", 2024, 3.0), ("D", 2025, 4.0)
     ]
     assert fl.history("px")[0]["generation"] == 0
+
+
+def test_convert_to_filelist_recommits_plain_dir_references(spark, tmp_path):
+    """Older versions adopted an unpartitioned rename-mode table on its
+    first filelist append by listing its plain-dir files in the
+    manifest. Such a log is refused like an unconverted table;
+    convert_to_filelist re-commits its rows before it deletes the
+    plain dir, and later merges and upserts work."""
+    root = str(tmp_path / "refs")
+    _rename_table(spark, root, None)
+    fl = Catalog(spark, root, commit_mode="filelist", time_travel=5)
+    plain = sorted(
+        "px/" + os.path.basename(f) for f in _glob.glob(os.path.join(root, "px", "*.parquet"))
+    )
+    fl._commit_manifest("px", 0, files=plain, file_stats={})
+    fl.insert("px", _rows(spark, [("D", D2, 4.0)]))  # a delta on top
+    batch = _rows(spark, [("A", D1, 9.0)])
+    for fn in (lambda: fl.table("px"), lambda: fl.merge("px", batch)):
+        with pytest.raises(LookupError, match="convert_to_filelist"):
+            fn()
+    assert fl._current_gen("px") == 1
+    fl.convert_to_filelist("px")
+    assert not os.path.exists(os.path.join(root, "px"))
+    assert not fl._fl_lists_plain_dir("px", fl._fl_manifest_files("px", 2))
+    with pytest.raises(LookupError, match="convert_to_filelist"):
+        fl.table_at("px", 1)
+    want = [("A", 1.0), ("B", 2.0), ("C", 3.0), ("D", 4.0)]
+    assert _state(Catalog(spark, root, commit_mode="filelist"), "px") == want
+    fl.merge("px", batch)
+    fl.upsert("px", _rows(spark, [("B", D2, 8.0), ("B", D2, 8.0)]))
+    want = [("A", 9.0), ("B", 8.0), ("C", 3.0), ("D", 4.0)]
+    assert _state(Catalog(spark, root, commit_mode="filelist"), "px") == want
 
 
 def test_filelist_refuses_rename_table_until_converted(spark, tmp_path):
