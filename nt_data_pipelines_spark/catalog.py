@@ -893,8 +893,10 @@ class Catalog:
         schema = self._with_ingest(meta.struct)
         if gen is None:
             g, files, _ = self._fl_current(name)
+            cur = g
         else:
             g, files = gen, self._fl_snapshot(name, gen)[0]
+            cur = self._current_gen(name)
             if self._fl_lists_plain_dir(name, files):
                 raise LookupError(
                     f"generation {g} of {name!r} lists rename-mode files outside "
@@ -903,15 +905,17 @@ class Catalog:
                 )
         if not files:
             return self.spark.createDataFrame([], schema)
-        if not self._fl_snapshot_readable(name, g, files):
+        if not self._fl_snapshot_readable(name, g, files, cur):
             raise LookupError(
                 f"generation {g} of {name!r} data was GC'd — "
                 "raise time_travel to retain more"
             )
         return self.spark.read.schema(schema).parquet(*[self._fl_abs(f) for f in files])
 
-    def _fl_snapshot_readable(self, name: str, gen: int, files: list[str]) -> bool:
-        """Whether every file a generation references still exists.
+    def _fl_snapshot_readable(self, name: str, gen: int, files: list[str], cur: int) -> bool:
+        """Whether every file a generation references still exists;
+        ``cur`` is the current generation the caller resolved (one
+        manifest-dir listing per read, not two).
 
         GC deletes per-FILE (drop = older-manifest-only files), so
         probing the first sorted file is not enough: an old generation
@@ -923,7 +927,6 @@ class Catalog:
         the keep-set is readable by the GC invariant itself (no probe
         needed); inside the retention window that is every file.
         """
-        cur = self._current_gen(name)
         if gen >= cur - self.time_travel:
             # in-retention generations are protected by the GC keep
             # rule — one cheap first-file sanity probe (vs. external
@@ -2194,7 +2197,7 @@ class Catalog:
                 continue  # torn/GC'd, or a delta with no surviving base
             files = resolved[0]
             try:
-                readable = not files or self._fl_snapshot_readable(name, g, files)
+                readable = not files or self._fl_snapshot_readable(name, g, files, cur)
             except LookupError:
                 # readability unverifiable (a torn RETAINED gen blocks
                 # the keep-set): a LISTING skips the row — same

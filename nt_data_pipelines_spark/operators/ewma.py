@@ -184,6 +184,15 @@ def _estimated_bytes(df: DataFrame) -> int | None:
         return None
 
 
+def ewm_mean_pandas(values, half_life: float, adjust: bool = True):
+    """The reference's ``ewm_mean`` on a pandas Series, or on each group
+    of a ``SeriesGroupBy`` (bit-identical per group): NaN is null and
+    stays in the weights (``ignore_nulls=False``). The one definition
+    of the smoothing numerics — every EWMA kernel, grouped or fused
+    per ticker, calls it."""
+    return values.ewm(halflife=half_life, adjust=adjust, ignore_na=False).mean()
+
+
 def _ewm_grouped(
     df: DataFrame,
     keys: list[str],
@@ -235,11 +244,7 @@ def _ewm_grouped(
         pdf = pdf.sort_values([*keys, *order], kind="mergesort")
         grouped = pdf.groupby(keys, sort=False, dropna=False)
         for value_col, out_col in outputs:
-            res = (
-                grouped[value_col]
-                .ewm(halflife=half_life, adjust=adjust, ignore_na=False)
-                .mean()
-            )
+            res = ewm_mean_pandas(grouped[value_col], half_life, adjust)
             # realign by ROW LABEL, not position: groupby.ewm returns a
             # (keys..., row-label) MultiIndex whose group order is not
             # guaranteed to match frame order (observed misaligned

@@ -12,7 +12,9 @@ with a COUNT gate over the same frame.
 All functions are pure DataFrame -> DataFrame, stay JVM-side
 (built-in ``pyspark.sql.functions`` only — no Python UDFs), and keep
 a single window spec per partition+ordering so Catalyst computes
-sibling window functions in one shuffle/sort pass.
+sibling window functions in one shuffle/sort pass. The exception is
+:func:`rolling_std_numpy`, the bit-identical numpy twin of
+:func:`rolling_std` that fused per-key kernels call.
 
 Scale notes: a window over ``partitionBy(key)`` shuffles once on
 ``key``; all window ops sharing (partition, order) reuse that
@@ -25,6 +27,8 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
+from numpy.lib.stride_tricks import sliding_window_view
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
@@ -126,6 +130,33 @@ def rolling_std(
         out_col,
         _gated(F.stddev_samp(value_col).over(w), F.count(value_col).over(w), window_size),
     )
+
+
+def rolling_std_numpy(x: np.ndarray, window_size: int) -> np.ndarray:
+    """:func:`rolling_std` of one date-ordered series, for grouped-map
+    kernels; NaN stands for null, as Arrow hands nulls to pandas.
+
+    Bit-identical to the Spark window: a sliding row frame re-aggregates
+    each window from its first row with ``stddev_samp``'s update
+    (``delta = x - avg; deltaN = delta / n; avg += deltaN;
+    m2 += delta * (delta - deltaN)``), here run over all windows at
+    once, then ``sqrt(m2 / (n - 1))``. Same gate: null unless all
+    ``window_size`` rows are non-null. A two-pass ``np.std(ddof=1)``
+    differs in the last ulp on some windows."""
+    out = np.full(len(x), np.nan)
+    if len(x) < window_size:
+        return out
+    win = sliding_window_view(x, window_size)
+    avg = np.zeros(len(win))
+    m2 = np.zeros(len(win))
+    for i in range(window_size):
+        delta = win[:, i] - avg
+        delta_n = delta / (i + 1.0)
+        avg += delta_n
+        m2 += delta * (delta - delta_n)
+    full = ~np.isnan(win).any(axis=1)
+    out[window_size - 1 :] = np.where(full, np.sqrt(m2 / (window_size - 1.0)), np.nan)
+    return out
 
 
 def rolling_mean(

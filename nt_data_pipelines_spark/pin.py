@@ -8,14 +8,15 @@ operators, the DAG runner, and the ``stage_boundary`` machinery in
 pipelines/corpus.py).
 
 The default pin — ``localCheckpoint(eager=False, MEMORY_AND_DISK)`` —
-computes the relation on first touch, truncates the logical plan (no
-InMemoryRelation re-planning under AQE), and stores blocks on the
-executors. The trade: lineage is GONE, so on a real cluster a lost
+computes the rows on first touch and stores their blocks on the
+executors (under AQE the relation's shuffle-map stages already run
+inside ``pin()``, see :func:`pin`), and truncates the logical plan (no
+InMemoryRelation re-planning under AQE). The trade: lineage is GONE, so on a real cluster a lost
 executor fails the job instead of recomputing (guide §5). That stance
 is right for single-node and dedicated-cluster runs; multi-tenant
 clusters with preemption should flip ``NT_PIN_MODE``:
 
-- ``local_checkpoint`` (default): lazy localCheckpoint, MEMORY_AND_DISK.
+- ``local_checkpoint`` (default): non-eager localCheckpoint, MEMORY_AND_DISK.
 - ``checkpoint``: reliable checkpoint to ``spark.sparkContext
   .setCheckpointDir(...)`` (the caller must have set it — Spark raises
   otherwise): same plan truncation, survives executor loss, costs a
@@ -51,11 +52,15 @@ def pin(df: DataFrame) -> DataFrame:
     """Materialize-once marker for a relation referenced more than once
     downstream (a self-join's sides, an aggregate joined back, a frame
     feeding two upserts): Catalyst would otherwise re-execute its whole
-    lineage per reference. Lazy — computed on first touch, so building
-    a plan runs no Spark job. The default ``localCheckpoint`` truncates
-    the plan and trades lineage for speed (a lost executor fails the
-    job); blocks are released with the session. Mechanism per
-    ``NT_PIN_MODE`` (module docstring)."""
+    lineage per reference. Not free to build under AQE (on in every
+    session here): ``localCheckpoint(eager=False)`` finalizes the
+    adaptive plan, which runs the relation's shuffle-map stages inside
+    ``pin()`` — measured, a ``groupBy`` frame ran 1 job in ``pin()`` and
+    2 at its first action, a narrow frame 0 and 2. The rows themselves
+    are computed and stored on first touch. The default
+    ``localCheckpoint`` truncates the plan and trades lineage for speed
+    (a lost executor fails the job); blocks are released with the
+    session. Mechanism per ``NT_PIN_MODE`` (module docstring)."""
     from pyspark import StorageLevel
 
     mode = pin_mode()

@@ -2,15 +2,35 @@
 
 Reproduces ``daily_flow`` / the backfill entry points
 (__main__.py:22-49) as one dependency-scheduled stage graph. The
-edges are declared once, in :data:`GRAPH`, and both flows run it: a
-stage starts the moment every stage it reads from has committed, so
+edges are declared once, in :data:`GRAPH`, and both flows run it.
+Edges are table-level: a stage starts the moment every table it reads
+has committed, even while the stage writing it is still running, so
 independent branches (returns, factor model, covariances, signals,
 benchmark) submit their Spark jobs concurrently instead of leaving
-the cores idle behind one job at a time. Each stage reads its inputs
-from catalog tables and upserts its outputs — the same read ->
-transform -> create/insert/optimize lifecycle as the reference
-(SURVEY.md §3.1). Cron scheduling and failure webhooks are deployment
-concerns; ``on_failure`` is a pluggable callback.
+the cores idle behind one job at a time::
+
+    stage               reads                          upserts, in order
+    stock_returns       -                              stock_returns
+    etf_returns         -                              etf_returns
+    factor_model        stock_returns, etf_returns     idio_vol, factor_loadings
+    factor_covariances  etf_returns                    factor_covariances
+    signals             stock_returns                  signals, scores
+    benchmark           stock_returns                  benchmark_weights,
+                                                       benchmark_returns
+    betas               stock_returns,                 betas
+                        benchmark_returns
+    alphas              scores, idio_vol               alphas
+    portfolio           alphas, benchmark_weights,     portfolio_weights,
+                        factor_loadings,               portfolio_metrics
+                        factor_covariances, idio_vol
+
+``alphas`` starts once ``idio_vol`` lands, while ``factor_model``
+still writes the loadings, and ``portfolio`` does not wait on
+``benchmark_returns``. Each stage reads its inputs from catalog tables
+and upserts its outputs — the same read -> transform ->
+create/insert/optimize lifecycle as the reference (SURVEY.md §3.1).
+Cron scheduling and failure webhooks are deployment concerns;
+``on_failure`` is a pluggable callback.
 
 The backfill here is the full-history variant (T5). Daily increments
 run the same graph with the T2 freshness gate and a T3 tail-window
@@ -20,8 +40,10 @@ slice (each stage keeps only ``date == end`` before upserting).
 from __future__ import annotations
 
 import datetime as dt
+import queue
 from collections.abc import Callable
-from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
+from concurrent.futures import Future, ThreadPoolExecutor
+from typing import NamedTuple
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
@@ -39,11 +61,14 @@ from nt_data_pipelines_spark.pipelines import (
     calculate_signals,
     compute_portfolio_weights,
     compute_returns,
-    estimate_factor_model,
 )
 from nt_data_pipelines_spark.pipelines.betas import estimate_betas
 from nt_data_pipelines_spark.pipelines.covariances import estimate_factor_covariances
-from nt_data_pipelines_spark.pipelines.factor_model import clean_factor_loadings, clean_idio_vol
+from nt_data_pipelines_spark.pipelines.factor_model import (
+    factor_loadings_of,
+    fit_factor_model,
+    idio_vol_of,
+)
 
 _D = T.DoubleType()
 _S = T.StringType()
@@ -172,32 +197,65 @@ def ensure_tables(cat: Catalog) -> None:
         cat.create(name, spec["schema"], spec["partition"], spec["pk"], mode="skip")
 
 
-# The DAG both flows run: stage -> the stages whose committed tables it
-# reads (besides the ingest tables: calendar, universe, prices). A
-# stage upserts the table it is named after, or the tables its comment
-# names; a pinned frame never leaves the stage that pins it, so no two
-# threads first-touch one lazy checkpoint. tests/test_dag_graph.py checks every stage's reads
-# against these edges.
-GRAPH: dict[str, tuple[str, ...]] = {
-    "stock_returns": (),
-    "etf_returns": (),
-    # fitted (pinned) -> factor_loadings, idio_vol
-    "factor_model": ("stock_returns", "etf_returns"),
-    "factor_covariances": ("etf_returns",),
-    # signals -> scores
-    "signals": ("stock_returns",),
-    # uni_ret (pinned in the backfill) -> benchmark_weights, benchmark_returns
-    "benchmark": ("stock_returns",),
-    "betas": ("benchmark",),
-    "alphas": ("signals", "factor_model"),
-    # portfolio_weights, portfolio_metrics
-    "portfolio": ("alphas", "benchmark", "factor_covariances"),
+class Stage(NamedTuple):
+    """One :data:`GRAPH` stage: the derived tables it reads (the ingest
+    tables — calendar, universe, prices — are always there) and the
+    tables it upserts, in commit order."""
+
+    reads: tuple[str, ...]
+    writes: tuple[str, ...]
+
+
+# The DAG both flows run, with table-level edges: a stage starts the
+# moment every table it reads has committed, even while the stage that
+# writes it is still running. A pinned frame never leaves the stage
+# that pins it, so one thread first touches it (under AQE the pin
+# itself already runs the frame's shuffle-map stages). tests/
+# test_dag_graph.py checks every stage's reads and writes against
+# these declarations.
+GRAPH: dict[str, Stage] = {
+    "stock_returns": Stage((), ("stock_returns",)),
+    "etf_returns": Stage((), ("etf_returns",)),
+    # one fused kernel; idio_vol first: alphas waits only on it
+    "factor_model": Stage(("stock_returns", "etf_returns"), ("idio_vol", "factor_loadings")),
+    "factor_covariances": Stage(("etf_returns",), ("factor_covariances",)),
+    "signals": Stage(("stock_returns",), ("signals", "scores")),
+    # uni_ret is pinned in the backfill: both upserts read it
+    "benchmark": Stage(("stock_returns",), ("benchmark_weights", "benchmark_returns")),
+    "betas": Stage(("stock_returns", "benchmark_returns"), ("betas",)),
+    "alphas": Stage(("scores", "idio_vol"), ("alphas",)),
+    "portfolio": Stage(
+        ("alphas", "benchmark_weights", "factor_loadings", "factor_covariances", "idio_vol"),
+        ("portfolio_weights", "portfolio_metrics"),
+    ),
 }
 
 
-def _run_graph(spark: SparkSession, stages: dict[str, Callable[[], None]]) -> None:
-    """Run each stage of :data:`GRAPH` once, as soon as every stage it
-    reads from has committed.
+class _CommitReporter:
+    """The two catalog calls a stage body makes. ``upsert`` reports the
+    table to the scheduler once ``Catalog.upsert`` has returned, so
+    the stages that read it can start."""
+
+    def __init__(self, cat: Catalog, events: queue.Queue):
+        self._cat = cat
+        self._events = events
+
+    def table(self, name: str) -> DataFrame:
+        return self._cat.table(name)
+
+    def upsert(self, name: str, df: DataFrame) -> None:
+        self._cat.upsert(name, df)
+        self._events.put(name)
+
+
+def _run_graph(
+    spark: SparkSession,
+    cat: Catalog,
+    build: Callable[[_CommitReporter], dict[str, Callable[[], None]]],
+) -> None:
+    """Run each stage of :data:`GRAPH` once, as soon as every table it
+    reads has committed. ``build`` makes the stage bodies over a
+    catalog whose ``upsert`` reports each commit.
 
     A thread is started only for a ready stage with no idle thread to
     take it, so the pool never grows past the graph's width — there is
@@ -205,20 +263,41 @@ def _run_graph(spark: SparkSession, stages: dict[str, Callable[[], None]]) -> No
     ``inheritable_thread_target(spark)``: the caller's job group, tags
     and scheduler pool reach every job a stage starts. After the first
     stage error no stage starts; the running ones finish, every thread
-    is joined, and the error propagates with its traceback."""
+    is joined, and the error propagates with its traceback. A stage
+    that returns without committing a table it declares raises
+    ``RuntimeError``, and so does a stage left waiting on a table no
+    stage committed: nothing hangs and nothing is silently skipped."""
+    events: queue.Queue = queue.Queue()
+    stages = build(_CommitReporter(cat, events))
     waiting = dict(GRAPH)
     running: dict[Future, str] = {}
-    done: set[str] = set()
+    committed: set[str] = set()
     with ThreadPoolExecutor(max_workers=len(GRAPH), thread_name_prefix="nt-dag") as pool:
-        while waiting or running:
-            for name in [n for n, deps in waiting.items() if done.issuperset(deps)]:
+        while True:
+            for name in [n for n, st in waiting.items() if committed.issuperset(st.reads)]:
                 del waiting[name]
-                target = inheritable_thread_target(spark)(stages[name])
-                running[pool.submit(target)] = name
-            finished, _ = wait(running, return_when=FIRST_COMPLETED)
-            for fut in finished:
-                fut.result()
-                done.add(running.pop(fut))
+                fut = pool.submit(inheritable_thread_target(spark)(stages[name]))
+                running[fut] = name
+                # queued after the stage's commits: its thread put those first
+                fut.add_done_callback(events.put)
+            if not running:
+                break
+            event = events.get()
+            if isinstance(event, str):
+                committed.add(event)
+                continue
+            name = running.pop(event)
+            event.result()
+            missing = [t for t in GRAPH[name].writes if t not in committed]
+            if missing:
+                raise RuntimeError(
+                    f"stage {name!r} returned without committing {missing[0]!r}"
+                )
+    if waiting:
+        raise RuntimeError(
+            f"stages {sorted(waiting)} wait on tables no stage committed: "
+            f"{sorted({t for st in waiting.values() for t in st.reads} - committed)}"
+        )
 
 
 def _upsert_portfolio(cat: Catalog, weights: DataFrame) -> None:
@@ -246,16 +325,15 @@ def _backfill_stages(
         cat.upsert("etf_returns", compute_returns(cat.table("etf_prices")))
 
     def factor_model():
-        # pinned: BOTH the loadings and idio-vol upserts materialize
-        # `fitted` — unpinned, the rolling-OLS grouped-map kernel (the
-        # flow's most expensive stage) executes twice
-        fitted = pin(
-            estimate_factor_model(
-                cat.table("stock_returns"), cat.table("etf_returns"), FACTORS, window
+        # pinned: BOTH upserts read `fit` — unpinned, the fused kernel
+        # (the flow's most expensive stage) executes twice
+        fit = pin(
+            fit_factor_model(
+                cat.table("stock_returns"), cat.table("etf_returns"), FACTORS, window, half_life
             )
         )
-        cat.upsert("factor_loadings", clean_factor_loadings(fitted, FACTORS, half_life))
-        cat.upsert("idio_vol", clean_idio_vol(fitted, window, half_life))
+        cat.upsert("idio_vol", idio_vol_of(fit))
+        cat.upsert("factor_loadings", factor_loadings_of(fit, FACTORS))
 
     def factor_covariances():
         cat.upsert(
@@ -341,7 +419,7 @@ def backfill_flow(
         for src in ("stock_prices", "etf_prices"):
             if cat.table(src).limit(1).count() == 0:
                 raise ValueError(f"No values found: {src} is empty")
-        _run_graph(spark, _backfill_stages(cat, window, half_life))
+        _run_graph(spark, cat, lambda c: _backfill_stages(c, window, half_life))
     except Exception as exc:
         _fire_failure_hook(on_failure, exc)
         raise
@@ -401,19 +479,18 @@ def _daily_stages(
         cat.upsert("etf_returns", only_end(compute_returns(cat.table("etf_prices"))))
 
     def factor_model():
-        # pinned: both tail upserts materialize `fitted` (see backfill)
-        fitted = pin(
-            estimate_factor_model(
+        # pinned: both tail upserts read `fit` (see backfill)
+        fit = pin(
+            fit_factor_model(
                 tail(cat.table("stock_returns"), 2 * window),
                 tail(cat.table("etf_returns"), 2 * window),
                 FACTORS,
                 window,
+                half_life,
             )
         )
-        cat.upsert(
-            "factor_loadings", only_end(clean_factor_loadings(fitted, FACTORS, half_life))
-        )
-        cat.upsert("idio_vol", only_end(clean_idio_vol(fitted, window, half_life)))
+        cat.upsert("idio_vol", only_end(idio_vol_of(fit)))
+        cat.upsert("factor_loadings", only_end(factor_loadings_of(fit, FACTORS)))
 
     def factor_covariances():
         cat.upsert(
@@ -539,7 +616,8 @@ def daily_flow(
             return False
         _run_graph(
             spark,
-            _daily_stages(cat, end, starts, window, half_life, reversal_window),
+            cat,
+            lambda c: _daily_stages(c, end, starts, window, half_life, reversal_window),
         )
         return True
     except Exception as exc:

@@ -1,9 +1,13 @@
 """The flows' dependency-scheduled stage graph (``runner.GRAPH``).
 
 - coverage: every stage, run on its own against a catalog proxy that
-  records ``table``/``upsert`` calls, reads only ingest tables, its own
-  outputs and tables written by its declared ancestors — a stage that
-  reads a table without declaring the edge would race its writer;
+  records ``table``/``upsert`` calls, upserts exactly the tables it
+  declares, in the declared order, and reads only ingest tables, its
+  own outputs and the tables it declares — a stage that reads a table
+  without declaring it would race its writer;
+- scheduling: with fake stages, a reader starts once the table it
+  needs commits, while its writer still runs, and a stage that skips
+  a declared upsert raises instead of leaving its readers waiting;
 - determinism: two concurrent backfill + daily runs on identical inputs
   write identical tables, equal to a run of the stages one at a time
   in dependency order;
@@ -27,6 +31,7 @@ from nt_data_pipelines_spark.catalog import Catalog
 from nt_data_pipelines_spark.pipelines import runner
 from nt_data_pipelines_spark.pipelines.runner import (
     GRAPH,
+    Stage,
     _backfill_stages,
     _daily_stages,
     _lookback,
@@ -50,22 +55,15 @@ DERIVED = (
 
 def _topo_order() -> list[str]:
     order: list[str] = []
+    committed: set[str] = set()
     while len(order) < len(GRAPH):
-        ready = [n for n, deps in GRAPH.items() if n not in order and set(deps) <= set(order)]
+        ready = [
+            n for n, st in GRAPH.items() if n not in order and set(st.reads) <= committed
+        ]
         assert ready, f"GRAPH has a cycle among {set(GRAPH) - set(order)}"
         order += ready
+        committed.update(t for n in ready for t in GRAPH[n].writes)
     return order
-
-
-def _ancestors(stage: str) -> set[str]:
-    out: set[str] = set()
-    todo = list(GRAPH[stage])
-    while todo:
-        s = todo.pop()
-        if s not in out:
-            out.add(s)
-            todo += GRAPH[s]
-    return out
 
 
 class _Recorder:
@@ -76,14 +74,14 @@ class _Recorder:
     def __init__(self, cat: Catalog):
         self._cat = cat
         self.reads: set[str] = set()
-        self.writes: set[str] = set()
+        self.writes: list[str] = []
 
     def table(self, name):
         self.reads.add(name)
         return self._cat.table(name)
 
     def upsert(self, name, df):
-        self.writes.add(name)
+        self.writes.append(name)
         self._cat.upsert(name, df)
 
 
@@ -139,7 +137,10 @@ def sequential(spark, ingested, tmp_path_factory):
 
 def test_graph_is_a_dag_over_one_stage_set():
     assert set(_topo_order()) == set(GRAPH)
-    assert all(set(deps) <= set(GRAPH) for deps in GRAPH.values())
+    writes = [t for st in GRAPH.values() for t in st.writes]
+    # every derived table has exactly one writer, and every read has one
+    assert sorted(writes) == sorted(DERIVED)
+    assert all(set(st.reads) <= set(writes) for st in GRAPH.values())
     assert set(_backfill_stages(None, WINDOW, HL)) == set(GRAPH)
     assert set(_daily_stages(None, None, {}, WINDOW, HL, REVERSAL)) == set(GRAPH)
 
@@ -147,18 +148,13 @@ def test_graph_is_a_dag_over_one_stage_set():
 def test_stage_reads_are_declared_edges(sequential):
     _, records = sequential
     for flow in ("backfill", "daily"):
-        writes = {stage: records[flow, stage].writes for stage in GRAPH}
-        # every derived table has exactly one writer
-        owners = [t for ws in writes.values() for t in ws]
-        assert sorted(owners) == sorted(DERIVED), flow
-        for stage in GRAPH:
-            allowed = INGEST | writes[stage]
-            for anc in _ancestors(stage):
-                allowed |= writes[anc]
-            undeclared = records[flow, stage].reads - allowed
+        for stage, st in GRAPH.items():
+            rec = records[flow, stage]
+            assert rec.writes == list(st.writes), (flow, stage)
+            undeclared = rec.reads - (INGEST | set(st.writes) | set(st.reads))
             assert not undeclared, (
-                f"{flow} stage {stage!r} reads {sorted(undeclared)} without a "
-                "GRAPH edge to the stage that writes it"
+                f"{flow} stage {stage!r} reads {sorted(undeclared)} without "
+                "declaring them in GRAPH"
             )
 
 
@@ -239,3 +235,96 @@ def test_daily_flow_jobs_carry_callers_group(spark, ingested, sequential, tmp_pa
     last = _probe_job(spark, "dag-probe-after")
     grouped = sorted(_job_ids(sc, "dag-caller"))
     assert grouped and grouped == list(range(first + 1, last))
+
+
+TIMEOUT = 30.0
+
+
+class _FakeCatalog:
+    def __init__(self):
+        self.tables: dict[str, int] = {}
+
+    def table(self, name):
+        return self.tables[name]
+
+    def upsert(self, name, value):
+        self.tables[name] = value
+
+
+def _run_bounded(spark, cat, build) -> None:
+    """``_run_graph`` on a thread joined with a timeout: a scheduler
+    that hangs fails the test instead of the suite."""
+    errors: list[BaseException] = []
+
+    def run():
+        try:
+            runner._run_graph(spark, cat, build)
+        except BaseException as e:  # noqa: BLE001 — handed to the test thread
+            errors.append(e)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(TIMEOUT)
+    assert not t.is_alive(), "the scheduler hung"
+    if errors:
+        raise errors[0]
+
+
+def test_reader_starts_when_its_table_commits(spark, monkeypatch):
+    """Edges are table-level: the reader of ``a`` runs while ``a``'s
+    writer is still running. Stage-level scheduling would start the
+    reader only after the writer returned, so the writer's wait for it
+    would time out."""
+    monkeypatch.setattr(
+        runner,
+        "GRAPH",
+        {"writer": Stage((), ("a", "b")), "reader": Stage(("a",), ("c",))},
+    )
+    cat = _FakeCatalog()
+    reader_ran = threading.Event()
+
+    def build(c):
+        def writer():
+            c.upsert("a", 1)
+            assert reader_ran.wait(TIMEOUT / 2), "the reader did not start on 'a'"
+            c.upsert("b", 2)
+
+        def reader():
+            c.upsert("c", c.table("a") + 1)
+            reader_ran.set()
+
+        return {"writer": writer, "reader": reader}
+
+    _run_bounded(spark, cat, build)
+    assert cat.tables == {"a": 1, "b": 2, "c": 2}
+
+
+def test_missing_commit_raises_instead_of_waiting(spark, monkeypatch):
+    """A stage that returns without one of its declared upserts raises,
+    naming the stage and the table, and its reader never starts; a
+    stage reading a table no stage writes raises too."""
+    cat = _FakeCatalog()
+
+    def build(c):
+        return {
+            "writer": lambda: c.upsert("a", 1),
+            "reader": lambda: c.upsert("c", 3),
+        }
+
+    monkeypatch.setattr(
+        runner,
+        "GRAPH",
+        {"writer": Stage((), ("a", "b")), "reader": Stage(("b",), ("c",))},
+    )
+    with pytest.raises(RuntimeError, match="'writer' returned without committing 'b'"):
+        _run_bounded(spark, cat, build)
+    assert cat.tables == {"a": 1}
+
+    monkeypatch.setattr(
+        runner,
+        "GRAPH",
+        {"writer": Stage((), ("a",)), "reader": Stage(("z",), ("c",))},
+    )
+    with pytest.raises(RuntimeError, match=r"\['reader'\] wait on tables .*\['z'\]"):
+        _run_bounded(spark, cat, build)
+    assert "c" not in cat.tables

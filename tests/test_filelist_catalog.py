@@ -1013,3 +1013,24 @@ def test_unverifiable_readability_raises_read_worded(spark, tmp_path):
     # (same treatment history gives the torn generation itself)
     gens = [h["generation"] for h in cat.history("m")]
     assert 1 not in gens and 2 not in gens
+
+
+def test_current_read_lists_the_manifest_dir_once(spark, tmp_path, monkeypatch):
+    """A current-generation ``table()`` resolves the generation once
+    and checks readability against it: one manifest-dir listing (one
+    LIST request on an object store) per read."""
+    cat = Catalog(spark, str(tmp_path / "fl"), commit_mode="filelist")
+    cat.create("px", SCHEMA, ["year"], ["ticker", "date"], mode="replace")
+    cat.insert("px", _rows(spark, [("A", D1, 1.0), ("B", D2, 2.0)]))
+    cat.upsert("px", _rows(spark, [("A", D1, 5.0)]))
+    listings = []
+    real = Catalog._manifest_gens
+
+    def counting(self, name):
+        listings.append(name)
+        return real(self, name)
+
+    monkeypatch.setattr(Catalog, "_manifest_gens", counting)
+    for n in range(1, 4):
+        assert _state(cat, "px") == [("A", 5.0), ("B", 2.0)]
+        assert listings == ["px"] * n

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from nt_data_pipelines_spark.config import FACTORS
 from nt_data_pipelines_spark.operators.ewma import ewm_mean
+from nt_data_pipelines_spark.operators.rolling_ols import rolling_ols
 from nt_data_pipelines_spark.pipelines import (
     calculate_alphas,
     calculate_benchmark_returns,
@@ -30,7 +31,13 @@ from nt_data_pipelines_spark.pipelines import (
 )
 from nt_data_pipelines_spark.pipelines.betas import estimate_betas
 from nt_data_pipelines_spark.pipelines.covariances import estimate_factor_covariances
-from nt_data_pipelines_spark.pipelines.factor_model import clean_factor_loadings, clean_idio_vol
+from nt_data_pipelines_spark.pipelines.factor_model import (
+    clean_factor_loadings,
+    clean_idio_vol,
+    factor_loadings_of,
+    fit_factor_model,
+    idio_vol_of,
+)
 from nt_data_pipelines_spark.sources import synthetic as S
 
 WINDOW = 120  # > short ticker's 99 returns, so the skip path triggers
@@ -102,6 +109,78 @@ def test_factor_model_and_downstream(spark, returns):
     assert np.std(zs, ddof=1) == pytest.approx(1.0, rel=1e-9)
     alphas = calculate_alphas(scores, idio).filter(F.col("alpha").isNotNull()).cache()
     assert alphas.count() > 0
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_fused_factor_model_equals_composed_path(returns):
+    """The DAG's fused per-ticker kernel writes exactly what the
+    composed oracle (OLS grouped map, Spark-window rolling std, EWMA
+    grouped maps) writes: no tolerance, nulls in the same places."""
+    stock_ret, etf_ret = returns
+    hole = stock_ret.filter(F.col("ticker") == "T01").orderBy("date").collect()[WINDOW + 80]
+    stock_ret = stock_ret.withColumn(
+        "return",
+        F.when(
+            (F.col("ticker") == "T01") & (F.col("date") == F.lit(hole["date"])), None
+        ).otherwise(F.col("return")),
+    )
+    fitted = estimate_factor_model(stock_ret, etf_ret, FACTORS, window=WINDOW)
+    fit = fit_factor_model(stock_ret, etf_ret, FACTORS, WINDOW, half_life=20).cache()
+    loadings = _rows(factor_loadings_of(fit, FACTORS))
+    idio = _rows(idio_vol_of(fit))
+    assert loadings == _rows(clean_factor_loadings(fitted, FACTORS, half_life=20))
+    assert idio == _rows(clean_idio_vol(fitted, window=WINDOW, half_life=20))
+    # the cases the equality covers: the short ticker is skipped, and a
+    # full ticker keeps its null pre-window head (rows sort by date)
+    assert S.SHORT_TICKER not in {r[0] for r in idio}
+    t00 = [r[-1] for r in idio if r[0] == "T00"]
+    assert len(t00) == N_DAYS - 1
+    assert t00[2 * WINDOW - 3] is None and t00[2 * WINDOW - 2] is not None
+    spy = [r[-1] for r in loadings if r[0] == "T00" and r[3] == "SPY"]
+    assert spy[WINDOW - 2] is None and spy[WINDOW - 1] is not None
+    assert (hole["ticker"], hole["date"]) in {(r[0], r[1]) for r in idio}
+
+
+def test_fused_betas_equal_composed_path(data, returns):
+    """``estimate_betas``' one kernel per ticker equals the composition
+    it fuses: rolling OLS, drop the null betas, EWMA per ticker."""
+    _, _, uni = data
+    stock_ret, _ = returns
+    uni_ret = uni.join(
+        stock_ret.select("date", "ticker", "return"), ["date", "ticker"], "left"
+    ).filter(F.col("return").isNotNull())
+    bret = calculate_benchmark_returns(uni_ret, calculate_benchmark_weights(uni_ret)).cache()
+    joined = stock_ret.join(
+        F.broadcast(bret.withColumnRenamed("return", "benchmark_return")), "date", "left"
+    )
+    fitted = rolling_ols(
+        joined,
+        partition_by="ticker",
+        order_by="date",
+        y_col="return",
+        x_cols=["benchmark_return"],
+        window=WINDOW,
+        const_name="alpha",
+        coef_prefix="beta_",
+        drop_partial=True,
+    )
+    raw = fitted.filter(F.col("beta_benchmark_return").isNotNull()).select(
+        "ticker", "date", F.col("beta_benchmark_return").alias("historical_beta")
+    )
+    composed = ewm_mean(
+        raw, "ticker", "date", "historical_beta", half_life=20, out_col="predicted_beta",
+        scan_fanout=1.0,
+    ).select(
+        "ticker", "date", F.year("date").cast("int").alias("year"),
+        "historical_beta", "predicted_beta",
+    )
+    got = _rows(estimate_betas(stock_ret, bret, window=WINDOW, half_life=20))
+    assert got == _rows(composed)
+    assert S.SHORT_TICKER not in {r[0] for r in got}
+    assert len([r for r in got if r[0] == "T00"]) == (N_DAYS - 1) - WINDOW + 1
 
 
 def test_covariances_symmetric_full_grid(returns):

@@ -595,6 +595,34 @@ def test_rolling_sum_std_match_pandas_randomized(spark, rows, window):
     )
 
 
+@pytest.mark.parametrize("window", [2, 3, 60])
+@given(
+    values=st.lists(
+        st.floats(min_value=-1e3, max_value=1e3, allow_nan=False), min_size=2, max_size=150
+    ),
+    gaps=st.lists(st.integers(min_value=0, max_value=149), max_size=4),
+)
+@settings(**_SETTINGS)
+def test_rolling_std_numpy_equals_spark_window(spark, window, values, gaps):
+    """The fused kernels' numpy rolling std is bit-identical to the
+    Spark window it replaces, null gaps (NaN on the numpy side) and
+    the full-window gate included — no tolerance."""
+    import numpy as np
+
+    from nt_data_pipelines_spark.operators.windows import rolling_std, rolling_std_numpy
+
+    xs = [None if i in gaps else v for i, v in enumerate(values)]
+    schema = T.StructType(
+        [T.StructField("k", T.IntegerType()), T.StructField("t", T.IntegerType()),
+         T.StructField("x", T.DoubleType())]
+    )
+    df = spark.createDataFrame([(0, i, x) for i, x in enumerate(xs)], schema)
+    got = [r["s"] for r in rolling_std(df, "k", "t", "x", window, out_col="s").orderBy("t").collect()]
+    twin = rolling_std_numpy(np.array([np.nan if x is None else x for x in xs]), window)
+    want = [None if np.isnan(v) else float(v) for v in twin]
+    assert got == want
+
+
 @given(rows=_SERIES)
 @settings(**_SETTINGS)
 def test_pct_change_matches_pandas_randomized(spark, rows):
