@@ -625,7 +625,8 @@ def test_rolling_std_numpy_equals_spark_window(spark, window, values, gaps):
          T.StructField("x", T.DoubleType())]
     )
     df = spark.createDataFrame([(0, i, x) for i, x in enumerate(xs)], schema)
-    got = [r["s"] for r in rolling_std(df, "k", "t", "x", window, out_col="s").orderBy("t").collect()]
+    spark_std = rolling_std(df, "k", "t", "x", window, out_col="s").orderBy("t")
+    got = [r["s"] for r in spark_std.collect()]
     twin = rolling_std_numpy(np.array([np.nan if x is None else x for x in xs]), window)
     want = [None if np.isnan(v) else float(v) for v in twin]
     assert got == want
