@@ -30,11 +30,15 @@ still writes the loadings, and ``portfolio`` does not wait on
 and upserts its outputs — the same read -> transform ->
 create/insert/optimize lifecycle as the reference (SURVEY.md §3.1).
 Cron scheduling and failure webhooks are deployment concerns;
-``on_failure`` is a pluggable callback.
+``on_failure(exc)`` is a pluggable callback.
 
-The backfill here is the full-history variant (T5). Daily increments
-run the same graph with the T2 freshness gate and a T3 tail-window
-slice (each stage keeps only ``date == end`` before upserting).
+Both flows run one set of stage bodies, :func:`_stages`, written in
+the tick's form. A daily tick passes its lookback span: the T2
+freshness gate has passed, each stage reads a T3 tail window and
+keeps only ``date == end`` before upserting. The backfill is the same
+stages over the full history (T5): with no span, the tail and
+end-date filters keep every row. ``uni_ret`` is pinned in both flows,
+and both run the reference's "No values found" guards.
 """
 
 from __future__ import annotations
@@ -69,45 +73,12 @@ from nt_data_pipelines_spark.pipelines.factor_model import (
     fit_factor_model,
     idio_vol_of,
 )
+from nt_data_pipelines_spark.pipelines.reversal import REVERSAL_WINDOW
 
 _D = T.DoubleType()
 _S = T.StringType()
 _DT = T.DateType()
 _I = T.IntegerType()
-
-
-def _fire_failure_hook(on_failure, exc: BaseException) -> None:
-    """Deliver the flow's exception to the on_failure hook.
-
-    New-style hooks (e.g. summary.create_failure_handler) take the
-    exception and can post type/message/traceback (reference
-    slack_failure_handler.py:11-44 formats exactly that); legacy
-    zero-argument callbacks still work. Hook signature is inspected,
-    not probed by trial call — a TypeError raised INSIDE the hook must
-    surface as a hook bug, not silently retry with no arguments."""
-    if on_failure is None:
-        return
-    import inspect
-
-    try:
-        params = [
-            pr
-            for pr in inspect.signature(on_failure).parameters.values()
-            if pr.kind
-            in (
-                inspect.Parameter.POSITIONAL_ONLY,
-                inspect.Parameter.POSITIONAL_OR_KEYWORD,
-                inspect.Parameter.VAR_POSITIONAL,
-            )
-            and pr.default is inspect.Parameter.empty
-        ]
-        takes_exc = len(params) >= 1
-    except (TypeError, ValueError):  # builtins / C callables
-        takes_exc = False
-    if takes_exc:
-        on_failure(exc)
-    else:
-        on_failure()
 
 
 def _st(*fields: tuple[str, T.DataType]) -> T.StructType:
@@ -220,7 +191,7 @@ GRAPH: dict[str, Stage] = {
     "factor_model": Stage(("stock_returns", "etf_returns"), ("idio_vol", "factor_loadings")),
     "factor_covariances": Stage(("etf_returns",), ("factor_covariances",)),
     "signals": Stage(("stock_returns",), ("signals", "scores")),
-    # uni_ret is pinned in the backfill: both upserts read it
+    # uni_ret is pinned in both flows: the guard and both upserts read it
     "benchmark": Stage(("stock_returns",), ("benchmark_weights", "benchmark_returns")),
     "betas": Stage(("stock_returns", "benchmark_returns"), ("betas",)),
     "alphas": Stage(("scores", "idio_vol"), ("alphas",)),
@@ -313,76 +284,134 @@ def _upsert_portfolio(cat: Catalog, weights: DataFrame) -> None:
         weights.unpersist()
 
 
-def _backfill_stages(
-    cat: Catalog, window: int, half_life: float
-) -> dict[str, Callable[[], None]]:
-    """The full-history body of every :data:`GRAPH` stage."""
+def _require_rows(df: DataFrame, what: str) -> None:
+    """Empty-result guard: the reference's flows raise rather than
+    silently writing nothing (reversal_flow.py:189-190). ``isEmpty``
+    reads only as many partitions as it needs to find one row."""
+    if df.isEmpty():
+        raise ValueError(f"No values found for {what}")
 
+
+class _Span(NamedTuple):
+    """A tick's lookback: ``end`` and, per lookback size n, the first
+    of the last n market dates up to ``end`` (:func:`_lookback`)."""
+
+    end: dt.date | None
+    starts: dict[int, dt.date | None]
+
+
+def _stages(
+    cat: Catalog, window: int, half_life: float, span: _Span | None = None
+) -> dict[str, Callable[[], None]]:
+    """The body of every :data:`GRAPH` stage, written once for both
+    flows. A tick (``span`` set) reads each input over its trailing
+    lookback (``tail``) and upserts only the end date (``at_end``); the
+    backfill (``span=None``) runs the same bodies over the full
+    history, where both helpers return ``df`` unchanged."""
+
+    def tail(df, n_dates: int):
+        if span is None:
+            return df
+        return df.filter(
+            (F.col("date") >= F.lit(span.starts[n_dates])) & (F.col("date") <= F.lit(span.end))
+        )
+
+    def at_end(df):
+        return df if span is None else df.filter(F.col("date") == F.lit(span.end))
+
+    # returns recompute over FULL price history in both flows, like the
+    # reference (returns_flow.py has only a full-replace variant, no
+    # tail) — so a ticker resuming after any gap still gets its
+    # end-date return from the last available close.
     def stock_returns():
-        cat.upsert("stock_returns", compute_returns(cat.table("stock_prices")))
+        cat.upsert("stock_returns", at_end(compute_returns(cat.table("stock_prices"))))
 
     def etf_returns():
-        cat.upsert("etf_returns", compute_returns(cat.table("etf_prices")))
+        cat.upsert("etf_returns", at_end(compute_returns(cat.table("etf_prices"))))
 
     def factor_model():
         # pinned: BOTH upserts read `fit` — unpinned, the fused kernel
         # (the flow's most expensive stage) executes twice
         fit = pin(
             fit_factor_model(
-                cat.table("stock_returns"), cat.table("etf_returns"), FACTORS, window, half_life
+                tail(cat.table("stock_returns"), 2 * window),
+                tail(cat.table("etf_returns"), 2 * window),
+                FACTORS,
+                window,
+                half_life,
             )
         )
-        cat.upsert("idio_vol", idio_vol_of(fit))
-        cat.upsert("factor_loadings", factor_loadings_of(fit, FACTORS))
+        cat.upsert("idio_vol", at_end(idio_vol_of(fit)))
+        cat.upsert("factor_loadings", at_end(factor_loadings_of(fit, FACTORS)))
 
     def factor_covariances():
         cat.upsert(
             "factor_covariances",
-            estimate_factor_covariances(cat.table("etf_returns"), FACTORS, window, half_life),
+            at_end(
+                estimate_factor_covariances(
+                    tail(cat.table("etf_returns"), window), FACTORS, window, half_life
+                )
+            ),
         )
 
     def signals():
-        cat.upsert("signals", calculate_signals(cat.table("stock_returns")))
-        cat.upsert("scores", calculate_scores(cat.table("signals")))
+        # NOTE: the reference's daily reversal flow uses exactly a
+        # 21-date lookback (get_trading_date_range(window=21)), so a
+        # ticker missing one of those dates loses its end-date signal —
+        # faithful zero-slack behavior, same as the reference.
+        signals = at_end(calculate_signals(tail(cat.table("stock_returns"), REVERSAL_WINDOW)))
+        _require_rows(signals, "signals")
+        cat.upsert("signals", signals)
+        cat.upsert("scores", calculate_scores(at_end(cat.table("signals"))))
 
     def benchmark():
-        # pinned: the weights and returns upserts both read uni_ret —
-        # unpinned, the full-panel universe x returns join runs twice
+        # pinned: the guard and both upserts read uni_ret — unpinned,
+        # the universe x returns join runs once for each
         uni_ret = pin(
-            cat.table("universe")
+            at_end(cat.table("universe"))
             .join(
-                cat.table("stock_returns").select("date", "ticker", "return"),
+                at_end(cat.table("stock_returns")).select("date", "ticker", "return"),
                 ["date", "ticker"],
                 "left",
             )
             .filter(F.col("return").isNotNull())
         )
+        _require_rows(uni_ret, "universe returns")
         cat.upsert("benchmark_weights", calculate_benchmark_weights(uni_ret))
         cat.upsert(
             "benchmark_returns",
-            calculate_benchmark_returns(uni_ret, cat.table("benchmark_weights")),
+            calculate_benchmark_returns(uni_ret, at_end(cat.table("benchmark_weights"))),
         )
 
     def betas():
         cat.upsert(
             "betas",
-            estimate_betas(
-                cat.table("stock_returns"), cat.table("benchmark_returns"), window, half_life
+            at_end(
+                estimate_betas(
+                    tail(cat.table("stock_returns"), 2 * window),
+                    tail(cat.table("benchmark_returns"), 2 * window),
+                    window,
+                    half_life,
+                )
             ),
         )
 
     def alphas():
-        cat.upsert("alphas", calculate_alphas(cat.table("scores"), cat.table("idio_vol")))
+        # end-date scores against all of idio_vol
+        cat.upsert(
+            "alphas",
+            at_end(calculate_alphas(at_end(cat.table("scores")), cat.table("idio_vol"))),
+        )
 
     def portfolio():
         _upsert_portfolio(
             cat,
             compute_portfolio_weights(
-                cat.table("alphas"),
-                cat.table("benchmark_weights"),
-                cat.table("factor_loadings"),
-                cat.table("factor_covariances"),
-                cat.table("idio_vol"),
+                at_end(cat.table("alphas")),
+                at_end(cat.table("benchmark_weights")),
+                at_end(cat.table("factor_loadings")),
+                at_end(cat.table("factor_covariances")),
+                at_end(cat.table("idio_vol")),
                 FACTORS,
             ),
         )
@@ -407,29 +436,30 @@ def backfill_flow(
     half_life: float,
     on_failure=None,
 ) -> None:
-    """Run the full DAG from the ingested price/universe tables.
+    """Run the full DAG from the ingested price/universe tables: the
+    tick's stages over the full history (T5).
 
     Expects ``calendar``, ``universe``, ``stock_prices``, ``etf_prices``
     already loaded (the ingestion flows S6-S9 write them). Every stage
-    upserts, so reruns converge (T4).
+    upserts, so reruns converge (T4). ``on_failure(exc)`` is called
+    with any exception before it propagates.
     """
     try:
-        # Empty-result guard — the reference's flows raise rather than
-        # silently writing nothing (reversal_flow.py:189-190).
         for src in ("stock_prices", "etf_prices"):
-            if cat.table(src).limit(1).count() == 0:
-                raise ValueError(f"No values found: {src} is empty")
-        _run_graph(spark, cat, lambda c: _backfill_stages(c, window, half_life))
+            _require_rows(cat.table(src), src)
+        _run_graph(spark, cat, lambda c: _stages(c, window, half_life))
     except Exception as exc:
-        _fire_failure_hook(on_failure, exc)
+        if on_failure is not None:
+            on_failure(exc)
         raise
 
 
-def _lookback(cal: DataFrame, today, sizes: tuple[int, ...]):
-    """``(end, starts)``: the last market date before ``today`` and, per
-    lookback size n, the first of the last n market dates up to
-    ``end`` (all of them when fewer than n exist) — one aggregate.
-    ``end`` and every start are None when no date precedes ``today``.
+def _lookback(cal: DataFrame, today, sizes: tuple[int, ...]) -> _Span:
+    """The :class:`_Span` ending on the last market date before
+    ``today``: per lookback size n, the first of the last n market
+    dates up to ``end`` (all of them when fewer than n exist) — one
+    aggregate. ``end`` and every start are None when no date precedes
+    ``today``.
 
     Lookbacks are windows of COMPLETED market dates: the calendar
     covers today and future schedule dates, and an unbounded last-N
@@ -446,138 +476,7 @@ def _lookback(cal: DataFrame, today, sizes: tuple[int, ...]):
         )
         .first()
     )
-    return row["end"], {n: row[f"s{n}"] for n in sizes}
-
-
-def _daily_stages(
-    cat: Catalog,
-    end,
-    starts: dict,
-    window: int,
-    half_life: float,
-    reversal_window: int,
-) -> dict[str, Callable[[], None]]:
-    """The end-date body of every :data:`GRAPH` stage; ``starts`` maps
-    each lookback size to its first date (:func:`_lookback`)."""
-
-    def tail(df, n_dates: int):
-        return df.filter(
-            (F.col("date") >= F.lit(starts[n_dates])) & (F.col("date") <= F.lit(end))
-        )
-
-    def only_end(df):
-        return df.filter(F.col("date") == F.lit(end))
-
-    # returns recompute over FULL price history, like the reference
-    # (returns_flow.py has only a full-replace variant, no tail) — so
-    # a ticker resuming after any gap still gets its end-date return
-    # from the last available close; only the end date is upserted.
-    def stock_returns():
-        cat.upsert("stock_returns", only_end(compute_returns(cat.table("stock_prices"))))
-
-    def etf_returns():
-        cat.upsert("etf_returns", only_end(compute_returns(cat.table("etf_prices"))))
-
-    def factor_model():
-        # pinned: both tail upserts read `fit` (see backfill)
-        fit = pin(
-            fit_factor_model(
-                tail(cat.table("stock_returns"), 2 * window),
-                tail(cat.table("etf_returns"), 2 * window),
-                FACTORS,
-                window,
-                half_life,
-            )
-        )
-        cat.upsert("idio_vol", only_end(idio_vol_of(fit)))
-        cat.upsert("factor_loadings", only_end(factor_loadings_of(fit, FACTORS)))
-
-    def factor_covariances():
-        cat.upsert(
-            "factor_covariances",
-            only_end(
-                estimate_factor_covariances(
-                    tail(cat.table("etf_returns"), window), FACTORS, window, half_life
-                )
-            ),
-        )
-
-    def signals():
-        # NOTE: the reference's daily reversal flow uses exactly a
-        # 21-date lookback (get_trading_date_range(window=21)), so a
-        # ticker missing one of those dates loses its end-date signal —
-        # faithful zero-slack behavior, same as the reference.
-        signals = only_end(
-            calculate_signals(
-                tail(cat.table("stock_returns"), reversal_window), window=reversal_window
-            )
-        )
-        if signals.limit(1).count() == 0:
-            raise ValueError("No values found: empty daily signals")
-        cat.upsert("signals", signals)
-        cat.upsert("scores", calculate_scores(only_end(cat.table("signals"))))
-
-    def benchmark():
-        uni_ret = (
-            only_end(cat.table("universe"))
-            .join(
-                only_end(cat.table("stock_returns")).select("date", "ticker", "return"),
-                ["date", "ticker"],
-                "left",
-            )
-            .filter(F.col("return").isNotNull())
-        )
-        if uni_ret.limit(1).count() == 0:
-            raise ValueError("No values found: end-date universe returns are empty")
-        cat.upsert("benchmark_weights", calculate_benchmark_weights(uni_ret))
-        cat.upsert(
-            "benchmark_returns",
-            calculate_benchmark_returns(uni_ret, only_end(cat.table("benchmark_weights"))),
-        )
-
-    def betas():
-        cat.upsert(
-            "betas",
-            only_end(
-                estimate_betas(
-                    tail(cat.table("stock_returns"), 2 * window),
-                    tail(cat.table("benchmark_returns"), 2 * window),
-                    window,
-                    half_life,
-                )
-            ),
-        )
-
-    def alphas():
-        cat.upsert(
-            "alphas",
-            only_end(calculate_alphas(only_end(cat.table("scores")), cat.table("idio_vol"))),
-        )
-
-    def portfolio():
-        _upsert_portfolio(
-            cat,
-            compute_portfolio_weights(
-                only_end(cat.table("alphas")),
-                only_end(cat.table("benchmark_weights")),
-                only_end(cat.table("factor_loadings")),
-                only_end(cat.table("factor_covariances")),
-                only_end(cat.table("idio_vol")),
-                FACTORS,
-            ),
-        )
-
-    return {
-        "stock_returns": stock_returns,
-        "etf_returns": etf_returns,
-        "factor_model": factor_model,
-        "factor_covariances": factor_covariances,
-        "signals": signals,
-        "benchmark": benchmark,
-        "betas": betas,
-        "alphas": alphas,
-        "portfolio": portfolio,
-    }
+    return _Span(row["end"], {n: row[f"s{n}"] for n in sizes})
 
 
 def daily_flow(
@@ -586,7 +485,6 @@ def daily_flow(
     today,
     window: int,
     half_life: float,
-    reversal_window: int = 21,
     on_failure=None,
 ) -> bool:
     """The nightly incremental run (reference daily_*_flow semantics).
@@ -596,10 +494,11 @@ def daily_flow(
     the bound is what keeps the gate from closing forever); returns
     whether the flow ran. T3: each stage
     recomputes over its trailing lookback (2xWINDOW for regressions,
-    WINDOW for covariances, 21 for reversal) read through date-range
-    filters — with year-partitioned tables Catalyst prunes the scan to
-    the tail partitions — then keeps only the end date and PK-upserts,
-    so reruns are idempotent (T4).
+    WINDOW for covariances, REVERSAL_WINDOW for reversal) read through
+    date-range filters — with year-partitioned tables Catalyst prunes
+    the scan to the tail partitions — then keeps only the end date and
+    PK-upserts, so reruns are idempotent (T4). ``on_failure(exc)`` is
+    called with any exception before it propagates.
 
     Faithful reference caveat: EWMA-smoothed outputs (loadings,
     idio vol, covariances, betas) are recomputed over the truncated
@@ -611,15 +510,12 @@ def daily_flow(
     try:
         # the gate and the lookback come from one aggregate: end is the
         # last COMPLETED market day, never a future one
-        end, starts = _lookback(cal, today, (2 * window, window, reversal_window))
-        if end != today - dt.timedelta(days=1):
+        span = _lookback(cal, today, (2 * window, window, REVERSAL_WINDOW))
+        if span.end != today - dt.timedelta(days=1):
             return False
-        _run_graph(
-            spark,
-            cat,
-            lambda c: _daily_stages(c, end, starts, window, half_life, reversal_window),
-        )
+        _run_graph(spark, cat, lambda c: _stages(c, window, half_life, span))
         return True
     except Exception as exc:
-        _fire_failure_hook(on_failure, exc)
+        if on_failure is not None:
+            on_failure(exc)
         raise

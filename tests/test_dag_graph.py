@@ -11,6 +11,9 @@
 - determinism: two concurrent backfill + daily runs on identical inputs
   write identical tables, equal to a run of the stages one at a time
   in dependency order;
+- guards: a tick with no end-date universe returns, or with a date
+  missing from the signals' lookback, raises "No values found" and
+  writes nothing downstream;
 - failure: a mid-graph stage error reaches the caller with its
   traceback, fires ``on_failure`` once, starts no later stage and
   leaks no thread;
@@ -32,19 +35,18 @@ from nt_data_pipelines_spark.pipelines import runner
 from nt_data_pipelines_spark.pipelines.runner import (
     GRAPH,
     Stage,
-    _backfill_stages,
-    _daily_stages,
     _lookback,
+    _stages,
     backfill_flow,
     daily_flow,
     ensure_tables,
 )
+from nt_data_pipelines_spark.pipelines.reversal import REVERSAL_WINDOW
 from nt_data_pipelines_spark.sources import synthetic as S
 
 N_DAYS = 100
 WINDOW = 30
 HL = 10.0
-REVERSAL = 21
 INGEST = {"calendar", "universe", "stock_prices", "etf_prices"}
 DERIVED = (
     "stock_returns", "etf_returns", "factor_loadings", "idio_vol",
@@ -117,21 +119,22 @@ def _add_last_day(cat, ingested) -> None:
 
 @pytest.fixture(scope="module")
 def sequential(spark, ingested, tmp_path_factory):
-    """Backfill, the last day's bars, then the daily stages — every
-    stage run alone, in dependency order, through a recorder. Returns
-    the catalog and ``{(flow, stage): recorder}``."""
+    """Backfill, the last day's bars, then a tick — every stage run
+    alone, in dependency order, through a recorder: ``_stages`` with no
+    span, then with the tick's ``_Span``. Returns the catalog and
+    ``{(flow, stage): recorder}``."""
     cat = _copy(spark, ingested, tmp_path_factory.mktemp("dag") / "sequential")
     records = {}
     for name in _topo_order():
         rec = records["backfill", name] = _Recorder(cat)
-        _backfill_stages(rec, WINDOW, HL)[name]()
+        _stages(rec, WINDOW, HL)[name]()
     _add_last_day(cat, ingested)
     today = ingested[1] + dt.timedelta(days=1)
-    end, starts = _lookback(cat.table("calendar"), today, (2 * WINDOW, WINDOW, REVERSAL))
-    assert end == ingested[1]
+    span = _lookback(cat.table("calendar"), today, (2 * WINDOW, WINDOW, REVERSAL_WINDOW))
+    assert span.end == ingested[1]
     for name in _topo_order():
         rec = records["daily", name] = _Recorder(cat)
-        _daily_stages(rec, end, starts, WINDOW, HL, REVERSAL)[name]()
+        _stages(rec, WINDOW, HL, span)[name]()
     return cat, records
 
 
@@ -141,8 +144,7 @@ def test_graph_is_a_dag_over_one_stage_set():
     # every derived table has exactly one writer, and every read has one
     assert sorted(writes) == sorted(DERIVED)
     assert all(set(st.reads) <= set(writes) for st in GRAPH.values())
-    assert set(_backfill_stages(None, WINDOW, HL)) == set(GRAPH)
-    assert set(_daily_stages(None, None, {}, WINDOW, HL, REVERSAL)) == set(GRAPH)
+    assert set(_stages(None, WINDOW, HL)) == set(GRAPH)
 
 
 def test_stage_reads_are_declared_edges(sequential):
@@ -201,6 +203,37 @@ def test_stage_failure_propagates_once_and_joins_threads(
     assert cat._raw_table("portfolio_metrics").count() == 0
     leaked = [t for t in set(threading.enumerate()) - threads_before if t.is_alive()]
     assert leaked == []
+
+
+@pytest.mark.parametrize(
+    "table, back, what",
+    [
+        pytest.param("universe", 1, "universe returns", id="no-end-date-universe"),
+        pytest.param("stock_returns", 10, "signals", id="gap-in-reversal-lookback"),
+    ],
+)
+def test_tick_guards_raise_on_empty_results(
+    spark, ingested, sequential, tmp_path, table, back, what
+):
+    """The reference's "No values found" guards: a tick whose end date
+    has no universe rows, or whose 21-date signals lookback misses a
+    date, raises, fires ``on_failure`` once and writes no end-date
+    portfolio weights. ``back`` picks the deleted date: the first of
+    the last ``back`` market dates up to the end date."""
+    shutil.copytree(sequential[0].root, tmp_path / "lake")
+    cat = Catalog(spark, str(tmp_path / "lake"))
+    end = ingested[1]
+    today = end + dt.timedelta(days=1)
+    gone = _lookback(cat.table("calendar"), today, (back,)).starts[back]
+    for name, day in ((table, gone), ("portfolio_weights", end)):
+        cat.delete_matching(name, spark.createDataFrame([(day,)], "date date"), "date")
+    calls = []
+    with pytest.raises(ValueError, match=f"No values found for {what}") as info:
+        daily_flow(
+            spark, cat, today=today, window=WINDOW, half_life=HL, on_failure=calls.append
+        )
+    assert calls == [info.value]
+    assert cat.table("portfolio_weights").filter(F.col("date") == F.lit(end)).count() == 0
 
 
 def _job_ids(sc, group: str) -> list[int]:

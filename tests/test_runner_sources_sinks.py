@@ -74,12 +74,13 @@ def test_calendar_utils_and_freshness_gate(spark, tmp_path):
 
     def run(today):
         return daily_flow(
-            spark, cat, today, window=5, half_life=2.0, on_failure=lambda: calls.append(today)
+            spark, cat, today, window=5, half_life=2.0,
+            on_failure=lambda exc: calls.append((today, type(exc))),
         )
 
     with pytest.raises(KeyError, match="does not exist"):
         run(last + dt.timedelta(days=1))
-    assert calls == [last + dt.timedelta(days=1)]
+    assert calls == [(last + dt.timedelta(days=1), KeyError)]
     assert run(last + dt.timedelta(days=3)) is False  # gap days: stale calendar
     assert run(dates[0]) is False  # no market date before today: closed, no raise
     assert len(calls) == 1
@@ -135,9 +136,9 @@ def test_failure_hook_fires(spark, tmp_path):
     cat = Catalog(spark, str(tmp_path / "lake2"))
     ensure_tables(cat)  # tables exist but are empty -> pipeline should fail
     calls = []
-    with pytest.raises(Exception):
-        backfill_flow(spark, cat, window=10, half_life=5.0, on_failure=lambda: calls.append(1))
-    assert calls == [1]
+    with pytest.raises(ValueError, match="No values found") as info:
+        backfill_flow(spark, cat, window=10, half_life=5.0, on_failure=calls.append)
+    assert calls == [info.value]
 
 
 def test_failure_hook_receives_exception_and_formats_blocks(spark, tmp_path):
