@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nt_data_pipelines_spark.catalog import Catalog
+from nt_data_pipelines_spark.pipelines.calendar import between, last_market_date, trading_date_range
 
 
 class Engine:
@@ -33,18 +34,6 @@ class Engine:
         self.catalog = catalog
 
     # ---- internals ----
-    def _between(self, df: DataFrame, start: dt.date, end: dt.date) -> DataFrame:
-        out = df.filter(F.col("date").between(F.lit(start), F.lit(end)))
-        if "year" in df.columns:
-            # Catalyst cannot infer year bounds from the date
-            # predicate; stating them explicitly turns the date range
-            # into PartitionFilters on the year-partitioned tables, so
-            # a one-month read touches one year's files, not all of
-            # them — the pruning the reference gets from its hive
-            # layout (stock_prices_flow.py:112).
-            out = out.filter(F.col("year").between(start.year, end.year))
-        return out
-
     def _gated(self, table: str, start: dt.date, end: dt.date) -> DataFrame:
         # Prune BOTH sides before the join, never after: the right
         # table carries a `year` partition column, and a post-join
@@ -56,16 +45,16 @@ class Engine:
         # universe key — and keeps PartitionFilters on both scans.
         # No post-join filter is needed: the joined `date` is the
         # universe's, already range-bound.
-        universe = self._between(self.catalog.table("universe"), start, end).select(
+        universe = between(self.catalog.table("universe"), start, end).select(
             "date", "ticker"
         )
-        right = self._between(self.catalog.table(table), start, end)
+        right = between(self.catalog.table(table), start, end)
         return universe.join(right, ["date", "ticker"], "left")
 
     # ---- accessors (utils/data.py order) ----
     def get_universe(self, start: dt.date, end: dt.date) -> DataFrame:
         return (
-            self._between(self.catalog.table("universe"), start, end)
+            between(self.catalog.table("universe"), start, end)
             .select("date", "ticker")
             .sort("ticker", "date")
         )
@@ -79,14 +68,14 @@ class Engine:
 
     def get_stock_returns(self, start: dt.date, end: dt.date) -> DataFrame:
         return (
-            self._between(self.catalog.table("stock_returns"), start, end)
+            between(self.catalog.table("stock_returns"), start, end)
             .select("date", "ticker", "return")
             .sort("ticker", "date")
         )
 
     def get_etf_returns(self, start: dt.date, end: dt.date) -> DataFrame:
         return (
-            self._between(self.catalog.table("etf_returns"), start, end)
+            between(self.catalog.table("etf_returns"), start, end)
             .select("date", "ticker", "return")
             .sort("ticker", "date")
         )
@@ -107,7 +96,7 @@ class Engine:
         )
 
     def get_benchmark_returns(self, start: dt.date, end: dt.date) -> DataFrame:
-        return self._between(self.catalog.table("benchmark_returns"), start, end)
+        return between(self.catalog.table("benchmark_returns"), start, end)
 
     def get_factor_loadings(self, start: dt.date, end: dt.date) -> DataFrame:
         return (
@@ -119,7 +108,7 @@ class Engine:
 
     def get_factor_covariances(self, start: dt.date, end: dt.date) -> DataFrame:
         return (
-            self._between(self.catalog.table("factor_covariances"), start, end)
+            between(self.catalog.table("factor_covariances"), start, end)
             .select("date", "factor_1", "factor_2", "covariance")
             .sort("date")
         )
@@ -134,7 +123,7 @@ class Engine:
 
     def get_portfolio_weights(self, start: dt.date, end: dt.date) -> DataFrame:
         return (
-            self._between(self.catalog.table("portfolio_weights"), start, end)
+            between(self.catalog.table("portfolio_weights"), start, end)
             .select("date", "ticker", "weight")
             .sort("ticker", "date")
         )
@@ -170,11 +159,7 @@ class Engine:
     # .distinct(), so duplicate calendar rows — e.g. a read between
     # insert and optimize — returned fewer distinct trailing dates).
     def get_last_market_date(self) -> dt.date:
-        from nt_data_pipelines_spark.pipelines.calendar import last_market_date
-
         return last_market_date(self.catalog.table("calendar"))
 
     def get_trading_date_range(self, window: int) -> DataFrame:
-        from nt_data_pipelines_spark.pipelines.calendar import trading_date_range
-
         return trading_date_range(self.catalog.table("calendar"), window)

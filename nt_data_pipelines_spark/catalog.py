@@ -1002,6 +1002,13 @@ class Catalog:
         is computed) or carry it (it is VALIDATED against the
         expression; silently divergent partition columns are how rows
         end up unprunable).
+
+        mode="skip" on an existing table records any ``generated``
+        column it does not declare yet (a lake created before the
+        declaration), after checking the committed rows against the
+        expression as a batch would be: if a row disagrees,
+        ``ValueError`` names the table and the column and nothing is
+        recorded.
         """
         if mode not in ("replace", "skip"):
             raise ValueError(f"mode must be replace|skip, got {mode!r}")
@@ -1023,6 +1030,7 @@ class Catalog:
                 raise ValueError(f"generated column {col!r} not in schema")
         if self.exists(name):
             if mode == "skip":
+                self._declare_generated(name, generated or {})
                 return
             self._delete_all_data(name)
         self._state["tables"][name] = {
@@ -1059,14 +1067,29 @@ class Catalog:
     def _generated(self, name: str) -> dict[str, str]:
         return dict(self._state["tables"][name].get("generated", {}))
 
-    def _apply_generated(self, name: str, df: DataFrame) -> DataFrame:
+    def _declare_generated(self, name: str, generated: dict[str, str]) -> None:
+        """Record the ``generated`` columns an existing table does not
+        declare yet, once its committed rows agree with them."""
+        new = {c: e for c, e in generated.items() if c not in self._generated(name)}
+        if not new:
+            return
+        self._apply_generated(name, self.table(name), new)
+        with self._lock:
+            self._state["tables"][name]["generated"] = {**self._generated(name), **new}
+            self._save()
+
+    def _apply_generated(
+        self, name: str, df: DataFrame, gen: dict[str, str] | None = None
+    ) -> DataFrame:
         """Compute omitted generated columns; validate provided ones.
+        ``gen`` defaults to the table's declared columns.
 
         A provided value that disagrees with its expression is
         rejected whole-batch (same philosophy as constraints: a
         divergent partition column silently lands rows where pruning
         never finds them)."""
-        gen = self._generated(name)
+        if gen is None:
+            gen = self._generated(name)
         if not gen:
             return df
         meta = self._meta(name)
@@ -1078,7 +1101,7 @@ class Catalog:
                 bad = out.filter(~F.col(col).eqNullSafe(derived)).limit(3).collect()
                 if bad:
                     raise ValueError(
-                        f"insert into {name!r} rejected: column {col!r} disagrees "
+                        f"rows of {name!r} rejected: column {col!r} disagrees "
                         f"with its generation expression {expr!r}: e.g. "
                         f"{[tuple(r) for r in bad]}"
                     )

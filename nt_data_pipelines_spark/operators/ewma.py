@@ -197,10 +197,10 @@ def _ewm_grouped(
     df: DataFrame,
     keys: list[str],
     order: list[str],
-    outputs: list[tuple[str, str]],  # (value_col, out_col)
+    value_col: str,
+    out_col: str,
     half_life: float,
     adjust: bool,
-    n_buckets: int | None = None,
     scan_fanout: float | None = None,
 ) -> DataFrame:
     """Shared kernel: EWMA per key group, one grouped map per hash
@@ -218,24 +218,19 @@ def _ewm_grouped(
     The bucket column exists only inside the kernel; ``dropna=False``
     keeps null keys (pandas drops them by default, Spark never does).
     """
-    if n_buckets is not None and n_buckets < 1:
-        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     if scan_fanout is not None and not scan_fanout > 0:
         # 0/negative/NaN would make est_bytes * fanout <= budget hold
         # vacuously, silently disabling the row-growth guard
         raise ValueError(f"scan_fanout must be > 0, got {scan_fanout}")
-    slim = _slim(df, keys, order, [v for v, _ in outputs])
-    out_schema = T.StructType(
-        slim.schema.fields + [T.StructField(o, T.DoubleType()) for _, o in outputs]
+    slim = _slim(df, keys, order, [value_col])
+    out_schema = T.StructType(slim.schema.fields + [T.StructField(out_col, T.DoubleType())])
+    n_buckets = _auto_buckets(
+        _conf_partitions(df),
+        _estimated_bytes(slim),
+        slim.count,
+        grows_rows=_plan_grows_rows(slim),
+        scan_fanout=scan_fanout,
     )
-    if n_buckets is None:
-        n_buckets = _auto_buckets(
-            _conf_partitions(df),
-            _estimated_bytes(slim),
-            slim.count,
-            grows_rows=_plan_grows_rows(slim),
-            scan_fanout=scan_fanout,
-        )
     bucketed = slim.withColumn(
         "__b", F.pmod(F.xxhash64(*keys), F.lit(n_buckets)).cast("int")
     )
@@ -243,15 +238,14 @@ def _ewm_grouped(
     def fit(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values([*keys, *order], kind="mergesort")
         grouped = pdf.groupby(keys, sort=False, dropna=False)
-        for value_col, out_col in outputs:
-            res = ewm_mean_pandas(grouped[value_col], half_life, adjust)
-            # realign by ROW LABEL, not position: groupby.ewm returns a
-            # (keys..., row-label) MultiIndex whose group order is not
-            # guaranteed to match frame order (observed misaligned
-            # inside the Arrow worker with several groups per bucket);
-            # row labels are unique here, so label alignment is exact
-            res.index = res.index.droplevel(list(range(len(keys))))
-            pdf[out_col] = res
+        res = ewm_mean_pandas(grouped[value_col], half_life, adjust)
+        # realign by ROW LABEL, not position: groupby.ewm returns a
+        # (keys..., row-label) MultiIndex whose group order is not
+        # guaranteed to match frame order (observed misaligned inside
+        # the Arrow worker with several groups per bucket); row labels
+        # are unique here, so label alignment is exact
+        res.index = res.index.droplevel(list(range(len(keys))))
+        pdf[out_col] = res
         return pdf.drop(columns=["__b"])
 
     return bucketed.groupBy("__b").applyInPandas(fit, schema=out_schema)
@@ -265,7 +259,6 @@ def ewm_mean(
     half_life: float,
     out_col: str = "ewma",
     adjust: bool = True,
-    n_buckets: int | None = None,
     scan_fanout: float | None = None,
 ) -> DataFrame:
     """EWMA per key group ordered by ``order_by``.
@@ -282,32 +275,5 @@ def ewm_mean(
     """
     keys = _as_list(partition_by)
     order = _as_list(order_by)
-    return _ewm_grouped(
-        df, keys, order, [(value_col, out_col)], half_life, adjust, n_buckets,
-        scan_fanout,
-    )
+    return _ewm_grouped(df, keys, order, value_col, out_col, half_life, adjust, scan_fanout)
 
-
-def ewm_mean_many(
-    df: DataFrame,
-    partition_by: Sequence[str] | str,
-    order_by: Sequence[str] | str,
-    value_cols: Sequence[str],
-    half_life: float,
-    suffix: str = "_ewma",
-    adjust: bool = True,
-    n_buckets: int | None = None,
-    scan_fanout: float | None = None,
-) -> DataFrame:
-    """EWMA several columns in one grouped-map pass (one shuffle total).
-
-    Same slim contract as :func:`ewm_mean`: returns (keys, order,
-    value columns, one ``suffix`` column per value); ``scan_fanout``
-    as in :func:`ewm_mean`.
-    """
-    keys = _as_list(partition_by)
-    order = _as_list(order_by)
-    return _ewm_grouped(
-        df, keys, order, [(c, c + suffix) for c in value_cols], half_life, adjust,
-        n_buckets, scan_fanout,
-    )

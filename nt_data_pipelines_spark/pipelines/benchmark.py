@@ -20,7 +20,6 @@ def calculate_benchmark_weights(universe_returns: DataFrame) -> DataFrame:
         counted.select(
             "ticker",
             "date",
-            F.year("date").cast("int").alias("year"),
             (F.lit(1.0) / F.col("_n")).alias("weight"),
         )
         .sort("ticker", "date")

@@ -53,10 +53,4 @@ def estimate_betas(
         out["predicted_beta"] = ewm_mean_pandas(pd.Series(beta[keep]), half_life).to_numpy()
         return out
 
-    return joined.groupBy("ticker").applyInPandas(fit, schema=schema).select(
-        "ticker",
-        "date",
-        F.year("date").cast("int").alias("year"),
-        "historical_beta",
-        "predicted_beta",
-    )
+    return joined.groupBy("ticker").applyInPandas(fit, schema=schema)

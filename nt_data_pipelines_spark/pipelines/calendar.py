@@ -4,6 +4,7 @@
   utils/calendar.py:8-12)
 - ``trading_date_range``: trailing-N trading dates via desc sort +
   limit (O3, utils/calendar.py:15-19)
+- ``between``: an inclusive date range that prunes year partitions
 
 The daily flows' T2 freshness gate (stock_prices_flow.py:135-144) lives
 in ``runner.daily_flow``, read off the same aggregate as its lookbacks.
@@ -42,3 +43,17 @@ def trading_date_range(calendar: DataFrame, window: int) -> DataFrame:
     """Last ``window`` trading dates (the incremental-slice lookback, T3)."""
     return calendar.select("date").distinct().orderBy(F.desc("date")).limit(window)
 
+
+def between(df: DataFrame, start: dt.date, end: dt.date) -> DataFrame:
+    """Rows with ``start <= date <= end`` (Polars ``is_between``).
+
+    Catalyst cannot infer year bounds from the date predicate; when
+    ``df`` has a ``year`` column, stating them explicitly turns the
+    date range into PartitionFilters on a year-partitioned table, so a
+    one-month read touches one year's files, not all of them — the
+    pruning the reference gets from its hive layout
+    (stock_prices_flow.py:112)."""
+    out = df.filter(F.col("date").between(F.lit(start), F.lit(end)))
+    if "year" in df.columns:
+        out = out.filter(F.col("year").between(start.year, end.year))
+    return out

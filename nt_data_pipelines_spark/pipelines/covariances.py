@@ -29,7 +29,7 @@ def estimate_factor_covariances(
     window: int = WINDOW,
     half_life: float = HALF_LIFE,
 ) -> DataFrame:
-    """-> (date, year, factor_1, factor_2, covariance), EWMA-smoothed."""
+    """-> (date, factor_1, factor_2, covariance), EWMA-smoothed."""
     factors = sorted(factors)
     wide = pivot_factor_returns(etf_returns, factors)
     # BOUNDED partitionless window: `wide` is one row per trading DATE
@@ -78,10 +78,4 @@ def estimate_factor_covariances(
         # the job the tighter bound would spend every time.
         scan_fanout=float(len(factors) * len(factors)),
     )
-    return smoothed.select(
-        "date",
-        F.year("date").cast("int").alias("year"),
-        "factor_1",
-        "factor_2",
-        "covariance",
-    )
+    return smoothed.select("date", "factor_1", "factor_2", "covariance")

@@ -111,9 +111,7 @@ def clean_factor_loadings(
         # joins upstream are 1:1, so this bounds rows-per-scanned-row
         scan_fanout=float(len(factors)),
     )
-    return smoothed.select(
-        "ticker", "date", F.year("date").cast("int").alias("year"), "factor", "loading"
-    )
+    return smoothed.select("ticker", "date", "factor", "loading")
 
 
 def clean_idio_vol(fitted: DataFrame, window: int = WINDOW, half_life: float = HALF_LIFE) -> DataFrame:
@@ -136,9 +134,7 @@ def clean_idio_vol(fitted: DataFrame, window: int = WINDOW, half_life: float = H
         # fitted's lineage joins are 1:1 per (ticker, date)
         scan_fanout=1.0,
     )
-    return smoothed.select(
-        "ticker", "date", F.year("date").cast("int").alias("year"), "idio_vol"
-    )
+    return smoothed.select("ticker", "date", "idio_vol")
 
 
 def fit_factor_model(
@@ -202,7 +198,6 @@ def factor_loadings_of(fit: DataFrame, factors: list[str] = FACTORS) -> DataFram
     return long.select(
         "ticker",
         "date",
-        F.year("date").cast("int").alias("year"),
         F.expr(f"substring(factor, {len(_LOADING) + 1})").alias("factor"),
         "loading",
     )
@@ -210,4 +205,4 @@ def factor_loadings_of(fit: DataFrame, factors: list[str] = FACTORS) -> DataFram
 
 def idio_vol_of(fit: DataFrame) -> DataFrame:
     """The ``idio_vol`` rows of :func:`fit_factor_model`'s output."""
-    return fit.select("ticker", "date", F.year("date").cast("int").alias("year"), "idio_vol")
+    return fit.select("ticker", "date", "idio_vol")

@@ -48,7 +48,6 @@ def calculate_signals(
         .select(
             "ticker",
             "date",
-            F.year("date").cast("int").alias("year"),
             F.lit(signal_name).alias("signal"),
             (F.col("_rsum") * -1).alias("value"),
         )
@@ -58,13 +57,7 @@ def calculate_signals(
 
 def calculate_scores(signals: DataFrame, signal_name: str = SIGNAL_NAME) -> DataFrame:
     scored = zscore(signals, "value", out_col="score", partition_by=None)
-    return scored.select(
-        "ticker",
-        "date",
-        F.year("date").cast("int").alias("year"),
-        F.lit(signal_name).alias("signal"),
-        "score",
-    )
+    return scored.select("ticker", "date", F.lit(signal_name).alias("signal"), "score")
 
 
 def calculate_alphas(
@@ -77,7 +70,6 @@ def calculate_alphas(
         joined.select(
             "ticker",
             "date",
-            F.year("date").cast("int").alias("year"),
             F.lit(signal_name).alias("signal"),
             (F.lit(IC) * F.col("score") * F.col("idio_vol")).alias("alpha"),
         )

@@ -35,10 +35,17 @@ Cron scheduling and failure webhooks are deployment concerns;
 Both flows run one set of stage bodies, :func:`_stages`, written in
 the tick's form. A daily tick passes its lookback span: the T2
 freshness gate has passed, each stage reads a T3 tail window and
-keeps only ``date == end`` before upserting. The backfill is the same
-stages over the full history (T5): with no span, the tail and
-end-date filters keep every row. ``uni_ret`` is pinned in both flows,
-and both run the reference's "No values found" guards.
+keeps only ``date == end`` before upserting. Both reads go through
+``calendar.between``, which bounds ``year`` too, so a tick's scans of
+the year-partitioned tables open only the years its span covers. The
+backfill is the same stages over the full history (T5): with no span,
+the tail and end-date filters keep every row. ``signals`` and
+``uni_ret`` are pinned in both flows, and both run the reference's
+"No values found" guards.
+
+No stage writes ``year``: :func:`ensure_tables` declares it generated
+from ``date`` on every year-partitioned table, and the catalog adds it
+on insert.
 """
 
 from __future__ import annotations
@@ -67,6 +74,7 @@ from nt_data_pipelines_spark.pipelines import (
     compute_returns,
 )
 from nt_data_pipelines_spark.pipelines.betas import estimate_betas
+from nt_data_pipelines_spark.pipelines.calendar import between
 from nt_data_pipelines_spark.pipelines.covariances import estimate_factor_covariances
 from nt_data_pipelines_spark.pipelines.factor_model import (
     factor_loadings_of,
@@ -91,7 +99,11 @@ PRICE_SCHEMA = _st(
 )
 RETURN_SCHEMA = _st(("ticker", _S), ("date", _DT), ("year", _I), ("return", _D))
 
-# Table registry: schema / partition / PK per SURVEY.md §1.2.
+# Table registry: schema / partition / PK per SURVEY.md §1.2. The
+# catalog owns `year`: ensure_tables declares it generated from `date`
+# on every year-partitioned table (on a lake created before, once the
+# committed rows agree), so stages never write it, and a batch that
+# carries it, as the ingest tables' outside input does, is checked.
 TABLES: dict[str, dict] = {
     "calendar": {"schema": _st(("date", _DT)), "partition": None, "pk": ["date"]},
     "universe": {
@@ -165,7 +177,8 @@ def ingest_portfolio_history(spark: SparkSession, cat: Catalog, broker) -> None:
 
 def ensure_tables(cat: Catalog) -> None:
     for name, spec in TABLES.items():
-        cat.create(name, spec["schema"], spec["partition"], spec["pk"], mode="skip")
+        gen = {"year": "year(date)"} if spec["partition"] == ["year"] else None
+        cat.create(name, spec["schema"], spec["partition"], spec["pk"], mode="skip", generated=gen)
 
 
 class Stage(NamedTuple):
@@ -275,10 +288,7 @@ def _upsert_portfolio(cat: Catalog, weights: DataFrame) -> None:
     """The QP's weights and its per-date metrics, from one computation."""
     weights = weights.cache()
     try:
-        cat.upsert(
-            "portfolio_weights",
-            weights.select("ticker", "date", F.year("date").cast("int").alias("year"), "weight"),
-        )
+        cat.upsert("portfolio_weights", weights.select("ticker", "date", "weight"))
         cat.upsert("portfolio_metrics", weights.select("date", "lambda", "active_risk").distinct())
     finally:
         weights.unpersist()
@@ -310,14 +320,10 @@ def _stages(
     history, where both helpers return ``df`` unchanged."""
 
     def tail(df, n_dates: int):
-        if span is None:
-            return df
-        return df.filter(
-            (F.col("date") >= F.lit(span.starts[n_dates])) & (F.col("date") <= F.lit(span.end))
-        )
+        return df if span is None else between(df, span.starts[n_dates], span.end)
 
     def at_end(df):
-        return df if span is None else df.filter(F.col("date") == F.lit(span.end))
+        return df if span is None else between(df, span.end, span.end)
 
     # returns recompute over FULL price history in both flows, like the
     # reference (returns_flow.py has only a full-replace variant, no
@@ -359,7 +365,9 @@ def _stages(
         # 21-date lookback (get_trading_date_range(window=21)), so a
         # ticker missing one of those dates loses its end-date signal —
         # faithful zero-slack behavior, same as the reference.
-        signals = at_end(calculate_signals(tail(cat.table("stock_returns"), REVERSAL_WINDOW)))
+        # pinned: the guard and the upsert read it — unpinned, the
+        # rolling window runs once for each
+        signals = pin(at_end(calculate_signals(tail(cat.table("stock_returns"), REVERSAL_WINDOW))))
         _require_rows(signals, "signals")
         cat.upsert("signals", signals)
         cat.upsert("scores", calculate_scores(at_end(cat.table("signals"))))
@@ -397,10 +405,8 @@ def _stages(
         )
 
     def alphas():
-        # end-date scores against all of idio_vol
         cat.upsert(
-            "alphas",
-            at_end(calculate_alphas(at_end(cat.table("scores")), cat.table("idio_vol"))),
+            "alphas", calculate_alphas(at_end(cat.table("scores")), at_end(cat.table("idio_vol")))
         )
 
     def portfolio():
@@ -495,9 +501,10 @@ def daily_flow(
     whether the flow ran. T3: each stage
     recomputes over its trailing lookback (2xWINDOW for regressions,
     WINDOW for covariances, REVERSAL_WINDOW for reversal) read through
-    date-range filters — with year-partitioned tables Catalyst prunes
-    the scan to the tail partitions — then keeps only the end date and
-    PK-upserts, so reruns are idempotent (T4). ``on_failure(exc)`` is
+    ``calendar.between``, whose explicit ``year`` bound prunes a
+    year-partitioned scan to the years the lookback covers (Catalyst
+    derives no year bound from a date filter), then keeps only the end
+    date and PK-upserts, so reruns are idempotent (T4). ``on_failure(exc)`` is
     called with any exception before it propagates.
 
     Faithful reference caveat: EWMA-smoothed outputs (loadings,

@@ -7,7 +7,7 @@ membership; snapshot per date.
 The input is tiny (~500 tickers, ~few hundred change rows), so like
 the reference this runs the backward walk driver-side and hands the
 snapshots to Spark as (date, [tickers]) rows that ``explode`` into
-the (date, year, ticker) table (SURVEY.md §2.10 U5). The Spark-native
+the (date, ticker) rows of the universe table (SURVEY.md §2.10 U5). The Spark-native
 alternative — turning the change log into validity intervals and
 range-joining the calendar — only pays off when membership data is
 itself large.
@@ -44,7 +44,7 @@ def construct_universe(
     changes: DataFrame,
     calendar: DataFrame,
 ) -> DataFrame:
-    """-> (date, year, ticker) per-date membership snapshots.
+    """-> (date, ticker) per-date membership snapshots.
 
     A change takes effect at the FIRST TRADING DATE at or after its
     effective date — weekend/holiday effective dates (common in the
@@ -91,8 +91,4 @@ def construct_universe(
         ]
     )
     snaps = spark.createDataFrame(snapshots, schema)
-    return (
-        snaps.select("date", F.explode("tickers").alias("ticker"))
-        .select("date", F.year("date").cast("int").alias("year"), "ticker")
-        .sort("date", "ticker")
-    )
+    return snaps.select("date", F.explode("tickers").alias("ticker")).sort("date", "ticker")

@@ -17,12 +17,17 @@
 - failure: a mid-graph stage error reaches the caller with its
   traceback, fires ``on_failure`` once, starts no later stage and
   leaks no thread;
-- job group: every Spark job a flow starts carries the caller's group.
+- job group: every Spark job a flow starts carries the caller's group;
+- ``year``: a fresh lake declares it generated on the 14
+  year-partitioned tables, no stage writes it, and a lake created
+  before the declaration is upgraded by ``ensure_tables`` once its
+  rows agree, and refused otherwise.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import json
 import shutil
 import threading
 import traceback
@@ -83,6 +88,9 @@ class _Recorder:
         return self._cat.table(name)
 
     def upsert(self, name, df):
+        # the catalog derives `year`; a stage that provides it pays a
+        # validation job that re-runs the stage's whole lineage
+        assert "year" not in df.columns, f"{name} batch carries year"
         self.writes.append(name)
         self._cat.upsert(name, df)
 
@@ -234,6 +242,63 @@ def test_tick_guards_raise_on_empty_results(
         )
     assert calls == [info.value]
     assert cat.table("portfolio_weights").filter(F.col("date") == F.lit(end)).count() == 0
+
+
+YEAR_PARTITIONED = (INGEST - {"calendar"}) | (set(DERIVED) - {"benchmark_returns", "portfolio_metrics"})
+
+
+def test_fresh_lake_declares_year_generated(ingested):
+    state = json.loads((ingested[0] / "_catalog.json").read_text())
+    generated = {n: t["generated"] for n, t in state["tables"].items() if "generated" in t}
+    assert len(YEAR_PARTITIONED) == 14
+    assert generated == {n: {"year": "year(date)"} for n in YEAR_PARTITIONED}
+
+
+def _old_lake(spark, ingested, dst) -> Catalog:
+    """A copy of the ingested lake as a version without the ``year``
+    declaration left it: the same tables, rows and layout, and no
+    generated columns in ``_catalog.json``."""
+    shutil.copytree(ingested[0], dst)
+    meta = dst / "_catalog.json"
+    state = json.loads(meta.read_text())
+    for t in state["tables"].values():
+        t.pop("generated", None)
+    meta.write_text(json.dumps(state, indent=2))
+    return Catalog(spark, str(dst))
+
+
+def test_ensure_tables_upgrades_a_lake_without_the_declaration(
+    spark, ingested, sequential, tmp_path
+):
+    """An old lake holding rows gets the declaration from
+    ``ensure_tables`` and then runs both flows; their stages omit
+    ``year``, which the old lake could not resolve. The tables equal
+    those of a lake that had the declaration from the start."""
+    cat = _old_lake(spark, ingested, tmp_path / "lake")
+    ensure_tables(cat)
+    assert all(cat._generated(n) == {"year": "year(date)"} for n in YEAR_PARTITIONED)
+    backfill_flow(spark, cat, window=WINDOW, half_life=HL)
+    _add_last_day(cat, ingested)
+    today = ingested[1] + dt.timedelta(days=1)
+    assert daily_flow(spark, cat, today=today, window=WINDOW, half_life=HL) is True
+    assert _sorted_tables(cat) == _sorted_tables(sequential[0])
+
+
+def test_ensure_tables_refuses_a_lake_whose_year_disagrees(spark, ingested, tmp_path):
+    """One committed row whose ``year`` is not ``year(date)``: nothing
+    is declared and ``_catalog.json`` is unchanged."""
+    cat = _old_lake(spark, ingested, tmp_path / "lake")
+    day = cat.table("universe").first()
+    cat.upsert(
+        "universe",
+        spark.createDataFrame([(day["date"], day["year"] + 1, "T00")], cat.table("universe").schema),
+    )
+    meta = tmp_path / "lake" / "_catalog.json"
+    before = meta.read_bytes()
+    with pytest.raises(ValueError, match=r"'universe'.*'year'"):
+        ensure_tables(cat)
+    assert meta.read_bytes() == before
+    assert Catalog(spark, str(tmp_path / "lake"))._generated("universe") == {}
 
 
 def _job_ids(sc, group: str) -> list[int]:

@@ -12,7 +12,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from nt_data_pipelines_spark.operators.ewma import ewm_mean, ewm_mean_many
+from nt_data_pipelines_spark.operators.ewma import ewm_mean
 from nt_data_pipelines_spark.operators.rolling_ols import _rolling_ols_numpy, rolling_ols
 
 
@@ -84,16 +84,6 @@ def test_ewma_bucketed_groups_never_cross(spark):
         .transform(lambda s: s.ewm(halflife=15, adjust=True).mean())
     )
     np.testing.assert_allclose(got["e"].to_numpy(), want.to_numpy(), rtol=1e-12)
-
-
-def test_ewma_many_single_pass(spark, keyed_pdf):
-    pdf = keyed_pdf.assign(y=keyed_pdf["x"] * 2)
-    got = (
-        ewm_mean_many(spark.createDataFrame(pdf), "k", "t", ["x", "y"], 30.0)
-        .orderBy("k", "t")
-        .toPandas()
-    )
-    np.testing.assert_allclose(got["y_ewma"], 2 * got["x_ewma"], rtol=1e-12)
 
 
 def test_rolling_ols_numpy_matches_lstsq():
@@ -196,27 +186,28 @@ def test_ewma_bucket_count_grows_with_rows():
         prev = b
 
 
-def test_ewma_explicit_n_buckets_skips_count(spark):
-    """Explicit n_buckets gives the same values (bucketing only
-    changes which executor a key's frame lands on, never the math)."""
+def test_ewma_bucket_count_never_changes_values(spark):
+    """The bucket count only changes which executor a key's frame lands
+    on, never the math. ``spark.sql.shuffle.partitions`` is the bucket
+    floor, so two settings give two bucket counts."""
     import pandas as pd
 
     pdf = pd.DataFrame(
         {"k": ["a", "b"] * 40, "t": list(range(40)) * 2, "x": [float(i) for i in range(80)]}
     )
-    base = (
-        ewm_mean(spark.createDataFrame(pdf), "k", "t", "x", 20.0, out_col="e")
-        .orderBy("k", "t")
-        .collect()
-    )
-    forced = (
-        ewm_mean(
-            spark.createDataFrame(pdf), "k", "t", "x", 20.0, out_col="e", n_buckets=7
-        )
-        .orderBy("k", "t")
-        .collect()
-    )
-    assert [r.e for r in base] == [r.e for r in forced]
+    conf = spark.conf.get("spark.sql.shuffle.partitions")
+    got = []
+    try:
+        for partitions in ("4", "7"):
+            spark.conf.set("spark.sql.shuffle.partitions", partitions)
+            got.append(
+                ewm_mean(spark.createDataFrame(pdf), "k", "t", "x", 20.0, out_col="e")
+                .orderBy("k", "t")
+                .collect()
+            )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", conf)
+    assert [r.e for r in got[0]] == [r.e for r in got[1]]
 
 
 def test_ewma_auto_buckets_two_tier():

@@ -139,7 +139,7 @@ def test_fused_factor_model_equals_composed_path(returns):
     t00 = [r[-1] for r in idio if r[0] == "T00"]
     assert len(t00) == N_DAYS - 1
     assert t00[2 * WINDOW - 3] is None and t00[2 * WINDOW - 2] is not None
-    spy = [r[-1] for r in loadings if r[0] == "T00" and r[3] == "SPY"]
+    spy = [r[-1] for r in loadings if r[0] == "T00" and r[2] == "SPY"]
     assert spy[WINDOW - 2] is None and spy[WINDOW - 1] is not None
     assert (hole["ticker"], hole["date"]) in {(r[0], r[1]) for r in idio}
 
@@ -173,10 +173,7 @@ def test_fused_betas_equal_composed_path(data, returns):
     composed = ewm_mean(
         raw, "ticker", "date", "historical_beta", half_life=20, out_col="predicted_beta",
         scan_fanout=1.0,
-    ).select(
-        "ticker", "date", F.year("date").cast("int").alias("year"),
-        "historical_beta", "predicted_beta",
-    )
+    ).select("ticker", "date", "historical_beta", "predicted_beta")
     got = _rows(estimate_betas(stock_ret, bret, window=WINDOW, half_life=20))
     assert got == _rows(composed)
     assert S.SHORT_TICKER not in {r[0] for r in got}
@@ -195,6 +192,49 @@ def test_covariances_symmetric_full_grid(returns):
     ja = {r["date"]: r["covariance"] for r in a.collect()}
     jb = {r["date"]: r["covariance"] for r in b.collect()}
     assert all(ja[d] == pytest.approx(jb[d], rel=1e-12) for d in ja)
+
+
+def test_covariances_match_pandas_rolling_cov(returns):
+    """``estimate_factor_covariances`` equals pandas on the wide returns
+    frame: ``rolling(window).cov()`` pairwise, every date where any
+    pair is null dropped, then ``ewm(halflife, adjust=True).mean()`` per
+    pair. One null in one ETF's returns puts a gap inside the series:
+    every window holding it must be dropped, for every pair."""
+    import pandas as pd
+
+    _, etf_ret = returns
+    hole = etf_ret.filter(F.col("ticker") == "MTUM").orderBy("date").collect()[WINDOW + 30]
+    etf_ret = etf_ret.withColumn(
+        "return",
+        F.when(
+            (F.col("ticker") == "MTUM") & (F.col("date") == F.lit(hole["date"])), None
+        ).otherwise(F.col("return")),
+    )
+    got = {
+        (r["date"], r["factor_1"], r["factor_2"]): r["covariance"]
+        for r in estimate_factor_covariances(etf_ret, FACTORS, WINDOW, half_life=20).collect()
+    }
+
+    factors = sorted(FACTORS)
+    wide = (
+        etf_ret.toPandas()
+        .pivot(index="date", columns="ticker", values="return")
+        .sort_index()[factors]
+    )
+    cov = wide.rolling(WINDOW).cov()  # rows (date, factor_1), columns factor_2
+    cov.index.names = ["date", "factor_1"]
+    pairs = cov.unstack("factor_1").dropna()  # one row per date, one column per pair
+    want = {}
+    for (f2, f1), series in pairs.items():
+        for d, v in series.ewm(halflife=20, adjust=True).mean().items():
+            want[d, f1, f2] = v
+
+    assert sorted(got) == sorted(want)
+    dates = sorted({d for d, _, _ in want})
+    # the null's windows are gone, and dates on both sides of the gap remain
+    assert hole["date"] not in dates and dates[0] < hole["date"] < dates[-1]
+    for k, v in want.items():
+        assert got[k] == pytest.approx(v, rel=1e-9, abs=0.0), k
 
 
 def test_benchmark_equal_weight(data, returns):

@@ -94,6 +94,66 @@ def test_price_scan_prunes_year_partitions(spark, tmp_path):
     assert f"(year" in plan  # non-empty filter, not PartitionFilters: []
 
 
+def _partition_filters(plan: str, table: str) -> list[str]:
+    """The PartitionFilters of every scan of ``table``, ids stripped."""
+    return [
+        re.sub(r"#\d+", "", ln)
+        for block in plan.split("\n\n")
+        if re.search(rf"Location: .*/{table}\]", block)
+        for ln in block.splitlines()
+        if ln.startswith("PartitionFilters")
+    ]
+
+
+def test_tick_reads_prune_year_partitions(spark, tmp_path):
+    """A tick's lookback (``tail``) and end-date (``at_end``) reads of a
+    year-partitioned table carry year PartitionFilters, like the
+    Engine's ranged reads: Catalyst derives none from the date filter,
+    so without them every year's files are opened."""
+    import datetime as dt
+
+    from nt_data_pipelines_spark.catalog import Catalog
+    from nt_data_pipelines_spark.pipelines.reversal import REVERSAL_WINDOW
+    from nt_data_pipelines_spark.pipelines.runner import _Span, _stages, ensure_tables
+
+    cat = Catalog(spark, str(tmp_path / "lake"))
+    ensure_tables(cat)
+    days = [dt.date(y, 6, 1) for y in (2020, 2021, 2022)]
+    for name, cols in (
+        ("stock_returns", "ticker string, date date, return double"),
+        ("scores", "ticker string, date date, signal string, score double"),
+        ("idio_vol", "ticker string, date date, idio_vol double"),
+    ):
+        width = len(cols.split(",")) - 2
+        rows = [("T00", d, *(["reversal", 1.0] if width == 2 else [1.0])) for d in days]
+        cat.upsert(name, spark.createDataFrame(rows, cols))
+    end, window = dt.date(2022, 3, 1), 30
+    start = dt.date(2021, 11, 15)  # the tick's lookback starts in the year before
+    span = _Span(end, {n: start for n in (2 * window, window, REVERSAL_WINDOW)})
+    plans_by_table = {}
+
+    class Capture:
+        def table(self, name):
+            return cat.table(name)
+
+        def upsert(self, name, df):
+            plans_by_table[name] = spark._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
+
+    stages = _stages(Capture(), window, 10.0, span)
+    stages["betas"]()  # tail(stock_returns)
+    stages["alphas"]()  # at_end(scores), at_end(idio_vol)
+    bounds = {
+        ("betas", "stock_returns"): "(year >= 2021), (year <= 2022)",
+        ("alphas", "scores"): "(year >= 2022), (year <= 2022)",
+        ("alphas", "idio_vol"): "(year >= 2022), (year <= 2022)",
+    }
+    for (written, read), bound in bounds.items():
+        filters = _partition_filters(plans_by_table[written], read)
+        assert filters and all(bound in f for f in filters), (written, read, filters)
+
+
 def test_sessionize_single_shuffle(spark):
     # window (lag + cumsum) and the per-session groupBy share the
     # user-key hash partitioning: exactly one exchange end-to-end

@@ -16,10 +16,14 @@ from nt_data_pipelines_spark.sources import synthetic as S
 N_DAYS = 60
 
 
-def test_universe_reconstruction_roundtrip(spark):
+def test_universe_reconstruction_roundtrip(spark, tmp_path):
     """Walking the change log backwards from final membership must
     reproduce the synthetic per-date universe (ignoring the short
-    ticker's price-driven absence, which is not membership)."""
+    ticker's price-driven absence, which is not membership). Committed
+    to the ``universe`` table, the rows get ``year`` from their date."""
+    from nt_data_pipelines_spark.catalog import Catalog
+    from nt_data_pipelines_spark.pipelines.runner import ensure_tables
+
     calendar = S.load_calendar(spark, N_DAYS)
     changes = S.load_constituent_changes(spark, N_DAYS)
     final_members = [
@@ -35,7 +39,12 @@ def test_universe_reconstruction_roundtrip(spark):
     after_set = {r["ticker"] for r in after.collect()}
     assert S.EXIT_TICKER in before_set and S.EXIT_TICKER not in after_set
     assert S.ENTER_TICKER not in before_set and S.ENTER_TICKER in after_set
-    assert got.filter(F.col("year") != F.year("date")).count() == 0
+    cat = Catalog(spark, str(tmp_path / "lake"))
+    ensure_tables(cat)
+    cat.upsert("universe", got)
+    committed = cat.table("universe")
+    assert committed.count() == got.count()
+    assert committed.filter(~F.col("year").eqNullSafe(F.year("date"))).count() == 0
 
 
 def test_trading_daily_flow_end_to_end(spark, tmp_path):
