@@ -37,7 +37,9 @@ stays in a driver-local JSON sidecar standing in for a metastore.
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import os
 import re
 import threading
@@ -1431,12 +1433,18 @@ class Catalog:
     # upsert empty-base fast path: only read footers for emptiness
     # when the committed bytes could plausibly be zero rows
     _EMPTY_PROBE_MAX_BYTES = 1 << 20
+    # read_arrow serves a read on the driver only when the parquet
+    # files it opens hold at most this many bytes (docs/SCALE.md,
+    # "Read serving")
+    _ARROW_READ_MAX_BYTES = 1 << 20
 
     def _list_parquet_recursive(self, fs, p) -> list[tuple[str, int]]:
-        """(path, length) for every parquet data file under ``p``,
-        recursively — hive partition subdirs included. The one parquet
-        walker: the upsert fast path, rename-mode ``data_files`` and
-        filelist batch listing all use it.
+        """(path, length) for every committed parquet data file under
+        ``p``, recursively — hive partition subdirs included, hidden
+        dirs (:meth:`_hidden`) skipped as Spark's file index skips
+        them. The one parquet walker: the upsert fast path, rename-mode
+        ``data_files``, :meth:`read_arrow` and filelist batch listing
+        all use it.
 
         Local roots walk the OS directly: the Hadoop RemoteIterator
         costs one py4j round-trip per file (~1-2 ms each), which turns
@@ -1445,9 +1453,10 @@ class Catalog:
         branch existed."""
         out: list[tuple[str, int]] = []
         pstr = p.toString()
-        local = pstr[5:] if pstr.startswith("file:") else pstr
-        if "://" not in pstr or pstr.startswith("file:"):
-            for dirpath, _dirs, files in os.walk(local):
+        local = self._local_path(pstr)
+        if local is not None:
+            for dirpath, dirs, files in os.walk(local):
+                dirs[:] = [d for d in dirs if not self._hidden(d)]
                 for base in files:
                     if base.endswith(".parquet") and not base.startswith(("_", ".")):
                         full = os.path.join(dirpath, base)
@@ -1457,14 +1466,37 @@ class Catalog:
                             continue  # racing delete: same as FS skip
                         out.append((full, ln))
             return out
+        prefix = fs.makeQualified(p).toString().rstrip("/") + "/"
         it = fs.listFiles(p, True)
         while it.hasNext():
             st = it.next()
             path = st.getPath().toString()
+            dirs = path[len(prefix):].split("/")[:-1] if path.startswith(prefix) else []
             base = os.path.basename(path)
-            if base.endswith(".parquet") and not base.startswith(("_", ".")):
+            if (
+                base.endswith(".parquet")
+                and not base.startswith(("_", "."))
+                and not any(self._hidden(d) for d in dirs)
+            ):
                 out.append((path, st.getLen()))
         return out
+
+    @staticmethod
+    def _hidden(dirname: str) -> bool:
+        """Whether Spark's file index skips a directory: a name starting
+        with ``.``, or with ``_`` unless it is a ``key=value`` partition
+        dir. An in-flight write's ``_temporary/`` attempt dirs and a
+        dynamic overwrite's ``.spark-staging-*`` dir hold uncommitted
+        files, which no listing of committed data may count."""
+        return dirname.startswith(".") or (dirname.startswith("_") and "=" not in dirname)
+
+    @staticmethod
+    def _local_path(path: str) -> str | None:
+        """The OS path of a local path (plain or ``file:``), or None
+        for a remote one (``s3a://``, ``hdfs://``, ...)."""
+        if path.startswith("file:"):
+            return path[5:]
+        return None if "://" in path else path
 
     def _upsert_empty_base_token(self, name: str):
         """An opaque pre-insert state token when the table is provably
@@ -1516,12 +1548,10 @@ class Catalog:
         racing delete, a torn file), falls back to a limit(1) scan."""
         import pyarrow.parquet as pq
 
-        if all("://" not in p or p.startswith("file:") for p in paths):
+        local = [self._local_path(p) for p in paths]
+        if None not in local:
             try:
-                return any(
-                    pq.read_metadata(p[5:] if p.startswith("file:") else p).num_rows
-                    for p in paths
-                )
+                return any(pq.read_metadata(p).num_rows for p in local)
             except (OSError, ValueError):
                 pass  # Spark's scan decides
         return bool(self._raw_table(name).limit(1).count())
@@ -2022,12 +2052,7 @@ class Catalog:
         if self.commit_mode != "filelist":
             raise ValueError("scan_pruned() requires commit_mode='filelist'")
         meta = self._meta(name)
-        unknown = set(preds) - {f.name for f in meta.struct.fields}
-        if unknown:
-            raise ValueError(
-                f"scan_pruned: unknown columns {sorted(unknown)} on {name!r}"
-            )
-        bounds = {col: self._pred_bounds(spec) for col, spec in preds.items()}
+        bounds = self._checked_bounds("scan_pruned", meta, preds)
 
         def _row_filter(df: DataFrame) -> DataFrame:
             for col, (lo, hi, lo_strict, hi_strict) in bounds.items():
@@ -2038,24 +2063,7 @@ class Catalog:
                     df = df.filter(c < F.lit(hi) if hi_strict else c <= F.lit(hi))
             return df
 
-        _, files, stats = self._fl_current(name)
-        kinds = {f.name: self._col_kind(f.dataType) for f in meta.struct.fields}
-        kept = []
-        for rel in files:
-            st = stats.get(rel)
-            keep = True
-            if st:
-                for col, b in bounds.items():
-                    rng = st.get(col)
-                    if (
-                        rng
-                        and rng[0] is not None
-                        and not self._range_overlaps(rng, b, kinds[col])
-                    ):
-                        keep = False
-                        break
-            if keep:
-                kept.append(self._fl_abs(rel))
+        kept = [self._fl_abs(rel) for rel in self._fl_pruned(name, meta, bounds)]
         schema = self._with_ingest(meta.struct)
         base = (
             self.spark.read.schema(schema).parquet(*kept)
@@ -2063,6 +2071,103 @@ class Catalog:
             else self.spark.createDataFrame([], schema)
         )
         return _row_filter(base).select(*[f.name for f in meta.struct.fields])
+
+    def _checked_bounds(self, op: str, meta: TableMeta, preds: dict, columns=()) -> dict:
+        """``preds`` normalized by :meth:`_pred_bounds`; ValueError if
+        a predicate or a requested column is not in the schema."""
+        unknown = (set(preds) | set(columns)) - {f.name for f in meta.struct.fields}
+        if unknown:
+            raise ValueError(f"{op}: unknown columns {sorted(unknown)} on {meta.name!r}")
+        return {col: self._pred_bounds(spec) for col, spec in preds.items()}
+
+    def _fl_pruned(self, name: str, meta: TableMeta, bounds: dict) -> list[str]:
+        """The current snapshot's files (root-relative) whose manifest
+        stats can hold a row matching ``bounds``; a file without stats
+        for a column is kept."""
+        _, files, stats = self._fl_current(name)
+        kinds = {f.name: self._col_kind(f.dataType) for f in meta.struct.fields}
+
+        def may_match(rel: str) -> bool:
+            st = stats.get(rel) or {}
+            for col, b in bounds.items():
+                rng = st.get(col)
+                if rng and rng[0] is not None and not self._range_overlaps(rng, b, kinds[col]):
+                    return False
+            return True
+
+        return [rel for rel in files if may_match(rel)]
+
+    def read_arrow(self, name: str, columns: list[str], **preds):
+        """``columns`` of the current snapshot's rows matching ``preds``
+        (the :meth:`scan_pruned` forms), read on the driver with
+        ``pyarrow.dataset`` into a ``pyarrow.Table`` — no Spark job.
+
+        None when the read is not eligible, and a Spark scan should
+        serve it: the root is remote, a rename-mode table dir is
+        missing, the files the read opens hold more than
+        ``_ARROW_READ_MAX_BYTES`` of parquet, or a file vanished
+        between listing and reading (a racing rewrite).
+
+        The rows and types are those of
+        ``table(name).filter(preds).select(columns)``: the declared
+        schema is the read schema, so a column added by
+        :meth:`add_column` reads null in older files and
+        ``_ingest_seq`` is never read. Rename mode reads the committed
+        files of the hive layout, typing the ``key=value`` partition
+        columns by the declared schema, and skips the partitions the
+        predicates rule out without opening their files. Filelist mode
+        reads the current manifest's files, skipped by their stats as
+        in :meth:`scan_pruned`.
+        """
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        if self._local_path(self.root) is None:
+            return None  # decided before any file system call
+        meta = self._meta(name)
+        bounds = self._checked_bounds("read_arrow", meta, preds, columns)
+        schema = to_arrow_schema(meta.struct)
+        terms = []
+        for col, (lo, hi, lo_strict, hi_strict) in bounds.items():
+            f, t = ds.field(col), schema.field(col).type
+            if lo is not None:
+                terms.append(f > pa.scalar(lo, t) if lo_strict else f >= pa.scalar(lo, t))
+            if hi is not None:
+                terms.append(f < pa.scalar(hi, t) if hi_strict else f <= pa.scalar(hi, t))
+        cond = functools.reduce(operator.and_, terms) if terms else None
+        self._recover(name)
+        partitioning = base = None
+        if self.commit_mode == "filelist":
+            paths = [self._fl_abs(rel) for rel in self._fl_pruned(name, meta, bounds)]
+        else:
+            fs, p = self._hfs(self._path(name))
+            if not fs.exists(p):
+                return None  # a missing table dir is Spark's error to raise
+            paths = [path for path, _ in self._list_parquet_recursive(fs, p)]
+            if meta.partition_keys:
+                partitioning = ds.partitioning(
+                    pa.schema([schema.field(k) for k in meta.partition_keys]), flavor="hive"
+                )
+                base = self._local_path(self._path(name))
+        try:
+            dataset = ds.dataset(
+                [self._local_path(path) for path in paths],
+                schema=schema,
+                format="parquet",
+                partitioning=partitioning,
+                partition_base_dir=base,
+            )
+            # partition pruning: only the fragments whose hive values
+            # can satisfy ``cond`` are kept, none of the others opened
+            fragments = list(dataset.get_fragments(filter=cond))
+            if sum(os.path.getsize(fr.path) for fr in fragments) > self._ARROW_READ_MAX_BYTES:
+                return None
+            return ds.FileSystemDataset(
+                fragments, schema, dataset.format, dataset.filesystem
+            ).to_table(columns=list(columns), filter=cond)
+        except OSError:
+            return None  # a file vanished mid-read: Spark's scan decides
 
     # ---- operational maintenance ----
     def data_files(self, name: str) -> list[tuple[str, int]]:

@@ -16,14 +16,7 @@ from nt_data_pipelines_spark.operators.windows import partition_count
 
 def calculate_benchmark_weights(universe_returns: DataFrame) -> DataFrame:
     counted = partition_count(universe_returns, "date", out_col="_n")
-    return (
-        counted.select(
-            "ticker",
-            "date",
-            (F.lit(1.0) / F.col("_n")).alias("weight"),
-        )
-        .sort("ticker", "date")
-    )
+    return counted.select("ticker", "date", (F.lit(1.0) / F.col("_n")).alias("weight"))
 
 
 def calculate_benchmark_returns(
@@ -32,8 +25,4 @@ def calculate_benchmark_returns(
     joined = benchmark_weights.join(
         universe_returns.select("date", "ticker", "return"), ["date", "ticker"], "left"
     )
-    return (
-        joined.groupBy("date")
-        .agg(F.sum(F.col("return") * F.col("weight")).alias("return"))
-        .sort("date")
-    )
+    return joined.groupBy("date").agg(F.sum(F.col("return") * F.col("weight")).alias("return"))

@@ -16,4 +16,4 @@ from nt_data_pipelines_spark.operators.windows import pct_change
 def compute_returns(prices: DataFrame) -> DataFrame:
     """(ticker, date, ...) close prices -> (ticker, date, return)."""
     ret = pct_change(prices, "ticker", "date", "close", out_col="return", drop_null=True)
-    return ret.select("ticker", "date", "return").sort("ticker", "date")
+    return ret.select("ticker", "date", "return")

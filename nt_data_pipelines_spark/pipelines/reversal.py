@@ -43,15 +43,11 @@ def calculate_signals(
         window,
         out_col="_rsum",
     )
-    return (
-        sig.filter(F.col("_rsum").isNotNull())
-        .select(
-            "ticker",
-            "date",
-            F.lit(signal_name).alias("signal"),
-            (F.col("_rsum") * -1).alias("value"),
-        )
-        .sort("ticker", "date")
+    return sig.filter(F.col("_rsum").isNotNull()).select(
+        "ticker",
+        "date",
+        F.lit(signal_name).alias("signal"),
+        (F.col("_rsum") * -1).alias("value"),
     )
 
 
@@ -66,12 +62,9 @@ def calculate_alphas(
     joined = scores.join(
         idio_vol.select("ticker", "date", "idio_vol"), ["ticker", "date"], "left"
     )
-    return (
-        joined.select(
-            "ticker",
-            "date",
-            F.lit(signal_name).alias("signal"),
-            (F.lit(IC) * F.col("score") * F.col("idio_vol")).alias("alpha"),
-        )
-        .sort("ticker", "date")
+    return joined.select(
+        "ticker",
+        "date",
+        F.lit(signal_name).alias("signal"),
+        (F.lit(IC) * F.col("score") * F.col("idio_vol")).alias("alpha"),
     )

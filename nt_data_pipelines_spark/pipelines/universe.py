@@ -91,4 +91,4 @@ def construct_universe(
         ]
     )
     snaps = spark.createDataFrame(snapshots, schema)
-    return snaps.select("date", F.explode("tickers").alias("ticker")).sort("date", "ticker")
+    return snaps.select("date", F.explode("tickers").alias("ticker"))

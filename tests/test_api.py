@@ -3,11 +3,12 @@
 from __future__ import annotations
 
 import datetime as dt
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
-from nt_data_pipelines_spark.api import Engine
+from nt_data_pipelines_spark.api import READS, Engine
 from nt_data_pipelines_spark.catalog import Catalog
 from nt_data_pipelines_spark.pipelines.runner import backfill_flow, ensure_tables
 from nt_data_pipelines_spark.sources import synthetic as S
@@ -129,3 +130,54 @@ def test_calendar_accessors(engine, span):
     rng = engine.get_trading_date_range(21)
     assert rng.count() == 21
     assert rng.agg(F.max("date")).first()[0] == end
+
+
+def test_sql_resolves_only_the_tables_it_names(engine, monkeypatch):
+    """``Engine.sql`` registers the catalog tables its query names,
+    matched case-insensitively, and no other."""
+    cat = engine.catalog
+    resolved = []
+    table = cat.table
+
+    def spy(name):
+        resolved.append(name)
+        return table(name)
+
+    monkeypatch.setattr(cat, "table", spy)
+    got = engine.sql("SELECT COUNT(*) AS n FROM STOCK_PRICES").first()["n"]
+    assert resolved == ["stock_prices"]
+    assert got == table("stock_prices").count()
+
+
+def canon(table) -> Counter:
+    """A result's rows as a multiset; NaN made equal to itself."""
+    return Counter(
+        tuple("NaN" if isinstance(v, float) and v != v else v for v in row.values())
+        for row in table.to_pylist()
+    )
+
+
+def assert_sorted(table, keys) -> None:
+    rows = list(zip(*(table[k].to_pylist() for k in keys)))
+    assert rows == sorted(rows)
+
+
+@pytest.mark.parametrize("accessor", sorted(READS))
+def test_arrow_path_equals_spark_path(engine, span, accessor):
+    """Every range accessor, one window per band (1-10, 11-63 and
+    64-252 trading days): the Arrow read equals the Spark plan in rows
+    (as a multiset, nulls and NaN included) and in ``toArrow()``
+    schema, and comes back sorted by the accessor's keys."""
+    spec = READS[accessor]
+    cal = sorted(r["date"] for r in engine.catalog.table("calendar").collect())
+    windows = [cal[-7:], cal[70:110], cal[10:140]]
+    for days in windows:
+        start, end = days[0], days[-1]
+        arrow = engine._arrow_read(spec, start, end)
+        assert arrow is not None  # a small local read is served from Arrow
+        served = getattr(engine, accessor)(start, end).toArrow()
+        oracle = engine._spark_read(spec, start, end).toArrow()
+        assert served.schema == oracle.schema
+        assert canon(served) == canon(oracle) == canon(arrow)
+        assert_sorted(served, spec.keys)
+    assert oracle.num_rows > 0

@@ -68,10 +68,13 @@ def test_price_scan_prunes_year_partitions(spark, tmp_path):
     hive layout); the Engine adds explicit year bounds because
     Catalyst cannot derive them from the date predicate. At 100x data
     this is the difference between scanning one year and every year.
+    The plan is the Spark path's: a small local read is served from
+    Arrow and plans no scan at all (its pruning is tested in
+    tests/test_read_serving.py).
     """
     import datetime as dt
 
-    from nt_data_pipelines_spark.api import Engine
+    from nt_data_pipelines_spark.api import READS, Engine
     from nt_data_pipelines_spark.catalog import Catalog
     from nt_data_pipelines_spark.pipelines.runner import ensure_tables
     from nt_data_pipelines_spark.sources import synthetic as S
@@ -85,7 +88,7 @@ def test_price_scan_prunes_year_partitions(spark, tmp_path):
     )
     assert len(years) >= 2  # the fixture must actually span years
     lo = dt.date(years[-1], 1, 5)
-    df = Engine(cat).get_prices(lo, lo + dt.timedelta(days=30))
+    df = Engine(cat)._spark_read(READS["get_prices"], lo, lo + dt.timedelta(days=30))
     plan = spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
     scan_lines = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
     # both scans (prices + universe) carry year partition filters
